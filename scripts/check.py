@@ -3,13 +3,16 @@
 then execute each oracle SQL in DuckDB over the same parquet tables
 and compare (columns sorted by name, rows sorted, exact + tolerant
 value compare). Usage: check.py [sfdir] [outdir] [only_query...]"""
-import glob, json, math, subprocess, sys
+import glob, json, math, os, subprocess, sys
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 ONLY = set(a for a in sys.argv[3:] if not a.startswith("--"))
 
-CP = "/root/repo/target/scala-2.13/classes:" + ":".join(
+# the classes of the checkout this script lives in, never another one
+CLASSES = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "target", "scala-2.13", "classes")
+CP = CLASSES + ":" + ":".join(
     glob.glob("/opt/spark/jars/*.jar"))
 OPENS = [x for p in [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -22,6 +25,9 @@ OPENS = [x for p in [
 
 
 def run_verify():
+    if not os.path.isdir(CLASSES):
+        sys.exit(f"no compiled classes at {CLASSES}: run `sbt compile` "
+                 "in this checkout first")
     cmd = ["java"] + OPENS + [
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         "-Xmx8g", "-cp", CP, "graft.Verify", SF, OUT] + sorted(ONLY)

@@ -5,12 +5,13 @@ package graft
   * flagship ops). For plan iteration during development — the graded
   * benchmark remains graft.Bench.
   *
-  * Every timed run is preceded by `spark.catalog.clearCache()` so an
-  * operator-internal `.cache()` cannot carry pass-1 work into pass 2+
-  * — the round-10 lesson: warm min-of-3 numbers systematically
-  * flattered cache-heavy plans vs the driver's cold interleaved
-  * bench. The first (codegen-warm-up) run is reported as `first=`
-  * for a cold-JVM-ish upper bound. */
+  * Every run, the warm-up included, is preceded by
+  * `spark.catalog.clearCache()` so an operator-internal `.cache()`
+  * (this query's or the previous one's) cannot carry earlier work
+  * into a timed run — the round-10 lesson: warm min-of-3 numbers
+  * systematically flattered cache-heavy plans vs the driver's cold
+  * interleaved bench. The first (codegen-warm-up) run is reported as
+  * `first=` for a cold-JVM-ish upper bound. */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,6 +20,8 @@ object BenchOne {
     spark.conf.set("spark.sql.adaptive.enabled", true)
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
+      // the previous query's operator caches would flatter first=
+      spark.catalog.clearCache()
       val t00 = System.nanoTime()
       fn(spark, sfDir).count() // warm-up: codegen + file listing
       val first = (System.nanoTime() - t00) / 1e9

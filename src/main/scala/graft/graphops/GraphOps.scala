@@ -196,12 +196,15 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
       .distinct()
-    // src = dst, or a null endpoint (the =!= comparison yields
-    // null): symmetrized verbatim — least/greatest would corrupt a
-    // (null, x) row into (x, x). Tiny by construction; its own
-    // distinct keeps the output set-identical to the old form
-    // (which kept BOTH orientations of a null-endpoint row).
-    val rest = base.filter(!(col("src") =!= col("dst")))
+    // src = dst, or a null endpoint: symmetrized verbatim —
+    // least/greatest would corrupt a (null, x) row into (x, x). The
+    // null test must be explicit: for a null endpoint both `=!=` and
+    // its negation are null, so the row would fail this filter AND
+    // `proper`'s and vanish. Tiny by construction; its own distinct
+    // keeps the output set-identical to the old form (which kept
+    // BOTH orientations of a null-endpoint row).
+    val rest = base.filter(col("src").isNull || col("dst").isNull ||
+      col("src") === col("dst"))
     proper
       .union(proper.select(col("dst").as("src"), col("src").as("dst")))
       .union(rest

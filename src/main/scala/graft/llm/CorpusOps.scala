@@ -19,13 +19,8 @@ object CorpusOps {
   /** Multiplicity-preserving word bigrams (unlike
     * [[TextFunctions.wordNgrams]], which distincts per doc) — DSIR
     * counts features with repetition. */
-  private def rawBigrams(text: Column): Column = {
-    val ts = TextFunctions.tokens(lower(text))
-    when(size(ts) >= 2,
-      transform(sequence(lit(1), size(ts) - 1),
-        i => array_join(slice(ts, i, lit(2)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
+  private def rawBigrams(text: Column): Column =
+    graft.sqlext.WordShingles.word_ngrams(lower(text), 2, distinct = false)
 
   /** Temperature-scaled domain resampling — the data-mixing
     * primitive of large-LM training recipes (sampling mass ∝ n_k^α,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.sqlext.WordShingles
 
 /** Deduplication operators for training-data pipelines (north-star
   * extras per BASELINE.json). Every variant is a pure
@@ -46,23 +47,13 @@ object Dedup {
     * (ASCII-hex compared lexicographically) so signatures are
     * engine-portable and deterministic; numHashes independent
     * permutations are simulated by salting. Signature computation is
-    * per-row (map-side only). */
+    * per-row (map-side only). The xxhash64 production twin is the
+    * native [[WordShingles.minhash_sig]] over `lower(text)`. */
   def minhashSignature(text: Column, numHashes: Int,
       shingleSize: Int = 3): Column = {
     val sh = guardedShingles(text, shingleSize)
     array((0 until numHashes).map { seed =>
       array_min(transform(sh, s => md5(concat(s, lit(":" + seed)))))
-    }: _*)
-  }
-
-  /** Production-speed MinHash: xxhash64-based (codegen'd, no hex
-    * strings). Same banding downstream; the md5 variant above exists
-    * for engine-portable oracle verification. */
-  def minhashSignatureFast(text: Column, numHashes: Int,
-      shingleSize: Int = 3): Column = {
-    val sh = guardedShingles(text, shingleSize)
-    array((0 until numHashes).map { seed =>
-      array_min(transform(sh, s => xxhash64(lit(seed), s)))
     }: _*)
   }
 
@@ -403,9 +394,10 @@ object Dedup {
 
   /** Production-speed SELF-join LSH pairs — the codegen twin of the
     * md5-portable [[minhashLshPairs]], with the same banding, cap
-    * and pair semantics but the [[fastBanded]] signature plan
-    * (80× at sf0.1, see SCALE.md round 9). Use this in pipelines;
-    * the md5 variant remains the oracle form. */
+    * and pair semantics but the [[fastBanded]] signature plan (one
+    * native-kernel projection; see SCALE.md, "native word-shingle
+    * kernels"). Use this in pipelines; the md5 variant remains the
+    * oracle form. */
   def minhashLshPairsFast(df: DataFrame, textCol: String,
       idCol: String, numHashes: Int = 12, bands: Int = 4,
       shingleSize: Int = 3, maxBucket: Long = 1000L): DataFrame = {
@@ -421,53 +413,30 @@ object Dedup {
       .distinct()
   }
 
-  /** All-codegen MinHash banding: (id, band, bucket) rows via
-    * posexplode + lead-window shingling + map-side-partial
-    * min(xxhash64) aggregates. See the Scaladoc on
-    * [[minhashLshAgainstFast]] and SCALE.md round 9 for why this
-    * plan shape (and not HOF columns) is the production path. */
+  /** All-codegen MinHash banding: (id, band, bucket) rows from ONE
+    * map-side projection. The native [[WordShingles.minhash_sig]]
+    * kernel tokenizes each lower-cased text once and keeps the
+    * running minimum of xxhash64(j, shingle) per slot j while it
+    * walks the shingles in place — no shingle array is materialized,
+    * nothing shuffles, and the whole stage stays in whole-stage
+    * codegen. Each band then hashes its rowsPerBand slots with
+    * xxhash64. Short docs (< shingleSize tokens) hash the whole
+    * tokenized text as one shingle, matching guardedShingles. Like
+    * the md5 twin [[mhBanded]], every input row gets its own
+    * signature: a repeated (or null) id yields one set of band rows
+    * per row, not one merged signature per id. */
   private def fastBanded(df: DataFrame, textCol: String,
       idCol: String, numHashes: Int, bands: Int,
       shingleSize: Int): DataFrame = {
     val rowsPerBand = numHashes / bands
-    // Signature plan shape matters more than the hash function here
-    // (measured): 12 parallel array_min(transform(...)) columns run
-    // INTERPRETED and re-materialize the shingle array per copy
-    // (~90 s at sf0.1); even one explode over HOF-built shingles
-    // pays ~10 µs of interpreted array_join(slice(...)) per shingle
-    // (~53 s at organic 10×). The all-codegen shape: posexplode the
-    // tokens, build each shingle with lead() windows + concat_ws
-    // (per-doc partitions — tiny), then numHashes map-side-partial
-    // min(xxhash64) aggregates. Duplicate shingles are harmless
-    // under min(), so no distinct pass. Short docs (< shingleSize
-    // tokens) fall back to the whole text as one shingle, matching
-    // guardedShingles.
-    val toks = TextFunctions.tokens(lower(col(textCol)))
-    val base = df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), toks.as("__tk__"))
-    val w = Window.partitionBy("id").orderBy("__p__")
-    val leadCols = (1 until shingleSize).map(k =>
-      lead(col("__t__"), k).over(w).as(s"__l${k}__"))
-    val longSh = base.filter(size(col("__tk__")) >= shingleSize)
-      .select(col("id"),
-        posexplode(col("__tk__")).as(Seq("__p__", "__t__")))
-      .select((col("id") +: col("__t__") +: leadCols): _*)
-      .filter(col(s"__l${shingleSize - 1}__").isNotNull)
-      .select(col("id"), concat_ws(" ",
-        col("__t__") +: (1 until shingleSize).map(k =>
-          col(s"__l${k}__")): _*).as("__s__"))
-    val shortSh = base.filter(size(col("__tk__")) < shingleSize)
-      .select(col("id"), array_join(col("__tk__"), " ").as("__s__"))
-    val mins = longSh.union(shortSh)
-      .groupBy("id")
-      .agg(min(xxhash64(lit(0), col("__s__"))).as("h0"),
-        (1 until numHashes).map(seed =>
-          min(xxhash64(lit(seed), col("__s__"))).as(s"h$seed")): _*)
-    mins.select(col("id"), posexplode(array((0 until bands).map {
-      b =>
+    val sig = col("__sig__")
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), WordShingles.minhash_sig(
+        lower(col(textCol)), numHashes, shingleSize).as("__sig__"))
+      .select(col("id"), posexplode(array((0 until bands).map { b =>
         xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(i => col(s"h$i")): _*)
-    }: _*)))
+          .map(i => sig(i)): _*)
+      }: _*)))
       .toDF("id", "band", "bucket")
   }
 
@@ -659,23 +628,21 @@ object Dedup {
     * of consecutive duplicated shingles merge into maximal per-doc
     * spans [start_tok, end_tok] (inclusive, 0-based token indices).
     *
-    * Scale shape: shingle hashing is map-side (one row per token,
-    * bounded fan-out w); first-occurrence is ONE hash shuffle
-    * (min(struct(doc,pos)) aggregate); the mark-back join is 1:1 per
-    * shingle instance so hot shingles cannot blow up output; span
-    * merging is a per-doc window (partitioned by doc_id, never
-    * global). Returns (doc_id, start_tok, end_tok, n_shingles);
+    * Scale shape: shingle hashing is map-side (one row per token:
+    * the native [[WordShingles.word_ngrams]] kernel emits the
+    * positional w-token windows, md5 hashes each); first-occurrence
+    * is ONE hash shuffle (min(struct(doc,pos)) aggregate); the
+    * mark-back join is 1:1 per shingle instance so hot shingles
+    * cannot blow up output; span merging is a per-doc window
+    * (partitioned by doc_id, never global). Returns (doc_id, start_tok, end_tok, n_shingles);
     * callers drop or clip the spans from the text. */
   def duplicateSpans(docs: DataFrame, textCol: String, idCol: String,
       w: Int = 8): DataFrame = {
     require(w >= 2, "duplicateSpans needs w >= 2")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      TextFunctions.tokens(lower(col(textCol))).as("tk"))
-    val sh = toks.filter(size(col("tk")) >= w)
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(col("tk")) - (w - 1)),
-          i => md5(array_join(slice(col("tk"), i, lit(w)), " ")))))
-      .toDF("doc_id", "pos", "h")
+    val sh = docs.select(col(idCol).as("doc_id"),
+        posexplode(WordShingles.word_ngrams(lower(col(textCol)), w,
+          distinct = false)).as(Seq("pos", "g")))
+      .select(col("doc_id"), col("pos"), md5(col("g")).as("h"))
     // first-occurrence filter as ONE unordered window over the hash
     // partition instead of aggregate + self-join: the agg's partial
     // exchange and the join's full exchange carried the shingle

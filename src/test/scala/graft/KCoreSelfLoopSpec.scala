@@ -79,4 +79,22 @@ class KCoreSelfLoopSpec extends SparkSpecBase {
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1 else r.getInt(1)))
     bfs shouldBe Array((1L, 0), (2L, -1), (3L, -1))
   }
+
+  test("connectedComponents and bfsDistances keep BOTH orientations " +
+      "of a null-endpoint edge") {
+    // (null, 4): the old union-then-distinct symmetrize kept (null,4)
+    // and (4,null), so vertex 4 and a null-id vertex both appear
+    val g = Seq((Option(1L), Option(1L)), (Option(2L), Option(3L)),
+      (None, Option(4L))).toDF("src", "dst")
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Any] =
+      if (r.isNullAt(i)) None else Some(r.get(i))
+    val cc = GraphOps.connectedComponents(g).collect()
+      .map(r => (opt(r, 0), opt(r, 1))).toSet
+    cc shouldBe Set((Some(1L), Some(1L)), (Some(2L), Some(2L)),
+      (Some(3L), Some(2L)), (Some(4L), Some(4L)), (None, None))
+    val bfs = GraphOps.bfsDistances(g, Seq(1L)).collect()
+      .map(r => (opt(r, 0), opt(r, 1))).toSet
+    bfs shouldBe Set((Some(1L), Some(0)), (Some(2L), None),
+      (Some(3L), None), (Some(4L), None), (None, None))
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.llm.{Dedup, DedupPipeline, Similarity}
+import graft.sqlext.WordShingles
 
 /** Dedup / similarity / text-analysis operators (north-star extras). */
 class LlmOpsSpec extends SparkSpecBase {
@@ -82,7 +83,7 @@ class LlmOpsSpec extends SparkSpecBase {
 
   test("fast minhash signature: identical texts identical, stable length") {
     val sig = docs.select($"id",
-      Dedup.minhashSignatureFast($"text", 12).as("sig"))
+      WordShingles.minhash_sig(lower($"text"), 12, 3).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     sig(1L) shouldBe sig(2L)
     sig(1L).length shouldBe 12
