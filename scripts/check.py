@@ -2,12 +2,17 @@
 """Local mimic of the driver's correctness gate: run graft.Verify,
 then execute each oracle SQL in DuckDB over the same parquet tables
 and compare (columns sorted by name, rows sorted, exact + tolerant
-value compare). Usage: check.py [sfdir] [outdir] [only_query...]"""
+value compare). Usage: check.py [sfdir] [outdir] [only_query...]
+[--conf=key=value...]; each --conf becomes a -Dkey=value Spark setting
+of the Verify JVM, e.g. --conf=spark.sql.autoBroadcastJoinThreshold=-1
+runs the graph and k-means queries on their distributed strategy."""
 import glob, json, math, os, subprocess, sys
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 ONLY = set(a for a in sys.argv[3:] if not a.startswith("--"))
+CONFS = ["-D" + a[len("--conf="):] for a in sys.argv[3:]
+         if a.startswith("--conf=")]
 
 # the classes of the checkout this script lives in, never another one
 CLASSES = os.path.join(os.path.dirname(os.path.dirname(
@@ -30,7 +35,7 @@ def run_verify():
                  "in this checkout first")
     cmd = ["java"] + OPENS + [
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-Xmx8g", "-cp", CP, "graft.Verify", SF, OUT] + sorted(ONLY)
+        "-Xmx8g"] + CONFS + ["-cp", CP, "graft.Verify", SF, OUT] + sorted(ONLY)
     env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": "8"}
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():

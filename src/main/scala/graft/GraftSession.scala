@@ -13,7 +13,11 @@ import org.apache.spark.sql.SparkSession
   *    default — on a real cluster size to ~2-3× total cores and let
   *    AQE coalesce (see SCALE.md);
   *  - AQE on — runtime re-planning (skew splits, broadcast demotion)
-  *    is part of the 100 TB design.
+  *    is part of the 100 TB design;
+  *  - a generated-class cache large enough for a whole workload's
+  *    plans (Spark's default of 100 entries evicts classes that later
+  *    queries of the same shape compile again; see SCALE.md). It is
+  *    JVM-wide and fixed by the first session that compiles code.
   */
 object GraftSession {
 
@@ -27,6 +31,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // BYTES-AWARE scan-parallelism floor (guide §6): a table that
       // fits in one <128 MB parquet file arrives as ONE scan split,
       // so every map-heavy plan over it runs on one core regardless

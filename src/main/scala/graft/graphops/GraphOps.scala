@@ -2,13 +2,16 @@ package graft.graphops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Graph algorithms over vertex/edge DataFrames (GraphFrames
   * pattern; reference src/graph/: core.rs:179, traversal.rs,
   * components.rs:70, centrality.rs, path.rs:101). Iterative
   * algorithms are join-per-superstep with early termination and
   * periodic localCheckpoint to cut lineage — the standard Pregel-ish
-  * shape that scales with the cluster.
+  * shape that scales with the cluster. pageRankExact,
+  * personalizedPageRank and kCore run those supersteps on the driver
+  * instead when the edge table is small ([[graft.LocalStrategy]]).
   *
   * Edges: DataFrame(src, dst[, weight]); undirected algorithms
   * symmetrize internally.
@@ -381,9 +384,19 @@ object GraphOps {
     * are bounded by the peel depth, not the vertex count. Operates
     * on the SIMPLE graph: self-loops are excluded and contribute no
     * degree (pinned by KCoreSelfLoopSpec). Returns the surviving
-    * vertices with their in-core degree. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame =
-    kCoreImpl(edges, k, maxIter)
+    * vertices with their in-core degree.
+    *
+    * Strategy ([[graft.LocalStrategy]]): an edge table at most
+    * `spark.sql.autoBroadcastJoinThreshold` (rows × row width) is
+    * collected once and peeled on the driver with the same rounds,
+    * convergence test and `maxIter` error; a larger one is peeled
+    * distributed over the table materialized once. */
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = 100): DataFrame = {
+    require(k >= 1, "k >= 1")
+    val e = edges.select(col("src"), col("dst"))
+    LocalStrategy.run(e, "src", "dst")(
+      LocalGraph.kCore(e, _, k, maxIter))(kCoreImpl(_, k, maxIter))
+  }
 
   /** Synchronous label-propagation community detection (reference
     * src/graph's community surface; the GraphX LabelPropagation
@@ -434,7 +447,6 @@ object GraphOps {
 
   private def kCoreImpl(edges: DataFrame, k: Int,
       maxIter: Int): DataFrame = {
-    require(k >= 1, "k >= 1")
     // HALF-EDGE peel (round-11, guide §2.3 shuffle/materialize fewer
     // bytes): peel on the canonical (least, greatest) edge table
     // directly instead of the symmetrized 2× table. degree(v) =
@@ -793,7 +805,15 @@ object GraphOps {
     * Cost: one keyed join+agg shuffle per round.
     *
     * Returns (id, ppr BIGINT, ppr_norm) with ppr_norm the single
-    * final float divide by the total retained mass. */
+    * final float divide by the total retained mass.
+    *
+    * Strategy ([[graft.LocalStrategy]]): an edge table at most
+    * `spark.sql.autoBroadcastJoinThreshold` (rows × row width) is
+    * collected once and iterated on the driver with the same integer
+    * arithmetic (ANSI overflow raises), returning a local DataFrame;
+    * a larger one runs the plan below over the table materialized
+    * once. Source membership is Spark's own `isin`, evaluated on the
+    * local vertex table. */
   def personalizedPageRank(edges: DataFrame, sources: Seq[Any],
       rounds: Int = 3, dampPct: Int = 85,
       scale: Long = 1000000000000L): DataFrame = {
@@ -802,6 +822,14 @@ object GraphOps {
     require(dampPct >= 1 && dampPct <= 99,
       s"dampPct in [1,99], got $dampPct")
     require(sources.nonEmpty, "sources must be non-empty")
+    val in = edges.select(col("src"), col("dst"))
+    LocalStrategy.run(in, "src", "dst")(LocalGraph.exactRank(in, _, rounds,
+      dampPct, scale, Some(sources), "ppr"))(
+      pprDistributed(_, sources, rounds, dampPct, scale))
+  }
+
+  private def pprDistributed(edges: DataFrame, sources: Seq[Any],
+      rounds: Int, dampPct: Int, scale: Long): DataFrame = {
     // ONE exchange builds the whole loop-invariant edge side
     // (round-11, guide §2.4): repartition the RAW edge rows by src
     // FIRST — HashPartitioning(src) satisfies the distinct's
@@ -855,13 +883,25 @@ object GraphOps {
     * result must hash-match across engines — e.g. TextRank keyword
     * scoring, where only the ranking matters and 2-4 rounds
     * separate keywords fine. Dangling mass is dropped (documented);
-    * the per-vertex restart keeps every score positive. */
+    * the per-vertex restart keeps every score positive.
+    *
+    * Strategy: as [[personalizedPageRank]] — local on the driver when
+    * the edge table is at most `spark.sql.autoBroadcastJoinThreshold`,
+    * else the plan below over the table materialized once. */
   def pageRankExact(edges: DataFrame, rounds: Int = 3,
       dampPct: Int = 85, scale: Long = 1000000000000L): DataFrame = {
     require(rounds >= 1 && rounds <= 6,
       s"rounds in [1,6] (each unrolls as an oracle CTE), got $rounds")
     require(dampPct >= 1 && dampPct <= 99,
       s"dampPct in [1,99], got $dampPct")
+    val in = edges.select(col("src"), col("dst"))
+    LocalStrategy.run(in, "src", "dst")(LocalGraph.exactRank(in, _, rounds,
+      dampPct, scale, None, "pr"))(
+      pageRankExactDistributed(_, rounds, dampPct, scale))
+  }
+
+  private def pageRankExactDistributed(edges: DataFrame, rounds: Int,
+      dampPct: Int, scale: Long): DataFrame = {
     // single-exchange loop-invariant build + cache lifecycle — see
     // personalizedPageRank
     val e = edges.select(col("src"), col("dst"))

@@ -1,7 +1,9 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+import graft.LocalStrategy
 
 /** Density clustering (reference src/ml/clustering/mod.rs:535 DBSCAN).
   *
@@ -86,18 +88,22 @@ object Clustering {
     * is the point: MLlib's kmeans|| stays the production path, this
     * variant is the declarative, oracle-verifiable formulation.
     * Empty clusters keep their previous centroid. Returns
-    * (id, cluster). */
+    * (id, cluster).
+    *
+    * Strategy ([[graft.LocalStrategy]]): a point table at most
+    * `spark.sql.autoBroadcastJoinThreshold` (rows × row width) is
+    * collected once and the rounds run on the driver with the same
+    * argmin (a null distance sorts first, NaN last, ties to the
+    * lowest index) and the same sums, returning a local DataFrame.
+    * A larger one runs distributed over the point table materialized
+    * once and released on return; the answer is checkpointed first. */
   def kmeansLloyd(df: DataFrame, featureCols: Seq[String],
       idCol: String, k: Int, iters: Int): DataFrame = {
     val pts = df.select(col(idCol).as("id") +:
       featureCols.zipWithIndex.map { case (c, i) =>
-        col(c).cast("double").as(s"__f$i") }: _*).cache()
+        col(c).cast("double").as(s"__f$i") }: _*)
     val d = featureCols.size
-    var centroids: IndexedSeq[IndexedSeq[Double]] = pts
-      .orderBy("id").limit(k).collect()
-      .map(r => (0 until d).map(i => r.getDouble(i + 1)): IndexedSeq[Double])
-      .toIndexedSeq
-    def assignExpr: org.apache.spark.sql.Column = {
+    def assignExpr(centroids: Seq[Seq[Double]]): Column = {
       val scored = centroids.zipWithIndex.map { case (c, ci) =>
         val dist = (0 until d).map(i =>
           (col(s"__f$i") - c(i)) * (col(s"__f$i") - c(i))).reduce(_ + _)
@@ -105,22 +111,94 @@ object Clustering {
       }
       array_min(array(scored: _*)).getField("c")
     }
-    var assigned = pts.withColumn("cluster", assignExpr)
-    (1 to iters).foreach { _ =>
-      val sums = assigned.groupBy("cluster")
-        .agg(count(lit(1)).cast("double").as("n"),
-          (0 until d).map(i => sum(col(s"__f$i")).as(s"s$i")): _*)
-        .collect()
-        .map(r => r.getAs[Int]("cluster") ->
-          (0 until d).map(i => r.getAs[Double](s"s$i") /
-            r.getAs[Double]("n")))
-        .toMap
-      centroids = centroids.indices.map(ci =>
-        sums.getOrElse(ci, centroids(ci)).toIndexedSeq)
-      assigned = pts.withColumn("cluster", assignExpr)
+    def assigned(p: DataFrame, centroids: Seq[Seq[Double]]): DataFrame =
+      p.withColumn("cluster", assignExpr(centroids))
+        .select(col("id"), col("cluster").cast("long").as("cluster"))
+    def features(r: Row): IndexedSeq[Double] =
+      (0 until d).map(i => r.getDouble(i + 1))
+    LocalStrategy.run(pts, "id") { rows =>
+      val centroids = kmeansLocal(rows, d, k, iters, features)
+      val out = rows.map(r => Row(r.get(0),
+        nearest(r, d, centroids).map(c => Long.box(c.toLong)).orNull))
+      // analysis only: the distributed plan's schema (and its error
+      // when there is no centroid)
+      val schema = assigned(pts, centroids).schema
+      df.sparkSession.createDataFrame(out.toSeq.asJava, schema)
+    } { cachedPts =>
+      LocalStrategy.cached(cachedPts) { p =>
+        var centroids: Seq[Seq[Double]] =
+          p.orderBy("id").limit(k).collect().toSeq.map(features)
+        (1 to iters).foreach { _ =>
+          val sums = p.withColumn("cluster", assignExpr(centroids))
+            .groupBy("cluster")
+            .agg(count(lit(1)).cast("double").as("n"),
+              (0 until d).map(i => sum(col(s"__f$i")).as(s"s$i")): _*)
+            .collect()
+            .map(r => r.getAs[Int]("cluster") ->
+              (0 until d).map(i => r.getAs[Double](s"s$i") /
+                r.getAs[Double]("n")))
+            .toMap
+          centroids = centroids.indices.map(ci =>
+            sums.getOrElse(ci, centroids(ci)))
+        }
+        // materialized before the point cache is released
+        assigned(p, centroids).localCheckpoint(eager = true)
+      }
     }
-    assigned.select(col("id"), col("cluster").cast("long").as("cluster"))
   }
+
+  /** The Lloyd rounds of [[kmeansLloyd]] on collected (id, features)
+    * rows: initial centroids are the features of the k smallest ids
+    * (nulls first, as `orderBy`), each update the per-cluster sum of
+    * the non-null values over the cluster's row count. */
+  private def kmeansLocal(rows: Array[Row], d: Int, k: Int, iters: Int,
+      features: Row => IndexedSeq[Double]): Seq[Seq[Double]] = {
+    var centroids: Seq[Seq[Double]] = rows
+      .sortBy(_.get(0))(LocalStrategy.keyOrdering).take(k).toSeq
+      .map(features)
+    (1 to iters).foreach { _ =>
+      val n = new Array[Long](centroids.size)
+      val s = Array.ofDim[Double](centroids.size, d)
+      rows.foreach { r =>
+        nearest(r, d, centroids).foreach { ci =>
+          n(ci) += 1
+          (0 until d).foreach { i =>
+            if (!r.isNullAt(i + 1)) s(ci)(i) += r.getDouble(i + 1)
+          }
+        }
+      }
+      centroids = centroids.indices.map(ci =>
+        if (n(ci) == 0) centroids(ci)
+        else s(ci).toSeq.map(_ / n(ci).toDouble))
+    }
+    centroids
+  }
+
+  /** `array_min(array(struct(dist, ci)))` of [[kmeansLloyd]]: a null
+    * feature makes every distance null, which sorts first, so index 0
+    * wins; otherwise the smallest distance under Spark's double order
+    * (NaN largest) with ties to the lowest index. None without
+    * centroids. */
+  private def nearest(r: Row, d: Int,
+      centroids: Seq[Seq[Double]]): Option[Int] =
+    if (centroids.isEmpty) None
+    else if ((1 to d).exists(r.isNullAt)) Some(0)
+    else {
+      def lt(a: Double, b: Double) = !a.isNaN && (b.isNaN || a < b)
+      var best = -1
+      var bestD = 0.0
+      centroids.zipWithIndex.foreach { case (c, ci) =>
+        var dist = 0.0
+        var i = 0
+        while (i < d) {
+          val t = r.getDouble(i + 1) - c(i)
+          dist = if (i == 0) t * t else dist + t * t
+          i += 1
+        }
+        if (best < 0 || lt(dist, bestD)) { best = ci; bestD = dist }
+      }
+      Some(best)
+    }
 
   /** Agglomerative hierarchical clustering (reference
     * src/ml/clustering agglomerative): nearest-neighbor-chain with
