@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{count, lit, row_number}
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -99,20 +104,73 @@ class PlanLintSpec extends SparkSpecBase {
     // a cached intermediate is a physical-plan LEAF — descend into
     // the plan that produced it (distinctValueCumCounts caches its
     // aggregated input, which is exactly the bounded shape)
-    case m: org.apache.spark.sql.execution.columnar
-        .InMemoryTableScanExec => boundedBelow(m.relation.cachedPlan)
+    case m: InMemoryTableScanExec => boundedBelow(m.relation.cachedPlan)
     // a cache entry materialized while AQE was on (e.g. by an earlier
     // suite planning the same gate) wraps its plan in an adaptive
-    // LEAF node — descend into the concrete plan it holds
-    case a: org.apache.spark.sql.execution.adaptive
-        .AdaptiveSparkPlanExec => boundedBelow(a.executedPlan)
+    // LEAF node; once run, its executedPlan is the final query stage
+    case a: AdaptiveSparkPlanExec => boundedBelow(a.executedPlan)
+    // a query stage (result, shuffle, broadcast, table cache) is
+    // itself a LEAF — the operators it ran sit in its `plan`
+    case q: QueryStageExec => boundedBelow(q.plan)
     case n if n.children.nonEmpty => n.children.forall(boundedBelow)
     case _ => false // a leaf scan: data-scale input
   }
 
+  /** Runs `body` with AQE set to `on`, then puts back the value the
+    * session had (or unsets the key if it was unset). */
+  private def withAqe[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally prior.fold(spark.conf.unset(key))(
+      spark.conf.set(key, _))
+  }
+
+  test("boundedBelow sees through the query stages of a cache " +
+      "materialized under AQE") {
+    val ev = Tables.load(spark, dir, "events")
+    val agg = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
+    val raw = ev.repartition(4)
+    // built and run with AQE on, each cache entry holds an adaptive
+    // plan whose executedPlan is a childless ResultQueryStageExec
+    withAqe(on = true) {
+      agg.cache().count()
+      raw.cache().count()
+    }
+    try withAqe(on = false) {
+      def globalWindowInput(df: DataFrame): SparkPlan =
+        df.withColumn("__r__", row_number().over(Window.orderBy("user_id")))
+          .queryExecution.executedPlan
+          .collectFirst { case w: WindowExec if w.partitionSpec.isEmpty =>
+            w.child
+          }.get
+      // the shape under test: the window reads the cache, and the
+      // cached plan has already been cut into query stages
+      def readsStagedCache(p: SparkPlan): Boolean = p.collectFirst {
+        case m: InMemoryTableScanExec => m.relation.cachedPlan
+      }.exists {
+        case a: AdaptiveSparkPlanExec =>
+          a.executedPlan.isInstanceOf[QueryStageExec]
+        case _ => false
+      }
+      val aggIn = globalWindowInput(agg)
+      val rawIn = globalWindowInput(raw)
+      withClue(aggIn.treeString) {
+        readsStagedCache(aggIn) shouldBe true
+        boundedBelow(aggIn) shouldBe true
+      }
+      withClue(rawIn.treeString) {
+        readsStagedCache(rawIn) shouldBe true
+        boundedBelow(rawIn) shouldBe false
+      }
+    } finally {
+      agg.unpersist(blocking = true)
+      raw.unpersist(blocking = true)
+    }
+  }
+
   test("no gate runs a globally-ordered window over unbounded input") {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withAqe(on = false) {
       val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
           if (allowGlobalWindow.contains(name)) None
@@ -133,16 +191,13 @@ class PlanLintSpec extends SparkSpecBase {
           }
       }
       withClue(bad.mkString("\n")) { bad shouldBe empty }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 
   test("no gate plans an unbounded cartesian or nested-loop join") {
     // AQE off so queryExecution.executedPlan is the concrete
     // physical plan rather than an adaptive wrapper
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withAqe(on = false) {
       val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
         case (name, fn) =>
           if (allow.contains(name)) None
@@ -165,8 +220,6 @@ class PlanLintSpec extends SparkSpecBase {
           }
       }
       withClue(bad.mkString("\n")) { bad shouldBe empty }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
     }
   }
 }
