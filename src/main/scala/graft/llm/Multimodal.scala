@@ -10,10 +10,9 @@ import org.apache.spark.sql.types._
   * The IMAGE and WAV paths are REAL codecs — the JDK ships them
   * (javax.imageio: PNG/JPEG/BMP/GIF; javax.sound.sampled: WAV/PCM),
   * so decode, resize and header inspection below run genuine byte
-  * parsing with zero external dependencies. VIDEO stays a
-  * deterministic stub (no container-format codec in the JDK) with
-  * the real plumbing contract — schema, null-safety, partitioning —
-  * so only the stub body changes on a cluster with ffmpeg.
+  * parsing with zero external dependencies. VIDEO gets container
+  * metadata only ([[parseMp4Meta]]): the JDK has no video codec, so
+  * frame decode and sampling need ffmpeg on the cluster.
   *
   * Scale shape: codecs run as per-row UDFs inside the scan stage —
   * map-side only, no shuffle; pair with `partitionForPayload` so a
@@ -441,22 +440,6 @@ object Multimodal {
     struct(round(w * scale).cast("int").as("width"),
       round(h * scale).cast("int").as("height"))
   }
-
-  /** Frame-sampling plan for video: every `stride`-th frame index up
-    * to `maxFrames`. STUB: frame count derived from byte hash. */
-  def frameSamplePlan(bytes: Column, stride: Int,
-      maxFrames: Int): Column = {
-    val nFrames = (pmod(xxhash64(bytes), lit(3000L)) + 1).cast("int")
-    slice(sequence(lit(0), nFrames - 1, lit(stride)), 1, maxFrames)
-  }
-
-  /** Feature extraction: fixed-size float vector per media row.
-    * STUB: hash-derived pseudo-embedding (replaced by a model UDF on
-    * a GPU cluster); shape/partitioning contract is real. */
-  def featureVectorStub(bytes: Column, dim: Int): Column =
-    transform(sequence(lit(0), lit(dim - 1)), i =>
-      (pmod(xxhash64(bytes, i), lit(2000L)).cast("double") / 1000.0 - 1.0)
-        .cast("float"))
 
   /** Parsed ISO-BMFF (MP4/MOV) container metadata. */
   case class Mp4Meta(brand: String, timescale: Int,

@@ -25,8 +25,8 @@ object QueriesExt {
         // ON the .5 rounding boundary, where round() semantics differ
         .select(col("event_id"), col("user_id"), col("ewm"))),
 
-    // §2.5a EWM variance (adjust=true, bias=false) — same fold as
-    // q57, four accumulators; verified against a recursive-CTE oracle
+    // §2.5a EWM variance (adjust=true, bias=false) — same keyed pass
+    // as q57, four accumulators; verified against a recursive-CTE oracle
     // carrying (num, den, num2, den2). No rounding (see q57 note).
     "q85_ewm_var" -> ((s, d) =>
       RollingOps.ewmVar(
@@ -36,7 +36,7 @@ object QueriesExt {
         .select(col("event_id"), col("user_id"), col("ewm_var"))),
 
     // §2.5a EWM covariance + correlation (pandas ewm().cov/.corr):
-    // the pairwise fold with seven accumulators, verified against a
+    // the pairwise pass with seven accumulators, verified against a
     // recursive-CTE oracle. No rounding (q57 note).
     "q290_ewm_cov" -> ((s, d) => {
       val base = t(s, d, "events")
@@ -48,9 +48,9 @@ object QueriesExt {
         .select("event_id", "event_type", "ewm_cov", "ewm_corr")
     }),
 
-    // §2.5a the O(n) streaming pairwise-EWM path (secondary sort +
-    // mapPartitions, EwmPairMachine) — bit-equal to the q290 fold by
-    // construction, so it shares the same recursive-CTE oracle
+    // §2.5a the pairwise-EWM pass without the join back (secondary
+    // sort + mapPartitions, EwmPairMachine) — the q290 pass, so it
+    // shares the same recursive-CTE oracle
     "q333_ewm_cov_scalable" -> ((s, d) => {
       val base = t(s, d, "events")
         .select("event_id", "event_type", "value", "user_id")
@@ -140,8 +140,8 @@ object QueriesExt {
         .select(col("id").as("s_suppkey"), col("cluster"),
           col("is_core"))),
 
-    // §2.5a the O(n) streaming EWM path (secondary sort +
-    // mapPartitions) — bit-equal to the fold, so it shares q57's
+    // §2.5a the EWM pass without the join back (secondary sort +
+    // mapPartitions) — the q57 pass, so it shares q57's
     // recursive-CTE oracle semantics
     "q93_ewm_scalable" -> ((s, d) =>
       RollingOps.ewmScalable(
@@ -866,9 +866,10 @@ object QueriesExt {
         |    AS INTEGER) AS level
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""".stripMargin,
 
-    // ONE oracle string for both EWM gates: q57 (fold form) and q93
-    // (streaming form) are bit-equal by construction, and sharing the
-    // constant keeps them from drifting apart
+    // ONE oracle string for both EWM gates: q57 (join-back form) and
+    // q93 (the same pass without the join back) are bit-equal by
+    // construction, and sharing the constant keeps them from drifting
+    // apart
     "q93_ewm_scalable" -> ewmRecursiveOracle,
 
     "q57_ewm" -> ewmRecursiveOracle,
@@ -964,7 +965,7 @@ object QueriesExt {
 
     // ignore_na=false replay: the CTE walks EVERY row (nulls
     // included), decaying accumulators without adding on null rows —
-    // identical 0.5-multiplier arithmetic to the Scala fold, so no
+    // identical 0.5-multiplier arithmetic to the Scala pass, so no
     // rounding is needed (q57 note)
     "q319_ewm_ignorena" ->
       """WITH RECURSIVE base AS (
@@ -1128,8 +1129,8 @@ object QueriesExt {
         |  ON e.event_type = f.event_type
         |  AND e.event_id = f.event_id""".stripMargin,
 
-    // identical replay to q290 — the scalable path is bit-equal to
-    // the fold, so the same recurrence oracles both
+    // identical replay to q290 — the scalable form is the q290 pass
+    // without the join back, so the same recurrence oracles both
     "q333_ewm_cov_scalable" ->
       """WITH RECURSIVE base AS (
         |  SELECT event_type, event_id, CAST(value AS DOUBLE) AS x,

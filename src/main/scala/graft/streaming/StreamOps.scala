@@ -149,9 +149,10 @@ object StreamOps {
     * mean/var/std carried ACROSS micro-batches with
     * flatMapGroupsWithState. The state is the
     * [[graft.window.RollingOps.EwmMachine]] accumulator set — the
-    * SAME state machine the batch [[graft.window.RollingOps.ewmScalable]]
-    * pass runs, so the streamed sequence is bit-equal to the batch
-    * fold over the concatenated input (spec'd cross-batch).
+    * SAME state machine the batch keyed pass of
+    * [[graft.window.RollingOps.ewmMean]] / `ewmScalable` runs, so the
+    * streamed sequence is bit-equal to the batch forms over the
+    * concatenated input (spec'd cross-batch).
     *
     * Contract: per key, `ord` must be non-decreasing across batches
     * (append-only sources; rows within a batch are sorted here).
@@ -226,9 +227,10 @@ object StreamOps {
     * the streaming family: per-key state carried across
     * micro-batches running the SAME
     * [[graft.window.RollingOps.EwmTimeMachine]] as the batch
-    * [[graft.window.RollingOps.ewmTimeScalable]] pass, so the
-    * streamed sequence is bit-equal to the batch forms. Input rows
-    * are (key, ord, timeSeconds, value); within a batch rows sort by
+    * [[graft.window.RollingOps.ewmMeanTime]] / `ewmTimeScalable`
+    * pass, so the streamed sequence is bit-equal to the batch forms.
+    * Input rows are (key, ord, timeSeconds, value); within a batch
+    * rows sort by
     * (time, ord) — the batch sort contract — and across batches
     * event times must be non-decreasing per key (append-only
     * sources). Rows with a missing time or value emit null and do
@@ -273,9 +275,9 @@ object StreamOps {
     * two-column sibling of [[ewmStream]]: per-key state carried
     * across micro-batches via flatMapGroupsWithState, running the
     * SAME [[graft.window.RollingOps.EwmPairMachine]] the batch
-    * [[graft.window.RollingOps.ewmCovScalable]] pass runs, so the
-    * streamed sequence is bit-equal to the batch fold over the
-    * concatenated input. Same ordering contract and O(1)-per-key
+    * [[graft.window.RollingOps.ewmCov]] / `ewmCovScalable` pass runs,
+    * so the streamed sequence is bit-equal to the batch forms over
+    * the concatenated input. Same ordering contract and O(1)-per-key
     * state as [[ewmStream]]. */
   def ewmCovStream(
       ds: Dataset[(String, Long, Option[Double], Option[Double])],

@@ -110,7 +110,7 @@ object TechnicalOps {
     * the series (α = 2/(n+1), seeded at the first value), macd =
     * ema_fast − ema_slow, signal = EWM of the macd line (seeded at
     * the first macd, which is 0 by construction), hist = macd −
-    * signal. Three sequential EWM folds per key — each a single
+    * signal. Three sequential EWM passes per key — each a single
     * hash-partition pass, no driver involvement. */
   def macd(df: DataFrame, valueCol: String, orderCol: String,
       partitionCols: Seq[String], fast: Int = 12, slow: Int = 26,

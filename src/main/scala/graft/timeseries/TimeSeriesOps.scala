@@ -1213,12 +1213,12 @@ object TimeSeriesOps {
   }
 
   /** PER-KEY distributed Holt forecasting: the [[holtForecast]]
-    * recurrence run as a sorted collect_list fold per key (the
-    * ewmMean machinery) — one shuffle fits EVERY key's model in
-    * parallel, no driver loop over groups. Emits `steps` rows per
-    * key: (key…, h, forecast = level + h·trend). Groups with a
-    * single point forecast flat (the driver-forecaster convention);
-    * empty groups don't appear. Verified against a recursive-CTE
+    * recurrence run as a sorted collect_list fold per key (a SQL
+    * `aggregate` over the key's points) — one shuffle fits EVERY
+    * key's model in parallel, no driver loop over groups. Emits
+    * `steps` rows per key: (key…, h, forecast = level + h·trend).
+    * Groups with a single point forecast flat (the driver-forecaster
+    * convention); empty groups don't appear. Verified against a recursive-CTE
     * oracle. */
   def groupedHoltForecast(df: DataFrame, valueCol: String,
       orderCol: String, keyCols: Seq[String], alpha: Double,

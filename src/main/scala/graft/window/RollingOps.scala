@@ -1,8 +1,11 @@
 package graft.window
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType, StructField,
+  StructType}
 
 /** pandas-style moving windows (reference src/series/window.rs:111-756,
   * src/dataframe/groupby_window.rs:32-164) as Spark window specs.
@@ -328,6 +331,112 @@ object RollingOps {
     1.0 - math.exp(math.log(0.5) / halflife)
   }
 
+
+  // ----- EWM: one engine ------------------------------------------
+  // Every exact EWM name below runs on [[keyedPass]]: repartition by
+  // key, sort within partitions, one O(n) stateful pass per partition
+  // stepping the per-key state machines further down. The streaming
+  // forms (graft.streaming.StreamOps.ewm*Stream) carry the same
+  // machines across micro-batches.
+
+  /** Exponentially-weighted moving mean with exact pandas semantics
+    * (reference src/series/window.rs:555-715): the one moving window
+    * Spark lacks as a primitive. The recurrence is sequential in event
+    * order, so the parallel unit is the key: one keyed pass
+    * ([[keyedPass]]) with rows sorted by (orderCol, value), the result
+    * joined back on (partitionCols, orderCol). `partitionCols = Nil`
+    * is pandas' plain `Series.ewm`: one series, one partition.
+    *
+    * adjust=true:  y_t = Σ w_i x_i / Σ w_i, w_i = (1-α)^(t-i)
+    * adjust=false: y_t = (1-α) y_{t-1} + α x_t  (y_0 = x_0)
+    *
+    * ignoreNa=true (this library's historical default): nulls are
+    * skipped entirely — a missing value neither poisons nor resets
+    * the recurrence, and null rows emit null. ignoreNa=false is the
+    * PANDAS DEFAULT (reference src/series/window.rs:555-602
+    * `ignore_na`): weights decay by absolute POSITION, so a gap of g
+    * missing rows multiplies every prior weight by (1-α)^g, and
+    * missing rows emit the carried (last computed) value. */
+  def ewmMean(df: DataFrame, valueCol: String, orderCol: String,
+      partitionCols: Seq[String], alpha: Double,
+      adjust: Boolean = true, ignoreNa: Boolean = true,
+      outName: String = "ewm"): DataFrame = {
+    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
+    // (partitionCols, orderCol) must uniquely identify rows: the
+    // result is joined back on that key
+    df.join(positionalPass(present(df, ignoreNa, valueCol), valueCol,
+      orderCol, partitionCols, alpha, "mean", adjust, bias = false,
+      ignoreNa, outName), partitionCols :+ orderCol, "left")
+  }
+
+  /** Exponentially-weighted moving variance (reference
+    * src/series/window.rs:640-715 implements mean+std+var; we mirror
+    * pandas adjust=true semantics). The [[ewmMean]] pass with four
+    * accumulators:
+    *
+    *   den  = Σ w_i,  num  = Σ w_i x_i,
+    *   num2 = Σ w_i x_i², den2 = Σ w_i²,   w_i = (1−α)^(t−i)
+    *
+    * biased var = num2/den − (num/den)²; bias=false applies the
+    * reliability debias den²/(den²−den2) (null while den² = den2,
+    * i.e. a single effective observation — pandas NaN).
+    * ignoreNa=false: positional weight decay across null rows, which
+    * emit the carried value (see [[ewmMean]]). */
+  def ewmVar(df: DataFrame, valueCol: String, orderCol: String,
+      partitionCols: Seq[String], alpha: Double, bias: Boolean = false,
+      ignoreNa: Boolean = true,
+      outName: String = "ewm_var"): DataFrame = {
+    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
+    df.join(positionalPass(present(df, ignoreNa, valueCol), valueCol,
+      orderCol, partitionCols, alpha, "var", adjust = true, bias,
+      ignoreNa, outName), partitionCols :+ orderCol, "left")
+  }
+
+  /** EWM standard deviation: sqrt of [[ewmVar]] (clamped at 0 so a
+    * −1 ulp variance cannot produce NaN; nulls stay null — greatest()
+    * alone would silently turn them into 0). */
+  def ewmStd(df: DataFrame, valueCol: String, orderCol: String,
+      partitionCols: Seq[String], alpha: Double, bias: Boolean = false,
+      ignoreNa: Boolean = true,
+      outName: String = "ewm_std"): DataFrame =
+    ewmVar(df, valueCol, orderCol, partitionCols, alpha, bias,
+      ignoreNa, outName)
+      .withColumn(outName, when(col(outName).isNotNull,
+        sqrt(greatest(col(outName), lit(0.0)))))
+
+  /** Exponentially-weighted moving covariance / correlation between
+    * two columns (pandas ewm().cov()/.corr() — the pairwise
+    * extension of [[ewmVar]], reference src/series/window.rs stops at
+    * single-series EWM). The [[ewmMean]] pass with seven accumulators
+    * (Σw, Σw², Σwx, Σwy, Σwxy, Σwx², Σwy²), rows sorted by
+    * (orderCol, x, y), pairwise-complete: a row where either column
+    * is null adds no observation. ignoreNa=true (historical default):
+    * such rows are dropped entirely and emit null — pandas
+    * ignore_na=True semantics. ignoreNa=false (the PANDAS DEFAULT):
+    * the gap still decays every weight by (1-α) and the row emits the
+    * carried value. cov applies the den²/(den²−den2) debias unless
+    * `bias`; corr is the biased ratio cov_b/√(varx_b·vary_b) — the
+    * debias factors cancel, matching pandas. */
+  def ewmCov(df: DataFrame, xCol: String, yCol: String,
+      orderCol: String, partitionCols: Seq[String], alpha: Double,
+      bias: Boolean = false, corr: Boolean = false,
+      ignoreNa: Boolean = true,
+      outName: String = "ewm_cov"): DataFrame = {
+    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
+    df.join(pairPass(present(df, ignoreNa, xCol, yCol), xCol, yCol,
+      orderCol, partitionCols, alpha, bias, corr, ignoreNa,
+      Seq(outName)), partitionCols :+ orderCol, "left")
+  }
+
+  /** pandas ewm().corr() — [[ewmCov]] with the biased-ratio
+    * correlation output. */
+  def ewmCorr(df: DataFrame, xCol: String, yCol: String,
+      orderCol: String, partitionCols: Seq[String], alpha: Double,
+      ignoreNa: Boolean = true,
+      outName: String = "ewm_corr"): DataFrame =
+    ewmCov(df, xCol, yCol, orderCol, partitionCols, alpha,
+      corr = true, ignoreNa = ignoreNa, outName = outName)
+
   /** Time-decayed EWM mean — pandas `ewm(halflife=…, times=…)`
     * (exceeds the reference, whose EWM is positional only): an
     * observation's weight decays by 0.5^(Δt/halflife) per ELAPSED
@@ -336,29 +445,17 @@ object RollingOps {
     * unix_timestamp seconds); `orderCol` must uniquely key rows
     * within a partition (join-back key; also the tie-break for equal
     * times). pandas supports times with adjust=true mean only — same
-    * here. Null values/times are skipped and emit null. Same
-    * sorted-fold shape as [[ewmMean]] with the previous time carried
-    * in the accumulator. */
+    * here. Null values/times are skipped and emit null. The
+    * [[ewmMean]] pass with rows sorted by (timeCol, orderCol, value)
+    * and the previous time carried in the state. */
   def ewmMeanTime(df: DataFrame, valueCol: String, timeCol: String,
       orderCol: String, partitionCols: Seq[String], halflife: Double,
       outName: String = "ewm_t"): DataFrame = {
     require(halflife > 0, "halflife > 0")
-    val grouped = df
-      .filter(col(valueCol).isNotNull && col(timeCol).isNotNull)
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(
-        col(timeCol).cast("double").as("t"),
-        col(orderCol).as("o"),
-        col(valueCol).cast("double").as("v")))).as("__pts__"))
-    // compiled EwmFold kernel — bit-equal to the interpreted SQL
-    // fold (see ewmMean note)
-    val fold = graft.sqlext.EwmFold.ewm_fold(col("__pts__"),
-      halflife, graft.sqlext.EwmFold.TimeMean)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
+    df.join(timePass(present(df, ignoreNa = true, valueCol, timeCol),
+      Seq(valueCol), timeCol, orderCol, partitionCols, halflife, "mean",
+      bias = false, corr = false, outName),
+      partitionCols :+ orderCol, "left")
   }
 
   /** Time-decayed EWM variance — the var sibling of [[ewmMeanTime]]
@@ -370,32 +467,15 @@ object RollingOps {
     * den²/(den²−den2) reliability debias (null while a single
     * effective observation). With REGULAR spacing Δ it reduces
     * exactly to [[ewmVar]] at α = 1 − 0.5^(Δ/halflife) (spec'd).
-    * Same sorted-fold shape and null conventions as
-    * [[ewmMeanTime]]. */
+    * Same pass and null conventions as [[ewmMeanTime]]. */
   def ewmVarTime(df: DataFrame, valueCol: String, timeCol: String,
       orderCol: String, partitionCols: Seq[String], halflife: Double,
       bias: Boolean = false,
       outName: String = "ewm_t_var"): DataFrame = {
     require(halflife > 0, "halflife > 0")
-    val grouped = df
-      .filter(col(valueCol).isNotNull && col(timeCol).isNotNull)
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(
-        col(timeCol).cast("double").as("t"),
-        col(orderCol).as("o"),
-        col(valueCol).cast("double").as("v")))).as("__pts__"))
-    // compiled EwmFold kernel — bit-equal to the interpreted SQL
-    // fold (see ewmMean note)
-    val mode =
-      if (bias) graft.sqlext.EwmFold.TimeVarBiased
-      else graft.sqlext.EwmFold.TimeVar
-    val fold =
-      graft.sqlext.EwmFold.ewm_fold(col("__pts__"), halflife, mode)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
+    df.join(timePass(present(df, ignoreNa = true, valueCol, timeCol),
+      Seq(valueCol), timeCol, orderCol, partitionCols, halflife, "var",
+      bias, corr = false, outName), partitionCols :+ orderCol, "left")
   }
 
   /** Time-decayed EWM standard deviation: sqrt of [[ewmVarTime]]
@@ -414,9 +494,9 @@ object RollingOps {
     * [[ewmVarTime]]): weights decay by 0.5^(Δt/halflife) per elapsed
     * time, with the seven pairwise accumulators of [[ewmCov]] (den2
     * decays by the SQUARE of the per-step factor). Pairwise-complete:
-    * only rows with both values and a time present enter the fold
-    * (the [[ewmMeanTime]] null convention); others emit null. With
-    * REGULAR spacing Δ it reduces exactly to [[ewmCov]] at
+    * only rows with both values and a time present enter the
+    * recurrence (the [[ewmMeanTime]] null convention); others emit
+    * null. With REGULAR spacing Δ it reduces exactly to [[ewmCov]] at
     * α = 1 − 0.5^(Δ/halflife) (spec'd). corr is the biased ratio —
     * the debias factors cancel, matching the positional form. */
   def ewmCovTime(df: DataFrame, xCol: String, yCol: String,
@@ -424,221 +504,286 @@ object RollingOps {
       halflife: Double, bias: Boolean = false, corr: Boolean = false,
       outName: String = "ewm_t_cov"): DataFrame = {
     require(halflife > 0, "halflife > 0")
-    val grouped = df
-      .filter(col(xCol).isNotNull && col(yCol).isNotNull &&
-        col(timeCol).isNotNull)
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(
-        col(timeCol).cast("double").as("t"),
-        col(orderCol).as("o"),
-        col(xCol).cast("double").as("x"),
-        col(yCol).cast("double").as("y")))).as("__pts__"))
-    // compiled EwmFold kernel — bit-equal to the interpreted SQL
-    // fold (see ewmMean note)
-    val mode =
-      if (corr) graft.sqlext.EwmFold.TimeCorr
-      else if (bias) graft.sqlext.EwmFold.TimeCovBiased
-      else graft.sqlext.EwmFold.TimeCov
-    val fold =
-      graft.sqlext.EwmFold.ewm_fold(col("__pts__"), halflife, mode)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
+    df.join(timePass(present(df, ignoreNa = true, xCol, yCol, timeCol),
+      Seq(xCol, yCol), timeCol, orderCol, partitionCols, halflife,
+      "mean", bias, corr, outName), partitionCols :+ orderCol, "left")
   }
 
-  /** Scale-path EWM (adjust=true): weights below `tol` are truncated,
-    * turning the sequential recurrence into a fixed-depth window of
-    * K = ⌈ln(tol)/ln(1−α)⌉ lagged terms — an ordinary partitioned
-    * window plan (one shuffle, streaming sort), no per-group
-    * collect_list. Error is bounded by tol·max|x|; with the default
-    * 1e-12 the result is indistinguishable from the exact form at
-    * double precision. Use when series are long (the exact ewmMean
-    * materializes each group in memory). */
-  def ewmMeanTruncated(df: DataFrame, valueCol: String,
-      orderCols: Seq[String], partitionCols: Seq[String], alpha: Double,
-      tol: Double = 1e-12, outName: String = "ewm"): DataFrame = {
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    val k = math.ceil(math.log(tol) / math.log1p(-alpha)).toInt.max(1)
-    val w = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val v = col(valueCol).cast("double")
-    val terms = (0 until k).map { j =>
-      val wj = math.pow(1.0 - alpha, j)
-      val x = if (j == 0) v else lag(v, j).over(w)
-      (when(x.isNotNull, lit(wj)).otherwise(lit(0.0)),
-        when(x.isNotNull, x * wj).otherwise(lit(0.0)))
-    }
-    val num = terms.map(_._2).reduce(_ + _)
-    val den = terms.map(_._1).reduce(_ + _)
-    df.withColumn(outName, when(v.isNotNull, num / den))
-  }
-
-  /** Exponentially-weighted moving mean with exact pandas semantics
-    * (reference src/series/window.rs:555-715): the one moving window
-    * Spark lacks as a primitive. Computed per partition-key with a
-    * sorted collect_list + higher-order aggregate fold — the
-    * recurrence is inherently sequential in event order, so the
-    * parallel unit is the group (fine at scale: groups are bounded
-    * series, the fold is codegen'd, no driver involvement).
-    *
-    * adjust=true:  y_t = Σ w_i x_i / Σ w_i, w_i = (1-α)^(t-i)
-    * adjust=false: y_t = (1-α) y_{t-1} + α x_t  (y_0 = x_0)
-    *
-    * ignoreNa=true (this library's historical default): nulls are
-    * skipped entirely — a missing value neither poisons nor resets
-    * the recurrence, and null rows emit null. ignoreNa=false is the
-    * PANDAS DEFAULT (reference src/series/window.rs:555-602
-    * `ignore_na`): weights decay by absolute POSITION, so a gap of g
-    * missing rows multiplies every prior weight by (1-α)^g, and
-    * missing rows emit the carried (last computed) value. */
-  def ewmMean(df: DataFrame, valueCol: String, orderCol: String,
-      partitionCols: Seq[String], alpha: Double,
-      adjust: Boolean = true, ignoreNa: Boolean = true,
-      outName: String = "ewm"): DataFrame = {
-    // (partitionCols, orderCol) must uniquely identify rows: the
-    // result is joined back on that key.
-    val base = if (ignoreNa) df.filter(col(valueCol).isNotNull) else df
-    val grouped = base
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
-        col(valueCol).cast("double").as("v")))).as("__pts__"))
-    // fold over the ordered points with the compiled EwmFold kernel
-    // (sqlext/EwmFold.scala): bit-equal accumulator updates and
-    // emitted values in identical IEEE order to the interpreted
-    // aggregate(...) SQL fold this replaced, but an O(n) compiled
-    // loop instead of an interpreted per-element lambda with an
-    // O(n²) outp-array append (see OPTIMIZATION_r10.md q319)
-    val mode =
-      if (adjust && ignoreNa) graft.sqlext.EwmFold.MeanAdj
-      else if (adjust) graft.sqlext.EwmFold.MeanAdjKeepNa
-      else if (ignoreNa) graft.sqlext.EwmFold.MeanRec
-      else graft.sqlext.EwmFold.MeanRecKeepNa
-    val fold =
-      graft.sqlext.EwmFold.ewm_fold(col("__pts__"), alpha, mode)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
-  }
-
-  /** Exponentially-weighted moving variance (reference
-    * src/series/window.rs:640-715 implements mean+std+var; we mirror
-    * pandas adjust=true semantics). Same sorted-fold shape as
-    * [[ewmMean]] with four accumulators:
-    *
-    *   den  = Σ w_i,  num  = Σ w_i x_i,
-    *   num2 = Σ w_i x_i², den2 = Σ w_i²,   w_i = (1−α)^(t−i)
-    *
-    * biased var = num2/den − (num/den)²; bias=false applies the
-    * reliability debias den²/(den²−den2) (null while den² = den2,
-    * i.e. a single effective observation — pandas NaN).
-    * ignoreNa=false: positional weight decay across null rows, which
-    * emit the carried value (see [[ewmMean]]). */
-  def ewmVar(df: DataFrame, valueCol: String, orderCol: String,
-      partitionCols: Seq[String], alpha: Double, bias: Boolean = false,
+  /** The keyed pass of [[ewmMean]]/[[ewmVar]]/[[ewmStd]] without the
+    * join back: every input row, null values included (they emit null
+    * and do not advance the state under ignoreNa=true, decay and carry
+    * under ignoreNa=false). `stat`: "mean" | "var" | "std"; var/std
+    * use adjust=true weights like [[ewmVar]]. Output columns:
+    * (partitionCols…, orderCol, outName). */
+  def ewmScalable(df: DataFrame, valueCol: String, orderCol: String,
+      partitionCols: Seq[String], alpha: Double, stat: String = "mean",
+      adjust: Boolean = true, bias: Boolean = false,
       ignoreNa: Boolean = true,
-      outName: String = "ewm_var"): DataFrame = {
+      outName: String = "ewm"): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    val base = if (ignoreNa) df.filter(col(valueCol).isNotNull) else df
-    val grouped = base
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
-        col(valueCol).cast("double").as("v")))).as("__pts__"))
-    // fold with the compiled EwmFold kernel — bit-equal to the
-    // interpreted aggregate(...) SQL fold (see ewmMean note): four
-    // accumulators (num/den/num2/den2), post-update emit, null
-    // points under ignore_na=false decaying without adding
-    val mode =
-      if (bias && ignoreNa) graft.sqlext.EwmFold.VarBiased
-      else if (bias) graft.sqlext.EwmFold.VarBiasedKeepNa
-      else if (ignoreNa) graft.sqlext.EwmFold.Var
-      else graft.sqlext.EwmFold.VarKeepNa
-    val fold =
-      graft.sqlext.EwmFold.ewm_fold(col("__pts__"), alpha, mode)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
+    require(Seq("mean", "var", "std").contains(stat), s"stat=$stat")
+    require(partitionCols.nonEmpty, "partitionCols required")
+    positionalPass(df, valueCol, orderCol, partitionCols, alpha, stat,
+      adjust, bias, ignoreNa, outName)
   }
 
-  /** Exponentially-weighted moving covariance / correlation between
-    * two columns (pandas ewm().cov()/.corr() — the pairwise
-    * extension of [[ewmVar]], reference src/series/window.rs stops at
-    * single-series EWM). Same sorted-fold shape with seven
-    * accumulators (Σw, Σw², Σwx, Σwy, Σwxy, Σwx², Σwy²), pairwise-
-    * complete: a row where either column is null adds no observation.
-    * ignoreNa=true (historical default): such rows are dropped from
-    * the fold entirely and emit null — pandas ignore_na=True
-    * semantics. ignoreNa=false (the PANDAS DEFAULT): the gap still
-    * decays every weight by (1-α) and the row emits the carried
-    * value. cov applies the den²/(den²−den2) debias unless `bias`;
-    * corr is the biased ratio cov_b/√(varx_b·vary_b) — the debias
-    * factors cancel, matching pandas. */
-  def ewmCov(df: DataFrame, xCol: String, yCol: String,
+  /** The keyed pass of [[ewmCov]]/[[ewmCorr]] without the join back:
+    * every input row; rows where either column is null follow
+    * pairwise-complete semantics (skipped and null under
+    * ignoreNa=true, decay-and-carry under ignoreNa=false). Output
+    * columns: (partitionCols…, orderCol, outName). */
+  def ewmCovScalable(df: DataFrame, xCol: String, yCol: String,
       orderCol: String, partitionCols: Seq[String], alpha: Double,
       bias: Boolean = false, corr: Boolean = false,
       ignoreNa: Boolean = true,
       outName: String = "ewm_cov"): DataFrame = {
     require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    val base =
-      if (ignoreNa) df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
-      else df
-    val grouped = base
-      .groupBy(partitionCols.map(col): _*)
-      .agg(sort_array(collect_list(struct(col(orderCol).as("o"),
-        col(xCol).cast("double").as("x"),
-        col(yCol).cast("double").as("y")))).as("__pts__"))
-    // compiled EwmFold kernel — bit-equal to the interpreted SQL
-    // fold (see ewmMean note), incl. Spark's NaN-is-largest CASE
-    // guard semantics under a leading-null keepna prefix
-    val mode =
-      if (corr) (if (ignoreNa) graft.sqlext.EwmFold.CorrPos
-                 else graft.sqlext.EwmFold.CorrPosKeepNa)
-      else if (bias) (if (ignoreNa) graft.sqlext.EwmFold.CovPosBiased
-                      else graft.sqlext.EwmFold.CovPosBiasedKeepNa)
-      else (if (ignoreNa) graft.sqlext.EwmFold.CovPos
-            else graft.sqlext.EwmFold.CovPosKeepNa)
-    val fold =
-      graft.sqlext.EwmFold.ewm_fold(col("__pts__"), alpha, mode)
-    val exploded = grouped.withColumn("__ewm__", explode(fold))
-      .select(partitionCols.map(col) :+
-        col("__ewm__.o").as(orderCol) :+
-        col("__ewm__.e").as(outName): _*)
-    df.join(exploded, partitionCols :+ orderCol, "left")
+    require(partitionCols.nonEmpty, "partitionCols required")
+    pairPass(df, xCol, yCol, orderCol, partitionCols, alpha, bias, corr,
+      ignoreNa, Seq(outName))
   }
 
-  /** pandas ewm().corr() — [[ewmCov]] with the biased-ratio
-    * correlation output. */
-  def ewmCorr(df: DataFrame, xCol: String, yCol: String,
+  /** pandas ewm().corr() without the join back — [[ewmCovScalable]]
+    * with the biased-ratio correlation output. */
+  def ewmCorrScalable(df: DataFrame, xCol: String, yCol: String,
       orderCol: String, partitionCols: Seq[String], alpha: Double,
       ignoreNa: Boolean = true,
       outName: String = "ewm_corr"): DataFrame =
-    ewmCov(df, xCol, yCol, orderCol, partitionCols, alpha,
+    ewmCovScalable(df, xCol, yCol, orderCol, partitionCols, alpha,
       corr = true, ignoreNa = ignoreNa, outName = outName)
 
-  /** EWM standard deviation: sqrt of [[ewmVar]] (clamped at 0 so a
-    * −1 ulp variance cannot produce NaN; nulls stay null — greatest()
-    * alone would silently turn them into 0). */
-  def ewmStd(df: DataFrame, valueCol: String, orderCol: String,
-      partitionCols: Seq[String], alpha: Double, bias: Boolean = false,
-      ignoreNa: Boolean = true,
-      outName: String = "ewm_std"): DataFrame =
-    ewmVar(df, valueCol, orderCol, partitionCols, alpha, bias,
-      ignoreNa, outName)
-      .withColumn(outName, when(col(outName).isNotNull,
-        sqrt(greatest(col(outName), lit(0.0)))))
+  /** ONE-PASS cov + corr: both statistics share the seven
+    * [[EwmPairMachine]] accumulators, so a caller that needs cov AND
+    * corr (the q333 shape) pays a single repartition + sort + O(n)
+    * pass. Values equal [[ewmCovScalable]] / [[ewmCorrScalable]] run
+    * separately — identical state advance, identical emit formulas.
+    * Output columns: (partitionCols…, orderCol, covName, corrName). */
+  def ewmCovCorrScalable(df: DataFrame, xCol: String, yCol: String,
+      orderCol: String, partitionCols: Seq[String], alpha: Double,
+      bias: Boolean = false, ignoreNa: Boolean = true,
+      covName: String = "ewm_cov",
+      corrName: String = "ewm_corr"): DataFrame = {
+    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
+    require(partitionCols.nonEmpty, "partitionCols required")
+    pairPass(df, xCol, yCol, orderCol, partitionCols, alpha, bias,
+      corr = false, ignoreNa, Seq(covName, corrName))
+  }
 
-  /** Per-point EWM state machine — the ONE implementation of the
-    * exact O(1)-per-row recurrence, shared by [[ewmScalable]] (batch
-    * mapPartitions) and
-    * [[graft.streaming.StreamOps.ewmStream]] (flatMapGroupsWithState
-    * across micro-batches), so the two paths are bit-equal to each
-    * other and to the fold forms by construction. Arithmetic is the
-    * identical update order to [[ewmMean]]/[[ewmVar]]. */
+  /** The keyed pass of [[ewmMeanTime]]/[[ewmVarTime]]/[[ewmStdTime]]
+    * without the join back: every input row, sorted by
+    * (timeCol, orderCol, value); rows with a null value or time emit
+    * null and do not advance the state. Output:
+    * (partitionCols…, orderCol, outName). */
+  def ewmTimeScalable(df: DataFrame, valueCol: String,
+      timeCol: String, orderCol: String, partitionCols: Seq[String],
+      halflife: Double, stat: String = "mean", bias: Boolean = false,
+      outName: String = "ewm_t"): DataFrame = {
+    require(partitionCols.nonEmpty, "partitionCols required")
+    timePass(df, Seq(valueCol), timeCol, orderCol, partitionCols,
+      halflife, stat, bias, corr = false, outName)
+  }
+
+  /** The keyed pass of [[ewmCovTime]] without the join back: rows
+    * with a missing value or time emit null and do not advance the
+    * state. Output: (partitionCols…, orderCol, outName). */
+  def ewmCovTimeScalable(df: DataFrame, xCol: String, yCol: String,
+      timeCol: String, orderCol: String, partitionCols: Seq[String],
+      halflife: Double, bias: Boolean = false, corr: Boolean = false,
+      outName: String = "ewm_t_cov"): DataFrame = {
+    require(partitionCols.nonEmpty, "partitionCols required")
+    timePass(df, Seq(xCol, yCol), timeCol, orderCol, partitionCols,
+      halflife, "mean", bias, corr, outName)
+  }
+
+  // rows whose `cols` are all present (every row when !ignoreNa)
+  private def present(df: DataFrame, ignoreNa: Boolean,
+      cols: String*): DataFrame =
+    if (ignoreNa) df.filter(cols.map(col(_).isNotNull).reduce(_ && _))
+    else df
+
+  /** The EWM engine: `inputs` are cast to double and placed behind
+    * (partitionCols…, orderCol); rows are hash-partitioned by key (one
+    * partition when there is none) and sorted by key, then by
+    * `sortCols` (orderCol and `inCol(i)`, the i-th input, in the order
+    * the series is read: equal orders fall back to the values); one
+    * `mapPartitions` then feeds each key's rows in order to a fresh
+    * stepper from `newStep`, which reads input i at row position
+    * partitionCols.size + 1 + i and writes the statistics named by
+    * `outNames` into the output row from position partitionCols.size
+    * + 1 on. O(n), constant memory per key. Output:
+    * (partitionCols…, orderCol, outNames…), the key and order columns
+    * keeping their input types and nullability. */
+  private def keyedPass(df: DataFrame, partitionCols: Seq[String],
+      orderCol: String, inputs: Seq[String], sortCols: Seq[String],
+      outNames: Seq[String])(
+      newStep: () => (Row, Array[Any]) => Unit): DataFrame = {
+    val keys = partitionCols.map(col)
+    val in = df.select(keys ++ (col(orderCol) +: inputs.indices.map(i =>
+      col(inputs(i)).cast("double").as(inCol(i)))): _*)
+    val sorted =
+      (if (keys.isEmpty) in.repartition(1) else in.repartition(keys: _*))
+        .sortWithinPartitions(keys ++ sortCols.map(col): _*)
+    val nKeys = keys.size
+    val nOut = nKeys + 1 + outNames.size
+    val schema = StructType(in.schema.fields.take(nKeys + 1) ++
+      outNames.map(StructField(_, DoubleType, nullable = true)))
+    val floatKey = in.schema.fields.take(nKeys).map(f =>
+      f.dataType == DoubleType || f.dataType == FloatType)
+    sorted.mapPartitions { it =>
+      var curKey: Array[Any] = null
+      var step: (Row, Array[Any]) => Unit = null
+      // floating keys compare by value, NaN equal to NaN: Spark's hash
+      // partitioning and sort put -0.0 and 0.0 (and all NaNs) in one
+      // key. Others compare element-deep: BinaryType keys are
+      // Array[Byte], where plain equality is reference equality and
+      // would reset the state on every row
+      def sameKey(r: Row): Boolean = {
+        if (curKey == null) return false
+        var i = 0
+        while (i < nKeys) {
+          val a = curKey(i)
+          val b = r.get(i)
+          val same =
+            if (floatKey(i) && a != null && b != null) {
+              val x = a.asInstanceOf[Number].doubleValue
+              val y = b.asInstanceOf[Number].doubleValue
+              x == y || (x.isNaN && y.isNaN)
+            } else java.util.Objects.deepEquals(a, b)
+          if (!same) return false
+          i += 1
+        }
+        true
+      }
+      it.map { r =>
+        if (!sameKey(r)) {
+          curKey = Array.tabulate(nKeys)(r.get)
+          step = newStep()
+        }
+        val vals = new Array[Any](nOut)
+        var i = 0
+        while (i <= nKeys) { vals(i) = r.get(i); i += 1 }
+        step(r, vals)
+        new GenericRow(vals): Row
+      }
+    }(Encoders.row(schema))
+  }
+
+  private def inCol(i: Int): String = s"__in${i}__"
+
+  // one [[EwmMachine]] statistic per row, rows sorted by (order, value)
+  private def positionalPass(df: DataFrame, valueCol: String,
+      orderCol: String, partitionCols: Seq[String], alpha: Double,
+      stat: String, adjust: Boolean, bias: Boolean, ignoreNa: Boolean,
+      outName: String): DataFrame = {
+    val v = partitionCols.size + 1
+    keyedPass(df, partitionCols, orderCol, Seq(valueCol),
+      Seq(orderCol, inCol(0)), Seq(outName)) { () =>
+      val m = new EwmMachine(alpha, stat, adjust, bias, ignoreNa)
+      (r, out) => {
+        val missing = r.isNullAt(v)
+        out(v) = m.step(missing, if (missing) 0.0 else r.getDouble(v))
+      }
+    }
+  }
+
+  // [[EwmPairMachine]] per row, rows sorted by (order, x, y); two
+  // `outNames` emit cov and corr from one advance
+  private def pairPass(df: DataFrame, xCol: String, yCol: String,
+      orderCol: String, partitionCols: Seq[String], alpha: Double,
+      bias: Boolean, corr: Boolean, ignoreNa: Boolean,
+      outNames: Seq[String]): DataFrame = {
+    val x = partitionCols.size + 1
+    val both = outNames.size == 2
+    keyedPass(df, partitionCols, orderCol, Seq(xCol, yCol),
+      Seq(orderCol, inCol(0), inCol(1)), outNames) { () =>
+      val m = new EwmPairMachine(alpha, bias, corr, ignoreNa)
+      (r, out) => {
+        val incomplete = r.isNullAt(x) || r.isNullAt(x + 1)
+        val xv = if (incomplete) 0.0 else r.getDouble(x)
+        val yv = if (incomplete) 0.0 else r.getDouble(x + 1)
+        if (both) {
+          val (cov, cor) = m.stepBoth(incomplete, xv, yv)
+          out(x) = cov; out(x + 1) = cor
+        } else out(x) = m.step(incomplete, xv, yv)
+      }
+    }
+  }
+
+  // time-decayed: one value ([[EwmTimeMachine]]) or two
+  // ([[EwmTimePairMachine]]), rows sorted by (time, order, values…);
+  // a row missing its time or a value emits null, state unchanged
+  private def timePass(df: DataFrame, valueCols: Seq[String],
+      timeCol: String, orderCol: String, partitionCols: Seq[String],
+      halflife: Double, stat: String, bias: Boolean, corr: Boolean,
+      outName: String): DataFrame = {
+    val t = partitionCols.size + 1
+    val end = t + valueCols.size + 1
+    keyedPass(df, partitionCols, orderCol, timeCol +: valueCols,
+      inCol(0) +: orderCol +: valueCols.indices.map(i => inCol(i + 1)),
+      Seq(outName)) { () =>
+      val step: Row => Any =
+        if (valueCols.size == 1) {
+          val m = new EwmTimeMachine(halflife, stat, bias)
+          r => m.step(r.getDouble(t), r.getDouble(t + 1))
+        } else {
+          val m = new EwmTimePairMachine(halflife, bias, corr)
+          r => m.step(r.getDouble(t), r.getDouble(t + 1),
+            r.getDouble(t + 2))
+        }
+      (r, out) => {
+        var i = t
+        while (i < end && !r.isNullAt(i)) i += 1
+        out(t) = if (i < end) null else step(r)
+      }
+    }
+  }
+
+  // Spark SQL `x > 0.0` under its NaN-is-largest ordering — the guard
+  // of the DuckDB CASE oracles, so a NaN moment emits NaN, not null
+  @inline private def gtZeroSql(x: Double): Boolean =
+    java.lang.Double.isNaN(x) || x > 0.0
+
+  // var/std from the (num, den, num2, den2) accumulators; null while
+  // den is 0 (a keepNa leading-null prefix) or the debias is undefined
+  private def varEmit(num: Double, den: Double, num2: Double,
+      den2: Double, bias: Boolean, std: Boolean): Any =
+    if (!gtZeroSql(den)) null
+    else {
+      val biased = num2 / den - (num / den) * (num / den)
+      val v: Any =
+        if (bias) biased
+        else if (gtZeroSql(den * den - den2))
+          biased * (den * den) / (den * den - den2)
+        else null
+      if (std && v != null) math.sqrt(math.max(v.asInstanceOf[Double], 0.0))
+      else v
+    }
+
+  // cov (debiased unless `bias`) or corr from the seven pairwise
+  // accumulators; null while den is 0 (a keepNa leading prefix, where
+  // the moments are 0/0) or the statistic is undefined
+  private def pairEmit(den: Double, den2: Double, sx: Double,
+      sy: Double, sxy: Double, sxx: Double, syy: Double, bias: Boolean,
+      corr: Boolean): Any =
+    if (!gtZeroSql(den)) null
+    else {
+      val covB = sxy / den - (sx / den) * (sy / den)
+      if (corr) {
+        val varxB = sxx / den - (sx / den) * (sx / den)
+        val varyB = syy / den - (sy / den) * (sy / den)
+        if (gtZeroSql(varxB * varyB)) covB / math.sqrt(varxB * varyB)
+        else null
+      } else if (bias) covB
+      else if (gtZeroSql(den * den - den2))
+        covB * (den * den) / (den * den - den2)
+      else null
+    }
+
+  /** Per-point EWM state machine: the exact O(1)-per-row recurrence
+    * behind [[ewmMean]]/[[ewmVar]]/[[ewmScalable]] (batch, one per key
+    * in [[keyedPass]]) and [[graft.streaming.StreamOps.ewmStream]]
+    * (flatMapGroupsWithState across micro-batches), so the streamed
+    * sequence equals the batch one. */
   private[graft] final class EwmMachine(a: Double, stat: String,
       adjust: Boolean, bias: Boolean, ignoreNa: Boolean)
       extends Serializable {
@@ -649,10 +794,6 @@ object RollingOps {
     var num = 0.0; var den = 0.0; var num2 = 0.0; var den2 = 0.0
     var prev = 0.0; var hasPrev = false // adjust=false mean state
     var prevOw = 0.0 // adjust=false ignore_na=false old_wt state
-    def reset(): Unit = {
-      num = 0.0; den = 0.0; num2 = 0.0; den2 = 0.0
-      prev = 0.0; hasPrev = false; prevOw = 0.0
-    }
     def restore(n: Double, d: Double, n2: Double, d2: Double,
         p: Double, hp: Boolean, ow: Double): Unit = {
       num = n; den = d; num2 = n2; den2 = d2
@@ -665,99 +806,62 @@ object RollingOps {
       else if (isNull) {
         // ignore_na=false (pandas default): the gap decays every
         // accumulator without adding an observation; emit the
-        // carried value (identical to the fold forms)
+        // carried value
         num *= (1.0 - a); den *= (1.0 - a)
         num2 *= (1.0 - a); den2 *= (1.0 - a) * (1.0 - a)
         prevOw *= (1.0 - a)
         if (statMean && adjust) {
-          if (den > 0.0) num / den else null
+          if (gtZeroSql(den)) num / den else null
         } else if (statMean) {
           if (hasPrev) prev else null
-        } else {
-          if (den > 0.0) {
-            val biased = num2 / den - (num / den) * (num / den)
-            val v: Any =
-              if (bias) biased
-              else if (den * den - den2 > 0.0)
-                biased * (den * den) / (den * den - den2)
-              else null
-            if (statStd && v != null)
-              math.sqrt(math.max(v.asInstanceOf[Double], 0.0))
-            else v
-          } else null
-        }
+        } else varEmit(num, den, num2, den2, bias, statStd)
       }
-      else {
-        if (statMean && adjust) {
-          num = (1.0 - a) * num + x
-          den = (1.0 - a) * den + 1.0
-          num / den
-        } else if (statMean && ignoreNa) {
-          // boolean init flag, NOT a NaN sentinel: a NaN data value
-          // must poison the recurrence exactly like the fold form
-          prev = if (!hasPrev) x else (1.0 - a) * prev + a * x
-          hasPrev = true
-          prev
-        } else if (statMean) {
-          // pandas old_wt recursion (new_wt = alpha)
-          if (!hasPrev) { prev = x; prevOw = 1.0 }
-          else {
-            val ow = (1.0 - a) * prevOw
-            prev = (ow * prev + a * x) / (ow + a)
-            prevOw = 1.0
-          }
-          hasPrev = true
-          prev
-        } else {
-          num = (1.0 - a) * num + x
-          den = (1.0 - a) * den + 1.0
-          num2 = (1.0 - a) * num2 + x * x
-          den2 = (1.0 - a) * (1.0 - a) * den2 + 1.0
-          val biased = num2 / den - (num / den) * (num / den)
-          val v: Any =
-            if (bias) biased
-            else if (den * den - den2 > 0.0)
-              biased * (den * den) / (den * den - den2)
-            else null
-          if (statStd && v != null)
-            math.sqrt(math.max(v.asInstanceOf[Double], 0.0))
-          else v
+      else if (statMean && adjust) {
+        num = (1.0 - a) * num + x
+        den = (1.0 - a) * den + 1.0
+        num / den
+      } else if (statMean && ignoreNa) {
+        // boolean init flag, NOT a NaN sentinel: a NaN data value
+        // must poison the recurrence
+        prev = if (!hasPrev) x else (1.0 - a) * prev + a * x
+        hasPrev = true
+        prev
+      } else if (statMean) {
+        // pandas old_wt recursion (new_wt = alpha)
+        if (!hasPrev) { prev = x; prevOw = 1.0 }
+        else {
+          val ow = (1.0 - a) * prevOw
+          prev = (ow * prev + a * x) / (ow + a)
+          prevOw = 1.0
         }
+        hasPrev = true
+        prev
+      } else {
+        num = (1.0 - a) * num + x
+        den = (1.0 - a) * den + 1.0
+        num2 = (1.0 - a) * num2 + x * x
+        den2 = (1.0 - a) * (1.0 - a) * den2 + 1.0
+        varEmit(num, den, num2, den2, bias, statStd)
       }
   }
 
   /** Per-point PAIRWISE EWM state machine — cov/corr sibling of
     * [[EwmMachine]] with the seven accumulators of [[ewmCov]]
-    * (Σw, Σw², Σwx, Σwy, Σwxy, Σwx², Σwy²), identical update order
-    * so [[ewmCovScalable]] is bit-equal to the fold form. */
+    * (Σw, Σw², Σwx, Σwy, Σwxy, Σwx², Σwy²), behind [[ewmCov]],
+    * [[ewmCovScalable]] and the streaming ewmCovStream. */
   private[graft] final class EwmPairMachine(a: Double, bias: Boolean,
       corr: Boolean, ignoreNa: Boolean) extends Serializable {
     require(a > 0 && a < 1, "alpha in (0,1)")
     var den = 0.0; var den2 = 0.0
     var sx = 0.0; var sy = 0.0; var sxy = 0.0
     var sxx = 0.0; var syy = 0.0
-    def reset(): Unit = {
-      den = 0.0; den2 = 0.0; sx = 0.0; sy = 0.0
-      sxy = 0.0; sxx = 0.0; syy = 0.0
-    }
     def restore(d: Double, d2: Double, x1: Double, y1: Double,
         xy: Double, xx: Double, yy: Double): Unit = {
       den = d; den2 = d2; sx = x1; sy = y1
       sxy = xy; sxx = xx; syy = yy
     }
     private def emit(corrOut: Boolean): Any =
-      if (den > 0.0) {
-        val covB = sxy / den - (sx / den) * (sy / den)
-        val varxB = sxx / den - (sx / den) * (sx / den)
-        val varyB = syy / den - (sy / den) * (sy / den)
-        if (corrOut) {
-          if (varxB * varyB > 0.0) covB / math.sqrt(varxB * varyB)
-          else null
-        } else if (bias) covB
-        else if (den * den - den2 > 0.0)
-          covB * (den * den) / (den * den - den2)
-        else null
-      } else null
+      pairEmit(den, den2, sx, sy, sxy, sxx, syy, bias, corrOut)
     /** Advance the accumulators on one point without emitting. */
     private def advance(incomplete: Boolean, x: Double,
         y: Double): Unit =
@@ -782,8 +886,7 @@ object RollingOps {
       else { advance(incomplete, x, y); emit(corr) }
     /** Advance ONCE, emit BOTH the cov (per `bias`) and the corr —
       * the two statistics share all seven accumulators, so a caller
-      * needing both pays one pass instead of two (bit-equal by
-      * construction: identical advance, identical emit formulas). */
+      * needing both pays one pass instead of two. */
     def stepBoth(incomplete: Boolean, x: Double,
         y: Double): (Any, Any) =
       if (incomplete && ignoreNa) (null, null)
@@ -793,80 +896,12 @@ object RollingOps {
       }
   }
 
-  /** EXACT streaming EWM at scale: repartition by key, secondary-sort
-    * within partitions, one O(n) stateful pass per partition
-    * (`mapPartitions` with group-change detection — constant memory,
-    * no per-group array materialization, no O(n²) fold copying).
-    * Arithmetic is the identical recurrence to [[ewmMean]]/[[ewmVar]],
-    * so results are bit-equal to the fold forms. `stat`: "mean" |
-    * "var" | "std"; var/std use adjust=true weights like [[ewmVar]].
-    * Rows with null values emit null and do not advance the state.
-    *
-    * This is the long-series exact path (the truncated variants trade
-    * a ≤tol error for an ordinary window plan; this one keeps exact
-    * semantics at O(n) streaming cost). */
-  def ewmScalable(df: DataFrame, valueCol: String, orderCol: String,
-      partitionCols: Seq[String], alpha: Double, stat: String = "mean",
-      adjust: Boolean = true, bias: Boolean = false,
-      ignoreNa: Boolean = true,
-      outName: String = "ewm"): DataFrame = {
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    require(Seq("mean", "var", "std").contains(stat), s"stat=$stat")
-    require(partitionCols.nonEmpty, "partitionCols required")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val base = df.select(partitionCols.map(col) :+ col(orderCol) :+
-      col(valueCol).cast("double").as("__v__"): _*)
-    val sorted = base.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols :+ orderCol).map(col): _*)
-    val schema = StructType(sorted.schema.fields.dropRight(1) :+
-      StructField(outName, DoubleType, nullable = true))
-    val nKeys = partitionCols.size
-    val vIdx = nKeys + 1
-    val a = alpha
-    val out = sorted.mapPartitions { it =>
-      var curKey: Array[Any] = null
-      val m = new EwmMachine(a, stat, adjust, bias, ignoreNa)
-      // deep element compare: BinaryType keys are Array[Byte], where
-      // Seq equality would degrade to reference equality and reset
-      // the state on every row
-      def sameKey(r: Row): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < nKeys) {
-          if (!java.util.Objects.deepEquals(curKey(i), r.get(i)))
-            return false
-          i += 1
-        }
-        true
-      }
-      it.map { r =>
-        if (!sameKey(r)) {
-          curKey = Array.tabulate(nKeys)(r.get)
-          m.reset()
-        }
-        val e: Any =
-          m.step(r.isNullAt(vIdx),
-            if (r.isNullAt(vIdx)) 0.0 else r.getDouble(vIdx))
-        val outVals = new Array[Any](vIdx + 1)
-        var i = 0
-        while (i < vIdx) { outVals(i) = r.get(i); i += 1 }
-        outVals(vIdx) = e
-        Row.fromSeq(outVals.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
-    // output is (partitionCols…, orderCol, outName): join back on the
-    // key + order columns if the remaining input columns are needed
-    out
-  }
-
   /** Per-point TIME-DECAYED EWM state machine — the halflife-over-
     * times analogue of [[EwmMachine]]: the decay factor is
     * 0.5^(Δt/halflife) per point instead of a constant (1−α), with
-    * den2 decaying by its square. Identical update order to the
-    * [[ewmMeanTime]]/[[ewmVarTime]] folds (power(0.5, x) is
-    * java.lang.Math.pow in both Spark's Pow expression and here),
-    * so [[ewmTimeScalable]] is bit-equal to the fold forms. */
+    * den2 decaying by its square. Behind [[ewmMeanTime]],
+    * [[ewmVarTime]], [[ewmTimeScalable]] and the streaming
+    * ewmTimeStream. */
   private[graft] final class EwmTimeMachine(halflife: Double,
       stat: String, bias: Boolean) extends Serializable {
     require(halflife > 0, "halflife > 0")
@@ -875,21 +910,15 @@ object RollingOps {
     private val statStd = stat == "std"
     var num = 0.0; var den = 0.0; var num2 = 0.0; var den2 = 0.0
     var pt = 0.0; var hasPt = false
-    def reset(): Unit = {
-      num = 0.0; den = 0.0; num2 = 0.0; den2 = 0.0
-      pt = 0.0; hasPt = false
-    }
     def restore(n: Double, d: Double, n2: Double, d2: Double,
         t: Double, hp: Boolean): Unit = {
       num = n; den = d; num2 = n2; den2 = d2; pt = t; hasPt = hp
     }
-    /** Advance on one VALID point (value and time present — the
-      * fold drops others before the recurrence) and return the
-      * emitted statistic, or null. StrictMath.pow, NOT Math.pow:
-      * Spark's Pow expression evaluates java.lang.StrictMath.pow
-      * (platform-deterministic), and the two differ by 1 ulp on
-      * some inputs — Math.pow here would break bit-equality with
-      * the fold forms. */
+    /** Advance on one VALID point (value and time present) and return
+      * the emitted statistic, or null. StrictMath.pow, NOT Math.pow:
+      * Spark's Pow expression (and so the DuckDB-checked gates'
+      * power()) evaluates java.lang.StrictMath.pow, and the two differ
+      * by 1 ulp on some inputs. */
     def step(t: Double, x: Double): Any = {
       val dec =
         if (!hasPt) 1.0
@@ -900,24 +929,14 @@ object RollingOps {
       den2 = dec * dec * den2 + 1.0
       pt = t; hasPt = true
       if (statMean) num / den
-      else {
-        val biased = num2 / den - (num / den) * (num / den)
-        val v: Any =
-          if (bias) biased
-          else if (den * den - den2 > 0.0)
-            biased * (den * den) / (den * den - den2)
-          else null
-        if (statStd && v != null)
-          math.sqrt(math.max(v.asInstanceOf[Double], 0.0))
-        else v
-      }
+      else varEmit(num, den, num2, den2, bias, statStd)
     }
   }
 
   /** Per-point TIME-DECAYED PAIRWISE EWM state machine — the
-    * cov/corr member of the time family, identical update order to
-    * the [[ewmCovTime]] fold (StrictMath.pow: see
-    * [[EwmTimeMachine]]). */
+    * cov/corr member of the time family, behind [[ewmCovTime]],
+    * [[ewmCovTimeScalable]] and the streaming ewmCovTimeStream
+    * (StrictMath.pow: see [[EwmTimeMachine]]). */
   private[graft] final class EwmTimePairMachine(halflife: Double,
       bias: Boolean, corr: Boolean) extends Serializable {
     require(halflife > 0, "halflife > 0")
@@ -925,18 +944,14 @@ object RollingOps {
     var sx = 0.0; var sy = 0.0; var sxy = 0.0
     var sxx = 0.0; var syy = 0.0
     var pt = 0.0; var hasPt = false
-    def reset(): Unit = {
-      den = 0.0; den2 = 0.0; sx = 0.0; sy = 0.0
-      sxy = 0.0; sxx = 0.0; syy = 0.0; pt = 0.0; hasPt = false
-    }
     def restore(d: Double, d2: Double, x1: Double, y1: Double,
         xy: Double, xx: Double, yy: Double, t: Double,
         hp: Boolean): Unit = {
       den = d; den2 = d2; sx = x1; sy = y1
       sxy = xy; sxx = xx; syy = yy; pt = t; hasPt = hp
     }
-    /** Advance on one COMPLETE point (x, y, t present — the fold
-      * drops others) and return the emitted statistic, or null. */
+    /** Advance on one COMPLETE point (x, y, t present) and return the
+      * emitted statistic, or null. */
     def step(t: Double, x: Double, y: Double): Any = {
       val dec =
         if (!hasPt) 1.0
@@ -949,305 +964,7 @@ object RollingOps {
       sxx = dec * sxx + x * x
       syy = dec * syy + y * y
       pt = t; hasPt = true
-      val covB = sxy / den - (sx / den) * (sy / den)
-      val varxB = sxx / den - (sx / den) * (sx / den)
-      val varyB = syy / den - (sy / den) * (sy / den)
-      if (corr) {
-        if (varxB * varyB > 0.0) covB / math.sqrt(varxB * varyB)
-        else null
-      } else if (bias) covB
-      else if (den * den - den2 > 0.0)
-        covB * (den * den) / (den * den - den2)
-      else null
+      pairEmit(den, den2, sx, sy, sxy, sxx, syy, bias, corr)
     }
-  }
-
-  /** EXACT time-decayed pairwise EWM at scale — the mapPartitions
-    * O(n) path for [[ewmCovTime]] (same regime split as
-    * [[ewmCovScalable]] vs [[ewmCov]]): repartition by key,
-    * secondary-sort by (timeCol, orderCol), one stateful pass via
-    * [[EwmTimePairMachine]], bit-equal to the fold (spec'd +
-    * property-tested). Rows with a missing value or time emit null
-    * and do not advance state. Output:
-    * (partitionCols…, orderCol, outName). */
-  def ewmCovTimeScalable(df: DataFrame, xCol: String, yCol: String,
-      timeCol: String, orderCol: String, partitionCols: Seq[String],
-      halflife: Double, bias: Boolean = false, corr: Boolean = false,
-      outName: String = "ewm_t_cov"): DataFrame = {
-    require(partitionCols.nonEmpty, "partitionCols required")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val base = df.select(partitionCols.map(col) :+ col(orderCol) :+
-      col(timeCol).cast("double").as("__t__") :+
-      col(xCol).cast("double").as("__x__") :+
-      col(yCol).cast("double").as("__y__"): _*)
-    val sorted = base.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions(
-        (partitionCols.map(col) :+ col("__t__") :+ col(orderCol)): _*)
-    val schema = StructType(sorted.schema.fields.dropRight(3) :+
-      StructField(outName, DoubleType, nullable = true))
-    val nKeys = partitionCols.size
-    val tIdx = nKeys + 1
-    val xIdx = nKeys + 2
-    val yIdx = nKeys + 3
-    val h = halflife
-    val out = sorted.mapPartitions { it =>
-      var curKey: Array[Any] = null
-      val m = new EwmTimePairMachine(h, bias, corr)
-      def sameKey(r: Row): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < nKeys) {
-          if (!java.util.Objects.deepEquals(curKey(i), r.get(i)))
-            return false
-          i += 1
-        }
-        true
-      }
-      it.map { r =>
-        if (!sameKey(r)) {
-          curKey = Array.tabulate(nKeys)(r.get)
-          m.reset()
-        }
-        val e: Any =
-          if (r.isNullAt(xIdx) || r.isNullAt(yIdx) ||
-            r.isNullAt(tIdx)) null
-          else m.step(r.getDouble(tIdx), r.getDouble(xIdx),
-            r.getDouble(yIdx))
-        val outVals = new Array[Any](tIdx + 1)
-        var i = 0
-        while (i < nKeys) { outVals(i) = r.get(i); i += 1 }
-        outVals(nKeys) = r.get(nKeys)
-        outVals(tIdx) = e
-        Row.fromSeq(outVals.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
-    out
-  }
-
-  /** EXACT time-decayed EWM at scale: the mapPartitions O(n) path
-    * for [[ewmMeanTime]]/[[ewmVarTime]]/[[ewmStdTime]], whose
-    * collect_list folds are O(n²) in group length (array append per
-    * point) — the same regime split as [[ewmScalable]] vs
-    * [[ewmMean]]. Repartition by key, secondary-sort by
-    * (timeCol, orderCol) — the fold's sort_array order — then one
-    * stateful pass per partition via [[EwmTimeMachine]], bit-equal
-    * to the fold forms (spec'd). Rows with a null value or time
-    * emit null and do not advance the state. Output:
-    * (partitionCols…, orderCol, outName). */
-  def ewmTimeScalable(df: DataFrame, valueCol: String,
-      timeCol: String, orderCol: String, partitionCols: Seq[String],
-      halflife: Double, stat: String = "mean", bias: Boolean = false,
-      outName: String = "ewm_t"): DataFrame = {
-    require(partitionCols.nonEmpty, "partitionCols required")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val base = df.select(partitionCols.map(col) :+ col(orderCol) :+
-      col(timeCol).cast("double").as("__t__") :+
-      col(valueCol).cast("double").as("__v__"): _*)
-    val sorted = base.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions(
-        (partitionCols.map(col) :+ col("__t__") :+ col(orderCol)): _*)
-    val schema = StructType(sorted.schema.fields.dropRight(2) :+
-      StructField(outName, DoubleType, nullable = true))
-    val nKeys = partitionCols.size
-    val tIdx = nKeys + 1
-    val vIdx = nKeys + 2
-    val h = halflife
-    val out = sorted.mapPartitions { it =>
-      var curKey: Array[Any] = null
-      val m = new EwmTimeMachine(h, stat, bias)
-      def sameKey(r: Row): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < nKeys) {
-          if (!java.util.Objects.deepEquals(curKey(i), r.get(i)))
-            return false
-          i += 1
-        }
-        true
-      }
-      it.map { r =>
-        if (!sameKey(r)) {
-          curKey = Array.tabulate(nKeys)(r.get)
-          m.reset()
-        }
-        val e: Any =
-          if (r.isNullAt(vIdx) || r.isNullAt(tIdx)) null
-          else m.step(r.getDouble(tIdx), r.getDouble(vIdx))
-        val outVals = new Array[Any](tIdx + 1)
-        var i = 0
-        while (i < nKeys) { outVals(i) = r.get(i); i += 1 }
-        outVals(nKeys) = r.get(nKeys)
-        outVals(tIdx) = e
-        Row.fromSeq(outVals.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
-    out
-  }
-
-  /** EXACT streaming EWM covariance / correlation at scale — the
-    * pairwise sibling of [[ewmScalable]]: repartition by key,
-    * secondary-sort, one O(n) stateful pass per partition via
-    * [[EwmPairMachine]] (constant memory, no per-group array
-    * materialization — the [[ewmCov]] fold's array append is O(n²)
-    * in group length, so THIS is the long-series path). Identical
-    * update order to the fold, hence bit-equal (spec'd on both
-    * ignore_na variants). Rows where either column is null follow
-    * pairwise-complete semantics: skipped under ignoreNa=true,
-    * decay-and-carry under ignoreNa=false. Output columns:
-    * (partitionCols…, orderCol, outName). */
-  def ewmCovScalable(df: DataFrame, xCol: String, yCol: String,
-      orderCol: String, partitionCols: Seq[String], alpha: Double,
-      bias: Boolean = false, corr: Boolean = false,
-      ignoreNa: Boolean = true,
-      outName: String = "ewm_cov"): DataFrame = {
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    require(partitionCols.nonEmpty, "partitionCols required")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val base = df.select(partitionCols.map(col) :+ col(orderCol) :+
-      col(xCol).cast("double").as("__x__") :+
-      col(yCol).cast("double").as("__y__"): _*)
-    val sorted = base.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols :+ orderCol).map(col): _*)
-    val schema = StructType(sorted.schema.fields.dropRight(2) :+
-      StructField(outName, DoubleType, nullable = true))
-    val nKeys = partitionCols.size
-    val xIdx = nKeys + 1
-    val yIdx = nKeys + 2
-    val a = alpha
-    val out = sorted.mapPartitions { it =>
-      var curKey: Array[Any] = null
-      val m = new EwmPairMachine(a, bias, corr, ignoreNa)
-      def sameKey(r: Row): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < nKeys) {
-          if (!java.util.Objects.deepEquals(curKey(i), r.get(i)))
-            return false
-          i += 1
-        }
-        true
-      }
-      it.map { r =>
-        if (!sameKey(r)) {
-          curKey = Array.tabulate(nKeys)(r.get)
-          m.reset()
-        }
-        val incomplete = r.isNullAt(xIdx) || r.isNullAt(yIdx)
-        val e: Any = m.step(incomplete,
-          if (incomplete) 0.0 else r.getDouble(xIdx),
-          if (incomplete) 0.0 else r.getDouble(yIdx))
-        val outVals = new Array[Any](xIdx + 1)
-        var i = 0
-        while (i < xIdx) { outVals(i) = r.get(i); i += 1 }
-        outVals(xIdx) = e
-        Row.fromSeq(outVals.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
-    out
-  }
-
-  /** pandas ewm().corr() at scale — [[ewmCovScalable]] with the
-    * biased-ratio correlation output. */
-  def ewmCorrScalable(df: DataFrame, xCol: String, yCol: String,
-      orderCol: String, partitionCols: Seq[String], alpha: Double,
-      ignoreNa: Boolean = true,
-      outName: String = "ewm_corr"): DataFrame =
-    ewmCovScalable(df, xCol, yCol, orderCol, partitionCols, alpha,
-      corr = true, ignoreNa = ignoreNa, outName = outName)
-
-  /** ONE-PASS cov + corr at scale (round-11, guide §2.4): both
-    * statistics share the seven [[EwmPairMachine]] accumulators, so
-    * a caller that needs cov AND corr (the q333 shape: previously
-    * two identical repartition+sort passes joined back on the key)
-    * pays a single repartition + secondary sort + O(n) pass. Values
-    * are bit-equal to [[ewmCovScalable]] / [[ewmCorrScalable]] run
-    * separately — identical state advance, identical emit formulas.
-    * Output columns: (partitionCols…, orderCol, covName, corrName). */
-  def ewmCovCorrScalable(df: DataFrame, xCol: String, yCol: String,
-      orderCol: String, partitionCols: Seq[String], alpha: Double,
-      bias: Boolean = false, ignoreNa: Boolean = true,
-      covName: String = "ewm_cov",
-      corrName: String = "ewm_corr"): DataFrame = {
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    require(partitionCols.nonEmpty, "partitionCols required")
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-    val base = df.select(partitionCols.map(col) :+ col(orderCol) :+
-      col(xCol).cast("double").as("__x__") :+
-      col(yCol).cast("double").as("__y__"): _*)
-    val sorted = base.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols :+ orderCol).map(col): _*)
-    val schema = StructType(sorted.schema.fields.dropRight(2) :+
-      StructField(covName, DoubleType, nullable = true) :+
-      StructField(corrName, DoubleType, nullable = true))
-    val nKeys = partitionCols.size
-    val xIdx = nKeys + 1
-    val yIdx = nKeys + 2
-    val a = alpha
-    sorted.mapPartitions { it =>
-      var curKey: Array[Any] = null
-      val m = new EwmPairMachine(a, bias, corr = false, ignoreNa)
-      def sameKey(r: Row): Boolean = {
-        if (curKey == null) return false
-        var i = 0
-        while (i < nKeys) {
-          if (!java.util.Objects.deepEquals(curKey(i), r.get(i)))
-            return false
-          i += 1
-        }
-        true
-      }
-      it.map { r =>
-        if (!sameKey(r)) {
-          curKey = Array.tabulate(nKeys)(r.get)
-          m.reset()
-        }
-        val incomplete = r.isNullAt(xIdx) || r.isNullAt(yIdx)
-        val (cv, cr) = m.stepBoth(incomplete,
-          if (incomplete) 0.0 else r.getDouble(xIdx),
-          if (incomplete) 0.0 else r.getDouble(yIdx))
-        val outVals = new Array[Any](xIdx + 2)
-        var i = 0
-        while (i < xIdx) { outVals(i) = r.get(i); i += 1 }
-        outVals(xIdx) = cv
-        outVals(xIdx + 1) = cr
-        Row.fromSeq(outVals.toIndexedSeq)
-      }
-    }(Encoders.row(schema))
-  }
-
-  /** Scale-path EWM variance: truncated weights like
-    * [[ewmMeanTruncated]] — a fixed-depth lag window instead of the
-    * sequential fold, bounded error tol·max|x|². */
-  def ewmVarTruncated(df: DataFrame, valueCol: String,
-      orderCols: Seq[String], partitionCols: Seq[String], alpha: Double,
-      bias: Boolean = false, tol: Double = 1e-12,
-      outName: String = "ewm_var"): DataFrame = {
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    val k = math.ceil(math.log(tol) / math.log1p(-alpha)).toInt.max(1)
-    val w = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(orderCols.map(col): _*)
-    val v = col(valueCol).cast("double")
-    val terms = (0 until k).map { j =>
-      val wj = math.pow(1.0 - alpha, j)
-      val x = if (j == 0) v else lag(v, j).over(w)
-      (when(x.isNotNull, lit(wj)).otherwise(lit(0.0)),
-        when(x.isNotNull, x * wj).otherwise(lit(0.0)),
-        when(x.isNotNull, x * x * wj).otherwise(lit(0.0)),
-        when(x.isNotNull, lit(wj * wj)).otherwise(lit(0.0)))
-    }
-    val den = terms.map(_._1).reduce(_ + _)
-    val num = terms.map(_._2).reduce(_ + _)
-    val num2 = terms.map(_._3).reduce(_ + _)
-    val den2 = terms.map(_._4).reduce(_ + _)
-    val biased = num2 / den - (num / den) * (num / den)
-    val out =
-      if (bias) biased
-      else when(den * den - den2 > 0.0,
-        biased * (den * den) / (den * den - den2))
-    df.withColumn(outName, when(v.isNotNull, out))
   }
 }

@@ -9,8 +9,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * builders must emit flat n-ary nodes (`concat_ws`, `greatest`,
   * `aggregate`) instead of folding into deep binary trees — depth,
   * not width, is the driver-side scale axis. This spec walks every
-  * gate's ANALYZED plan (sf0.001 — plan shape only, nothing
-  * executed) and bounds the deepest expression tree. The bound is
+  * gate's ANALYZED plan (sf0.001) and bounds the deepest expression
+  * tree. Only the plan is inspected, but building a gate is not free:
+  * about 100 gates run Spark jobs while they are built (a collect of
+  * fitted parameters, quantile bounds or a driver-side model; about
+  * 1075 jobs in all), so most of this spec's time is gate
+  * construction, not the walk. The bound is
   * set from the measured repo-wide maximum plus headroom; a new
   * gate tripping it is almost certainly a nested fold that wants a
   * flat n-ary rewrite, not a raise of the bound. */

@@ -75,8 +75,12 @@ object PropertiesSpec extends Properties("graft") {
     forAll(Gen.listOfN(40, Gen.chooseNum(-500, 500)),
       Gen.chooseNum(1, 9)) { (vals, a10) =>
       val alpha = a10 / 10.0
-      val df = vals.zipWithIndex.map { case (v, i) => ("g", i, v.toDouble) }
-        .toDF("k", "ord", "v")
+      val rows = vals.zipWithIndex.map { case (v, i) => ("g", i, v.toDouble) }
+      val df = rows.toDF("k", "ord", "v")
+      // the driver-side fold: the reference both forms must equal
+      val want = EwmOracle.run(EwmOracle.MeanAdj, alpha,
+        rows.map { case (k, i, v) => EwmOracle.Pt(k, i, Some(v)) })
+        .flatten
       val fold = graft.window.RollingOps
         .ewmMean(df, "v", "ord", Seq("k"), alpha, adjust = true, outName = "e")
         .orderBy("ord").select("e").as[Double].collect().toSeq
@@ -84,7 +88,8 @@ object PropertiesSpec extends Properties("graft") {
         .ewmScalable(df, "v", "ord", Seq("k"), alpha, "mean", true,
           outName = "e")
         .orderBy("ord").select("e").as[Double].collect().toSeq
-      vals.isEmpty || fold == stream // bitwise: identical recurrence
+      // bitwise: identical recurrence
+      vals.isEmpty || (fold == want && stream == want)
     }
 
   property("distinct-value rank sums always total n(n+1)/2") =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.window.RollingOps
+import EwmOracle.Pt
 
 /** Window semantics pinned against pandas-documented formulas
   * (reference src/series/window.rs tests; FIXTURES §B.3). */
@@ -113,20 +114,6 @@ class RollingEwmSpec extends SparkSpecBase {
     out(2).get shouldBe 2.0 +- 1e-9 // 0.5*1 + 0.5*3 — history kept
   }
 
-  test("ewmMeanTruncated matches exact adjust=true EWM within tolerance") {
-    val df = (1 to 60).map(i => ("g", i, math.sin(i * 0.7) * 10 + i))
-      .toDF("k", "ord", "v")
-    val exact = RollingOps.ewmMean(df, "v", "ord", Seq("k"), 0.3,
-      adjust = true, outName = "e")
-      .orderBy("ord").select("e").as[Double].collect()
-    val approxed = RollingOps.ewmMeanTruncated(df, "v", Seq("ord"),
-      Seq("k"), 0.3, outName = "e")
-      .orderBy("ord").select("e").as[Double].collect()
-    exact.zip(approxed).foreach { case (a, b) =>
-      math.abs(a - b) should be < 1e-9
-    }
-  }
-
   test("ewm runs per group independently") {
     val df = Seq(("a", 1, 1.0), ("a", 2, 3.0), ("b", 1, 10.0))
       .toDF("k", "ord", "v")
@@ -188,36 +175,35 @@ class RollingEwmSpec extends SparkSpecBase {
     val xs = (1 to 50).map(i => math.sin(i * 0.9) * 7 + (i % 5))
     // null values interleaved: must emit null and NOT advance state,
     // exactly like the fold's null-skipping join-back
-    val df = (xs.zipWithIndex.map { case (x, i) =>
+    val rows = xs.zipWithIndex.map { case (x, i) =>
         ("a", i, if (i % 7 == 3) None else Some(x)) } ++
       xs.zipWithIndex.take(20).map { case (x, i) =>
-        ("b", i, Some(x * 2)) })
-      .toDF("k", "ord", "v")
+        ("b", i, Some(x * 2)) }
+    val df = rows.toDF("k", "ord", "v")
+    val pts = rows.map { case (k, i, v) => Pt(k, i, v) }
     def col2(d: org.apache.spark.sql.DataFrame, c: String) =
-      d.orderBy("k", "ord").select(c).collect()
-        .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      d.orderBy("k", "ord").select(c).as[Option[Double]].collect().toSeq
     // mean adjust=true and false
     for (adj <- Seq(true, false)) {
-      val fold = col2(RollingOps.ewmMean(df, "v", "ord", Seq("k"), 0.35,
-        adjust = adj, outName = "e"), "e")
-      val stream = col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
-        0.35, stat = "mean", adjust = adj, outName = "e"), "e")
-      stream shouldBe fold // bit-equal: identical recurrence order
+      val want = EwmOracle.run(EwmOracle.meanMode(adj, ignoreNa = true),
+        0.35, pts)
+      col2(RollingOps.ewmMean(df, "v", "ord", Seq("k"), 0.35,
+        adjust = adj, outName = "e"), "e") shouldBe want
+      col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
+        0.35, stat = "mean", adjust = adj, outName = "e"), "e") shouldBe want
     }
     // var and std
-    val foldVar = col2(RollingOps.ewmVar(df, "v", "ord", Seq("k"), 0.35,
-      outName = "e"), "e")
-    val streamVar = col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
-      0.35, stat = "var", outName = "e"), "e")
-    streamVar shouldBe foldVar
-    val streamStd = col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
-      0.35, stat = "std", outName = "e"), "e")
-    streamStd.zip(foldVar).foreach {
-      case (Some(s), Some(v)) => s shouldBe math.sqrt(math.max(v, 0))
-      case (s, v) => s.isEmpty shouldBe v.isEmpty
-    }
+    val wantVar = EwmOracle.run(EwmOracle.Var, 0.35, pts)
+    col2(RollingOps.ewmVar(df, "v", "ord", Seq("k"), 0.35,
+      outName = "e"), "e") shouldBe wantVar
+    col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
+      0.35, stat = "var", outName = "e"), "e") shouldBe wantVar
+    val wantStd = wantVar.map(_.map(v => math.sqrt(math.max(v, 0))))
+    col2(RollingOps.ewmScalable(df, "v", "ord", Seq("k"),
+      0.35, stat = "std", outName = "e"), "e") shouldBe wantStd
+    col2(RollingOps.ewmStd(df, "v", "ord", Seq("k"), 0.35,
+      outName = "e"), "e") shouldBe wantStd
   }
-
   test("rollingCorr/Cov: pandas pairwise semantics") {
     // y = 2x + noise-free within each window of 3 -> corr exactly 1
     val lin = (0 until 10).map(i => (i, i.toDouble, 2.0 * i + 5))
@@ -271,20 +257,6 @@ class RollingEwmSpec extends SparkSpecBase {
       orderCols = Seq("ord")).orderBy("ord")
       .select("rolling_median").collect()
     strict.take(2).foreach(_.isNullAt(0) shouldBe true)
-  }
-
-  test("ewmVarTruncated matches exact ewmVar within tolerance") {
-    val xs = (1 to 60).map(i => math.sin(i * 0.7) * 5 + (i % 7))
-    val df = xs.zipWithIndex.map { case (x, i) => ("g", i, x) }
-      .toDF("k", "ord", "v")
-    val exact = RollingOps.ewmVar(df, "v", "ord", Seq("k"), 0.25,
-      outName = "e").orderBy("ord").select("e").collect()
-    val trunc = RollingOps.ewmVarTruncated(df, "v", Seq("ord"),
-      Seq("k"), 0.25, outName = "e").orderBy("ord").select("e").collect()
-    exact.zip(trunc).foreach { case (a, b) =>
-      if (a.isNullAt(0)) b.isNullAt(0) shouldBe true
-      else math.abs(a.getDouble(0) - b.getDouble(0)) should be < 1e-8
-    }
   }
 
   test("expandingQuantile matches brute-force prefixes") {
@@ -466,31 +438,29 @@ class RollingEwmSpec extends SparkSpecBase {
   test("ewmScalable ignore_na=false is bit-equal to the fold forms " +
       "on a gappy series (mean adjust=true/false, var)") {
     import spark.implicits._
-    val df = Seq((1, Some(3.0)), (2, Option.empty[Double]),
+    val rows = Seq((1, Some(3.0)), (2, Option.empty[Double]),
       (3, Some(5.0)), (4, Option.empty[Double]),
       (5, Option.empty[Double]), (6, Some(1.0)), (7, Some(7.0)))
-      .toDF("ord", "v").withColumn("g", lit(1))
+    val df = rows.toDF("ord", "v").withColumn("g", lit(1))
+    val pts = rows.map { case (i, v) => Pt(1, i, v) }
     def col6(d: org.apache.spark.sql.DataFrame, c: String) =
       d.orderBy("ord").select(c).as[Option[Double]].collect().toSeq
-    // adjust=true mean
-    col6(RollingOps.ewmScalable(df, "v", "ord", Seq("g"), 0.3,
-      stat = "mean", adjust = true, ignoreNa = false, outName = "e"),
-      "e") shouldBe
+    for (adj <- Seq(true, false)) {
+      val want = EwmOracle.run(
+        EwmOracle.meanMode(adj, ignoreNa = false), 0.3, pts)
+      col6(RollingOps.ewmScalable(df, "v", "ord", Seq("g"), 0.3,
+        stat = "mean", adjust = adj, ignoreNa = false, outName = "e"),
+        "e") shouldBe want
       col6(RollingOps.ewmMean(df, "v", "ord", Seq("g"), 0.3,
-        adjust = true, ignoreNa = false, outName = "e"), "e")
-    // adjust=false mean
-    col6(RollingOps.ewmScalable(df, "v", "ord", Seq("g"), 0.3,
-      stat = "mean", adjust = false, ignoreNa = false, outName = "e"),
-      "e") shouldBe
-      col6(RollingOps.ewmMean(df, "v", "ord", Seq("g"), 0.3,
-        adjust = false, ignoreNa = false, outName = "e"), "e")
+        adjust = adj, ignoreNa = false, outName = "e"), "e") shouldBe want
+    }
     // unbiased var
+    val wantVar = EwmOracle.run(EwmOracle.VarKeepNa, 0.3, pts)
     col6(RollingOps.ewmScalable(df, "v", "ord", Seq("g"), 0.3,
-      stat = "var", ignoreNa = false, outName = "e"), "e") shouldBe
-      col6(RollingOps.ewmVar(df, "v", "ord", Seq("g"), 0.3,
-        ignoreNa = false, outName = "e"), "e")
+      stat = "var", ignoreNa = false, outName = "e"), "e") shouldBe wantVar
+    col6(RollingOps.ewmVar(df, "v", "ord", Seq("g"), 0.3,
+      ignoreNa = false, outName = "e"), "e") shouldBe wantVar
   }
-
   test("ewmCovScalable streaming pass is bit-equal to the ewmCov " +
       "fold (cov/corr, bias, both ignore_na variants)") {
     import spark.implicits._
@@ -501,44 +471,45 @@ class RollingEwmSpec extends SparkSpecBase {
       Seq(("a", i, x, y), ("b", i, y, x))
     }
     val df = rows.toDF("k", "ord", "x", "y")
+    val pts = rows.sortBy(r => (r._1, r._2))
+      .map { case (k, i, x, y) => Pt(k, i, x, y) }
     def c(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("k", "ord").select("e").as[Option[Double]]
         .collect().toSeq
-    for (ina <- Seq(true, false)) {
-      // unbiased cov
+    for (ina <- Seq(true, false); (bias, corr) <-
+        Seq((false, false), (true, false), (false, true))) {
+      val want = EwmOracle.run(EwmOracle.covMode(bias, corr, ina), 0.3,
+        pts)
       c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"), 0.3,
-        ignoreNa = ina, outName = "e")) shouldBe
-        c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), 0.3,
-          ignoreNa = ina, outName = "e"))
-      // biased cov
-      c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"), 0.3,
-        bias = true, ignoreNa = ina, outName = "e")) shouldBe
-        c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), 0.3,
-          bias = true, ignoreNa = ina, outName = "e"))
-      // corr
-      c(RollingOps.ewmCorrScalable(df, "x", "y", "ord", Seq("k"), 0.3,
-        ignoreNa = ina, outName = "e")) shouldBe
-        c(RollingOps.ewmCorr(df, "x", "y", "ord", Seq("k"), 0.3,
-          ignoreNa = ina, outName = "e"))
+        bias = bias, corr = corr, ignoreNa = ina,
+        outName = "e")) shouldBe want
+      c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), 0.3,
+        bias = bias, corr = corr, ignoreNa = ina,
+        outName = "e")) shouldBe want
     }
+    // the corr names are ewmCov(corr = true)
+    c(RollingOps.ewmCorrScalable(df, "x", "y", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe EwmOracle.run(EwmOracle.CorrPos, 0.3, pts)
+    c(RollingOps.ewmCorr(df, "x", "y", "ord", Seq("k"), 0.3,
+      ignoreNa = false, outName = "e")) shouldBe
+      EwmOracle.run(EwmOracle.CorrPosKeepNa, 0.3, pts)
   }
-
   test("ewmCov/ewmCorr ignore_na=false with a LEADING pairwise-" +
       "incomplete prefix emit null (not NaN) and stay bit-equal " +
       "to the scalable pass") {
     import spark.implicits._
-    // first pair has a null side: the keepNa fold decays den from 0
-    // to 0, where the biased moments are 0/0 — the guard must emit
-    // null exactly like EwmPairMachine.emit (den > 0) and the
-    // replaced SQL fold's CASE WHEN den > 0
-    val df = Seq(
+    // first pair has a null side: the keepNa recurrence decays den
+    // from 0 to 0, where the biased moments are 0/0 — the guard must
+    // emit null, like the SQL CASE WHEN den > 0 of the oracles
+    val rows = Seq(
       (1, Option.empty[Double], Some(2.0)),
       (2, Some(1.0), Option.empty[Double]),
       (3, Some(4.0), Some(3.0)),
       (4, Some(2.0), Some(5.0)),
       (5, Option.empty[Double], Some(1.0)),
-      (6, Some(6.0), Some(2.0))).toDF("ord", "x", "y")
-      .withColumn("g", lit(1))
+      (6, Some(6.0), Some(2.0)))
+    val df = rows.toDF("ord", "x", "y").withColumn("g", lit(1))
+    val pts = rows.map { case (i, x, y) => Pt(1, i, x, y) }
     def c(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("ord").select("e").as[Option[Double]]
         .collect().toSeq
@@ -548,23 +519,25 @@ class RollingEwmSpec extends SparkSpecBase {
     covB(0) shouldBe None
     covB(1) shouldBe None
     covB.foreach(_.foreach(v => assert(!v.isNaN)))
+    covB shouldBe EwmOracle.run(EwmOracle.CovPosBiasedKeepNa, 0.5, pts)
     covB shouldBe c(RollingOps.ewmCovScalable(df, "x", "y", "ord",
       Seq("g"), 0.5, bias = true, ignoreNa = false, outName = "e"))
-    // corr: same leading prefix, fold == scalable
+    // corr: same leading prefix, fold == scalable == oracle
     val corr = c(RollingOps.ewmCorr(df, "x", "y", "ord", Seq("g"),
       0.5, ignoreNa = false, outName = "e"))
     corr(0) shouldBe None
     corr(1) shouldBe None
     corr.foreach(_.foreach(v => assert(!v.isNaN)))
+    corr shouldBe EwmOracle.run(EwmOracle.CorrPosKeepNa, 0.5, pts)
     corr shouldBe c(RollingOps.ewmCorrScalable(df, "x", "y", "ord",
       Seq("g"), 0.5, ignoreNa = false, outName = "e"))
     // unbiased cov was already guarded by den²−den2 > 0; pin it too
-    c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("g"), 0.5,
-      ignoreNa = false, outName = "e")) shouldBe
-      c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("g"),
-        0.5, ignoreNa = false, outName = "e"))
+    val cov = c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("g"), 0.5,
+      ignoreNa = false, outName = "e"))
+    cov shouldBe EwmOracle.run(EwmOracle.CovPosKeepNa, 0.5, pts)
+    cov shouldBe c(RollingOps.ewmCovScalable(df, "x", "y", "ord",
+      Seq("g"), 0.5, ignoreNa = false, outName = "e"))
   }
-
   test("ewmCovCorrScalable one-pass emits BOTH columns bit-equal " +
       "to the separate scalable ops (both ignore_na variants)") {
     import spark.implicits._
@@ -574,21 +547,28 @@ class RollingEwmSpec extends SparkSpecBase {
       Seq(("a", i, x, y), ("b", i, y, x))
     }
     val df = rows.toDF("k", "ord", "x", "y")
+    val pts = rows.sortBy(r => (r._1, r._2))
+      .map { case (k, i, x, y) => Pt(k, i, x, y) }
     def c(d: org.apache.spark.sql.DataFrame, n: String) =
       d.orderBy("k", "ord").select(n).as[Option[Double]]
         .collect().toSeq
     for (ina <- Seq(true, false)) {
       val both = RollingOps.ewmCovCorrScalable(df, "x", "y", "ord",
         Seq("k"), 0.4, ignoreNa = ina)
-      c(both, "ewm_cov") shouldBe
+      val cov = c(both, "ewm_cov")
+      cov shouldBe EwmOracle.run(
+        EwmOracle.covMode(bias = false, corr = false, ina), 0.4, pts)
+      cov shouldBe
         c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"),
           0.4, ignoreNa = ina, outName = "e"), "e")
-      c(both, "ewm_corr") shouldBe
+      val corr = c(both, "ewm_corr")
+      corr shouldBe EwmOracle.run(
+        EwmOracle.covMode(bias = false, corr = true, ina), 0.4, pts)
+      corr shouldBe
         c(RollingOps.ewmCorrScalable(df, "x", "y", "ord", Seq("k"),
           0.4, ignoreNa = ina, outName = "e"), "e")
     }
   }
-
   test("ewmVarTime reduces to positional ewmVar on a regular grid " +
       "and ewmStdTime is its sqrt") {
     import spark.implicits._
@@ -664,23 +644,27 @@ class RollingEwmSpec extends SparkSpecBase {
       Seq(("a", i.toLong, t, v), ("b", i.toLong, t.map(_ * 2), v))
     }
     val df = rows.toDF("k", "ord", "tm", "v")
+    val pts = rows.sortBy(r => (r._1, r._2))
+      .map { case (k, i, t, v) => Pt(k, i, v, t = t) }
     def c(d: org.apache.spark.sql.DataFrame, col0: String) =
       d.orderBy("k", "ord").select(col0).as[Option[Double]]
         .collect().toSeq
+    val wantMean = EwmOracle.run(EwmOracle.TimeMean, 97.0, pts)
     c(RollingOps.ewmTimeScalable(df, "v", "tm", "ord", Seq("k"),
-      halflife = 97.0, stat = "mean", outName = "e"), "e") shouldBe
-      c(RollingOps.ewmMeanTime(df, "v", "tm", "ord", Seq("k"),
-        halflife = 97.0, outName = "e"), "e")
+      halflife = 97.0, stat = "mean", outName = "e"), "e") shouldBe wantMean
+    c(RollingOps.ewmMeanTime(df, "v", "tm", "ord", Seq("k"),
+      halflife = 97.0, outName = "e"), "e") shouldBe wantMean
+    val wantVar = EwmOracle.run(EwmOracle.TimeVar, 97.0, pts)
     c(RollingOps.ewmTimeScalable(df, "v", "tm", "ord", Seq("k"),
-      halflife = 97.0, stat = "var", outName = "e"), "e") shouldBe
-      c(RollingOps.ewmVarTime(df, "v", "tm", "ord", Seq("k"),
-        halflife = 97.0, outName = "e"), "e")
+      halflife = 97.0, stat = "var", outName = "e"), "e") shouldBe wantVar
+    c(RollingOps.ewmVarTime(df, "v", "tm", "ord", Seq("k"),
+      halflife = 97.0, outName = "e"), "e") shouldBe wantVar
+    val wantStd = wantVar.map(_.map(v => math.sqrt(math.max(v, 0.0))))
     c(RollingOps.ewmTimeScalable(df, "v", "tm", "ord", Seq("k"),
-      halflife = 97.0, stat = "std", outName = "e"), "e") shouldBe
-      c(RollingOps.ewmStdTime(df, "v", "tm", "ord", Seq("k"),
-        halflife = 97.0, outName = "e"), "e")
+      halflife = 97.0, stat = "std", outName = "e"), "e") shouldBe wantStd
+    c(RollingOps.ewmStdTime(df, "v", "tm", "ord", Seq("k"),
+      halflife = 97.0, outName = "e"), "e") shouldBe wantStd
   }
-
   test("ewmVarTime irregular spacing: hand-computed two-step check") {
     import spark.implicits._
     // points (t=0, x=10), (t=600, x=20) with halflife 600:
@@ -714,5 +698,257 @@ class RollingEwmSpec extends SparkSpecBase {
     byOrd(6).isNullAt(byOrd(6).fieldIndex("hampel_filtered")) shouldBe true
     // non-null points unaffected
     byOrd(1).getAs[Double]("hampel_filtered") shouldBe 10.0
+  }
+
+  test("NaN and ±Inf values and times: every EWM mode, join-back " +
+      "and scalable forms, is bit-equal to the oracle") {
+    import spark.implicits._
+    val nan = Double.NaN
+    val inf = Double.PositiveInfinity
+    // per key one poisoning value (NaN, +Inf, -Inf) or time, a null
+    // in each column, and a clean key for contrast
+    val rows = Seq(
+      ("a", 1, Some(1.0), Some(2.0), Some(0.0)),
+      ("a", 2, Some(nan), Some(1.0), Some(10.0)),
+      ("a", 3, Some(4.0), Some(3.0), Some(20.0)),
+      ("a", 4, Some(2.0), Some(5.0), Some(30.0)),
+      ("b", 1, Some(1.0), Some(1.0), Some(0.0)),
+      ("b", 2, Some(inf), Some(2.0), Some(nan)),
+      ("b", 3, Some(4.0), Some(3.0), Some(20.0)),
+      ("c", 1, Option.empty[Double], Some(1.0), Some(5.0)),
+      ("c", 2, Some(-inf), Some(2.0), Some(0.0)),
+      ("c", 3, Some(2.0), Option.empty[Double], Some(inf)),
+      ("c", 4, Some(3.0), Some(5.0), Some(10.0)),
+      ("c", 5, Some(1.0), Some(4.0), Some(-inf)),
+      ("d", 1, Some(2.0), Some(inf), Option.empty[Double]),
+      ("d", 2, Some(3.0), Some(1.0), Some(1.0)),
+      ("d", 3, Some(1.0), Some(2.0), Some(nan)),
+      ("e", 1, Some(3.0), Some(1.0), Some(0.0)),
+      ("e", 2, Some(5.0), Some(2.0), Some(7.0)),
+      ("e", 3, Some(4.0), Some(4.0), Some(9.0)))
+    val df = rows.toDF("k", "ord", "x", "y", "tm")
+    val pts = rows.map { case (k, i, x, y, t) => Pt(k, i, x, y, t) }
+    def c(d: org.apache.spark.sql.DataFrame) = EwmOracle.bits(
+      d.orderBy("k", "ord").select("e").as[Option[Double]].collect()
+        .toSeq)
+    def want(mode: Int, param: Double) =
+      EwmOracle.bits(EwmOracle.run(mode, param, pts))
+    val a = 0.3
+    val h = 10.0
+    for (ina <- Seq(true, false)) {
+      for (adj <- Seq(true, false)) {
+        val w = want(EwmOracle.meanMode(adj, ina), a)
+        withClue(s"mean adjust=$adj ignoreNa=$ina") {
+          c(RollingOps.ewmMean(df, "x", "ord", Seq("k"), a, adj, ina,
+            "e")) shouldBe w
+          c(RollingOps.ewmScalable(df, "x", "ord", Seq("k"), a, "mean",
+            adj, ignoreNa = ina, outName = "e")) shouldBe w
+        }
+      }
+      for (bias <- Seq(true, false)) {
+        val w = want(EwmOracle.varMode(bias, ina), a)
+        withClue(s"var bias=$bias ignoreNa=$ina") {
+          c(RollingOps.ewmVar(df, "x", "ord", Seq("k"), a, bias, ina,
+            "e")) shouldBe w
+          c(RollingOps.ewmScalable(df, "x", "ord", Seq("k"), a, "var",
+            bias = bias, ignoreNa = ina, outName = "e")) shouldBe w
+        }
+      }
+      for ((bias, corr) <- Seq((false, false), (true, false),
+          (false, true))) {
+        val w = want(EwmOracle.covMode(bias, corr, ina), a)
+        withClue(s"cov bias=$bias corr=$corr ignoreNa=$ina") {
+          c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), a, bias,
+            corr, ina, "e")) shouldBe w
+          c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"), a,
+            bias, corr, ina, "e")) shouldBe w
+        }
+      }
+    }
+    withClue("time mean") {
+      val w = want(EwmOracle.TimeMean, h)
+      c(RollingOps.ewmMeanTime(df, "x", "tm", "ord", Seq("k"), h,
+        "e")) shouldBe w
+      c(RollingOps.ewmTimeScalable(df, "x", "tm", "ord", Seq("k"), h,
+        "mean", outName = "e")) shouldBe w
+    }
+    for (bias <- Seq(true, false)) {
+      withClue(s"time var bias=$bias") {
+        val w = want(EwmOracle.timeMode("var", bias, corr = false), h)
+        c(RollingOps.ewmVarTime(df, "x", "tm", "ord", Seq("k"), h, bias,
+          "e")) shouldBe w
+        c(RollingOps.ewmTimeScalable(df, "x", "tm", "ord", Seq("k"), h,
+          "var", bias, "e")) shouldBe w
+      }
+    }
+    for ((bias, corr) <- Seq((false, false), (true, false),
+        (false, true))) {
+      withClue(s"time cov bias=$bias corr=$corr") {
+        val w = want(EwmOracle.timeMode("cov", bias, corr), h)
+        c(RollingOps.ewmCovTime(df, "x", "y", "tm", "ord", Seq("k"), h,
+          bias, corr, "e")) shouldBe w
+        c(RollingOps.ewmCovTimeScalable(df, "x", "y", "tm", "ord",
+          Seq("k"), h, bias, corr, "e")) shouldBe w
+      }
+    }
+  }
+
+  test("EWM with partitionCols = Nil runs the whole frame as one " +
+      "series (pandas Series.ewm)") {
+    import spark.implicits._
+    val rows = (1 to 30).map { i =>
+      (i, if (i % 6 == 2) None else Some(math.sin(i * 0.5) * 3 + i % 4),
+        Some(math.cos(i * 0.3) * 2), Some(i * 3.0 + (i % 3)))
+    }
+    val df = rows.toDF("ord", "x", "y", "tm")
+    val pts = rows.map { case (i, x, y, t) => Pt(null, i, x, y, t) }
+    // the oracle runs a null key like any other; with no key column
+    // every row is in that one series
+    def want(mode: Int, param: Double) =
+      EwmOracle.run(mode, param, pts, joinBack = false)
+    def c(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("ord").select("e").as[Option[Double]].collect().toSeq
+    c(RollingOps.ewmMean(df, "x", "ord", Nil, 0.4, adjust = false,
+      ignoreNa = false, outName = "e")) shouldBe
+      want(EwmOracle.MeanRecKeepNa, 0.4)
+    c(RollingOps.ewmVar(df, "x", "ord", Nil, 0.4, outName = "e")) shouldBe
+      want(EwmOracle.Var, 0.4)
+    c(RollingOps.ewmCorr(df, "x", "y", "ord", Nil, 0.4,
+      outName = "e")) shouldBe want(EwmOracle.CorrPos, 0.4)
+    c(RollingOps.ewmVarTime(df, "x", "tm", "ord", Nil, 5.0,
+      outName = "e")) shouldBe want(EwmOracle.TimeVar, 5.0)
+    c(RollingOps.ewmCovTime(df, "x", "y", "tm", "ord", Nil, 5.0,
+      outName = "e")) shouldBe want(EwmOracle.TimeCov, 5.0)
+    // the scalable forms keep requiring a key
+    an[IllegalArgumentException] should be thrownBy
+      RollingOps.ewmScalable(df, "x", "ord", Nil, 0.4)
+  }
+
+  test("EWM keys: string keys run independently; a null key gets " +
+      "null from the join-back forms and its own series from the " +
+      "scalable forms") {
+    import spark.implicits._
+    val keys = Seq("alpha", "beta", null, "gamma")
+    val rows = for {
+      (k, j) <- keys.zipWithIndex
+      i <- 1 to 12
+    } yield (k, i, Some(math.sin(i * 0.9 + j) * 5 + j),
+      Some(math.cos(i * 0.4 - j) * 3), Some(i * 4.0 + j))
+    val df = rows.toDF("k", "ord", "x", "y", "tm")
+    // Spark sorts a null key first
+    val pts = rows.sortBy(r => (Option(r._1), r._2))
+      .map { case (k, i, x, y, t) => Pt(k, i, x, y, t) }
+    def c(d: org.apache.spark.sql.DataFrame, n: String = "e") =
+      d.orderBy("k", "ord").select(n).as[Option[Double]].collect().toSeq
+    def both(mode: Int, param: Double) =
+      (EwmOracle.run(mode, param, pts),
+        EwmOracle.run(mode, param, pts, joinBack = false))
+    val (meanJ, meanS) = both(EwmOracle.MeanAdj, 0.3)
+    meanJ.take(12).forall(_.isEmpty) shouldBe true
+    meanS.take(12).forall(_.nonEmpty) shouldBe true
+    c(RollingOps.ewmMean(df, "x", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe meanJ
+    c(RollingOps.ewmScalable(df, "x", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe meanS
+    val (covJ, covS) = both(EwmOracle.CovPosKeepNa, 0.3)
+    c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), 0.3,
+      ignoreNa = false, outName = "e")) shouldBe covJ
+    c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"), 0.3,
+      ignoreNa = false, outName = "e")) shouldBe covS
+    val (tJ, tS) = both(EwmOracle.TimeMean, 6.0)
+    c(RollingOps.ewmMeanTime(df, "x", "tm", "ord", Seq("k"), 6.0,
+      outName = "e")) shouldBe tJ
+    c(RollingOps.ewmTimeScalable(df, "x", "tm", "ord", Seq("k"), 6.0,
+      outName = "e")) shouldBe tS
+  }
+
+  test("EWM floating keys: -0.0 and 0.0 are one key, as are NaNs " +
+      "(Spark's partitioning and sort)") {
+    import spark.implicits._
+    // key 0.0 written as -0.0 on every even order, so a pass that
+    // told the two apart would restart the series on every row
+    val keys: Seq[Int => Double] =
+      Seq(i => if (i % 2 == 0) -0.0 else 0.0, _ => 1.5, _ => Double.NaN)
+    val rows = for {
+      (k, j) <- keys.zipWithIndex
+      i <- 1 to 12
+    } yield (k(i), i, Some(math.sin(i * 0.7 + j) * 4 + j),
+      Some(math.cos(i * 0.3 + j) * 2), Some(i * 3.0 + j))
+    val df = rows.toDF("k", "ord", "x", "y", "tm")
+    // the oracle's key: one value for ±0.0, one for every NaN
+    val pts = rows.map { case (k, i, x, y, t) =>
+      Pt(java.lang.Double.doubleToLongBits(k + 0.0), i, x, y, t) }
+    def c(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("k", "ord").select("e").as[Option[Double]].collect().toSeq
+    def both(mode: Int, param: Double) =
+      (EwmOracle.run(mode, param, pts),
+        EwmOracle.run(mode, param, pts, joinBack = false))
+    val (varJ, varS) = both(EwmOracle.varMode(false, true), 0.3)
+    c(RollingOps.ewmVar(df, "x", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe varJ
+    c(RollingOps.ewmScalable(df, "x", "ord", Seq("k"), 0.3, stat = "var",
+      outName = "e")) shouldBe varS
+    val (covJ, covS) = both(EwmOracle.CovPos, 0.3)
+    c(RollingOps.ewmCov(df, "x", "y", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe covJ
+    c(RollingOps.ewmCovScalable(df, "x", "y", "ord", Seq("k"), 0.3,
+      outName = "e")) shouldBe covS
+    val (tJ, tS) = both(EwmOracle.TimeMean, 5.0)
+    c(RollingOps.ewmMeanTime(df, "x", "tm", "ord", Seq("k"), 5.0,
+      outName = "e")) shouldBe tJ
+    c(RollingOps.ewmTimeScalable(df, "x", "tm", "ord", Seq("k"), 5.0,
+      outName = "e")) shouldBe tS
+  }
+
+  test("EWM order ties break by value, then the time family by " +
+      "(time, order, value)") {
+    import spark.implicits._
+    // ord 2 and ord 4 are tied; the join-back forms pair each tied
+    // row with every value emitted at its (key, ord)
+    val rows = Seq((1, 5.0, 3.0), (2, 4.0, 1.0), (2, 1.0, 1.0),
+      (3, 2.0, 0.0), (4, 7.0, 4.0), (4, -3.0, 4.0), (5, 6.0, 6.0))
+    val df = rows.toDF("ord", "x", "tm").withColumn("k", lit("g"))
+    val pts = rows.map { case (i, x, t) => Pt("g", i, Some(x),
+      t = Some(t)) }
+    type R = (Int, Double, Option[Double])
+    def joined(mode: Int, param: Double): Seq[R] = {
+      val em = EwmOracle.emitted(mode, param, pts)
+      pts.flatMap(p => em.collect { case (q, e) if q.ord == p.ord =>
+        (p.ord.toInt, p.x.get, e) })
+    }
+    def scaled(mode: Int, param: Double): Seq[R] =
+      EwmOracle.emitted(mode, param, pts).map { case (p, e) =>
+        (p.ord.toInt, 0.0, e) }
+    def sorted(r: Seq[R]) = r.sortBy(t => (t._1, t._2, t._3))(
+      Ordering.Tuple3(Ordering.Int, Ordering.Double.TotalOrdering,
+        Ordering.Option(Ordering.Double.TotalOrdering)))
+    def c(d: org.apache.spark.sql.DataFrame, withX: Boolean) = sorted(
+      d.select(col("ord"), if (withX) col("x") else lit(0.0), col("e"))
+        .as[(Int, Double, Option[Double])].collect().toSeq)
+    for (mode <- Seq(EwmOracle.MeanAdj, EwmOracle.MeanRec,
+        EwmOracle.Var)) {
+      val (stat, adj) = mode match {
+        case EwmOracle.MeanAdj => ("mean", true)
+        case EwmOracle.MeanRec => ("mean", false)
+        case _ => ("var", true)
+      }
+      val fold =
+        if (stat == "mean") RollingOps.ewmMean(df, "x", "ord", Seq("k"),
+          0.4, adjust = adj, outName = "e")
+        else RollingOps.ewmVar(df, "x", "ord", Seq("k"), 0.4,
+          outName = "e")
+      c(fold, withX = true) shouldBe sorted(joined(mode, 0.4))
+      c(RollingOps.ewmScalable(df, "x", "ord", Seq("k"), 0.4, stat,
+        adj, outName = "e"), withX = false) shouldBe
+        sorted(scaled(mode, 0.4))
+    }
+    // time: tm decreases while ord increases at ord 3; ord 4's two
+    // rows tie on (tm, ord)
+    c(RollingOps.ewmMeanTime(df, "x", "tm", "ord", Seq("k"), 2.0,
+      outName = "e"), withX = true) shouldBe
+      sorted(joined(EwmOracle.TimeMean, 2.0))
+    c(RollingOps.ewmTimeScalable(df, "x", "tm", "ord", Seq("k"), 2.0,
+      stat = "var", outName = "e"), withX = false) shouldBe
+      sorted(scaled(EwmOracle.TimeVar, 2.0))
   }
 }
