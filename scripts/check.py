@@ -33,9 +33,10 @@ def run_verify():
     if not os.path.isdir(CLASSES):
         sys.exit(f"no compiled classes at {CLASSES}: run `sbt compile` "
                  "in this checkout first")
-    cmd = ["java"] + OPENS + [
-        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "-Xmx8g"] + CONFS + ["-cp", CP, "graft.Verify", SF, OUT] + sorted(ONLY)
+    # graft.Verify's session comes from GraftSession, which sets the UI
+    # and time-zone settings; only explicit --conf overrides go here
+    cmd = ["java"] + OPENS + ["-Xmx8g"] + CONFS + [
+        "-cp", CP, "graft.Verify", SF, OUT] + sorted(ONLY)
     env = {"PATH": "/usr/bin:/bin", "SPARK_GRAFT_CPUS": "8"}
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():

@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: prints the executed physical plan of the named
   * `SparkEntry.queries` (all flagship bench queries if none given) so
   * shuffle/broadcast/pushdown shape can be reviewed per SCALE.md.
+  * The session is [[GraftSession.local]], so these are the plans users
+  * run, AQE included (an adaptive plan prints its initial form until
+  * it has executed).
   * Usage: runMain graft.Explain [sfDir] q01_groupby_agg ...
   */
 object Explain {
@@ -13,13 +14,7 @@ object Explain {
       if (args.nonEmpty && args.head.startsWith("/"))
         (args.head, args.tail.toSeq)
       else ("/root/testdata/sf0.01", args.toSeq)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-explain").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val qs = if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted
     qs.foreach { q =>
       println(s"===== $q")

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for the session settings the library depends on, so
-  * user code, the mains, and the specs cannot drift:
+/** The one place a session is configured. `Verify`, `Explain`, the
+  * perfbench harness and the specs' shared test session all build
+  * their session here, so what the specs check is what users and the
+  * benchmark run. The settings the library depends on:
   *
   *  - `spark.sql.legacy.parquet.nanosAsLong` — required to read
   *    TIMESTAMP(NANOS) parquet (`Tables.load` rebuilds micros);

@@ -22,7 +22,7 @@ object Tables {
     * driver generated it:
     *  - Parquet TIMESTAMP(NANOS) is rejected by Spark's vectorized
     *    reader; with spark.sql.legacy.parquet.nanosAsLong=true (set in
-    *    Verify/Bench sessions) it surfaces as epoch-nanos LongType and
+    *    `GraftSession`) it surfaces as epoch-nanos LongType and
     *    is truncated to micros (integer div — exact on long).
     *  - Parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) surfaces as
     *    TimestampNTZType, which rejects unix_micros/numeric casts; the

@@ -46,9 +46,12 @@ object StrOps {
 
   def len(c: Column): Column = length(c)
 
-  def strip(c: Column): Column = trim(c)
-  def lstrip(c: Column): Column = ltrim(c)
-  def rstrip(c: Column): Column = rtrim(c)
+  /** str.strip/lstrip/rstrip drop every leading/trailing whitespace
+    * character (`\s`: space, tab, newlines, form feed); Spark's
+    * trim/ltrim/rtrim drop spaces only. */
+  def strip(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
+  def lstrip(c: Column): Column = regexp_replace(c, "^\\s+", "")
+  def rstrip(c: Column): Column = regexp_replace(c, "\\s+$", "")
 
   def extract(c: Column, pat: String, group: Int = 1): Column =
     regexp_extract(c, pat, group)

@@ -19,12 +19,6 @@ object TextFunctions {
   /** whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword proxy count: word-pieces + digits + punctuation
-    * as separate tokens (regex segmentation). */
-  def regexTokenCount(text: Column): Column =
-    size(filter(split(text, "[^A-Za-z0-9]+|(?<=[a-z])(?=[A-Z])"),
-      t => length(t) > 0))
-
   /** distinct sorted words — basis for fingerprints / jaccard. */
   def wordSet(text: Column): Column =
     array_sort(array_distinct(tokens(lower(text))))
@@ -98,10 +92,6 @@ object TextFunctions {
       .otherwise(0.5)
     round((lenScore + wordLenScore + alphaRatio) / 3.0, 6)
   }
-
-  /** 64-bit rolling (polynomial) hash of the text — cheap content
-    * fingerprint; xxhash64 is Spark-native and codegen'd. */
-  def contentHash(text: Column): Column = xxhash64(text)
 
   /** PII redaction for training corpora: replace emails, IPv4
     * addresses and phone-shaped numbers with typed placeholders.

@@ -371,8 +371,9 @@ object Dedup {
             // table — map-side partial agg, no sort — with the hot-
             // bucket cap as a count filter. The first version ran
             // capBuckets (a window SORT) over the full corpus band
-            // table per batch; the DedupStreamBench probe showed
-            // that O(corpus)-per-batch term immediately.
+            // table per batch, an O(corpus)-per-batch term (SCALE.md,
+            // "streaming incremental corpus dedup — the deployment
+            // capstone").
             val c = pb.groupBy("band", "bucket")
               .agg(count(lit(1)).as("__bc__"))
               .filter(col("__bc__") <= maxBucket)
@@ -707,52 +708,18 @@ object Dedup {
     * length ≥ w + k − 1 contributes at least one IDENTICAL selected
     * fingerprint to both — so a plain fp-keyed equi-join finds all
     * long shared passages (plagiarism / quote / near-dup spans)
-    * without an all-pairs comparison.
+    * without an all-pairs comparison. Emits (doc_id, pos, fp).
     *
-    * Scale/determinism: the whole selection is a per-document pure
-    * map (SQL `transform` lambdas — no shuffle until the final
-    * explode). The k-gram hash is base-31 polynomial with a 40-bit
-    * mask applied EVERY step (so the accumulator never exceeds 2⁴⁶
-    * — ANSI-overflow-safe in Spark, plain BIGINT in the oracle, and
-    * bit-identical in both); 40-bit values keep the birthday
+    * The k-gram hash is base-31 polynomial over code points with a
+    * 40-bit mask applied EVERY step (plain BIGINT in the DuckDB
+    * oracle, bit-identical); 40-bit values keep the birthday
     * collision odds negligible at corpus scale while the
     * min-ordering runs over nonnegative values. Documents shorter
-    * than w + k − 1 produce no fingerprints (filtered). */
-  def winnowingFingerprints(df: DataFrame, idCol: String,
-      textCol: String, k: Int = 8, w: Int = 4): DataFrame = {
-    require(k >= 2 && k <= 64, s"k in [2,64], got $k")
-    require(w >= 1 && w <= 64, s"w in [1,64], got $w")
-    val mask = (1L << 40) - 1
-    val hs = expr(
-      s"""transform(sequence(1, length(__t__) - $k + 1),
-         |  i -> aggregate(sequence(i, i + $k - 1),
-         |    549755813881L,
-         |    (acc, j) -> (31 * acc + ascii(substring(__t__, j, 1)))
-         |      & ${mask}L))""".stripMargin)
-    val fps = expr(
-      s"""transform(sequence(1, size(__hs__) - $w + 1), p -> struct(
-         |  array_min(slice(__hs__, p, $w)) AS fp,
-         |  p + array_max(filter(sequence(0, ${w - 1}),
-         |    q -> element_at(__hs__, p + q) =
-         |      array_min(slice(__hs__, p, $w)))) AS pos))""".stripMargin)
-    df.select(col(idCol).as("doc_id"), col(textCol).as("__t__"))
-      .filter(col("__t__").isNotNull &&
-        length(col("__t__")) >= k + w - 1)
-      .select(col("doc_id"), hs.as("__hs__"))
-      .select(col("doc_id"),
-        explode(array_distinct(fps)).as("f"))
-      .select(col("doc_id"), col("f.pos").cast("long").as("pos"),
-        col("f.fp").as("fp"))
-  }
-
-  /** The native-expression fast path of [[winnowingFingerprints]]:
-    * same (doc_id, pos, fp) output, BIT-IDENTICAL on every input
-    * (both operate on code points with the identical masked
-    * recurrence and rightmost-min rule — property-spec'd), but the
+    * than w + k − 1 produce no fingerprints (filtered). The
     * per-document kernel is a true O(len) rolling hash + monotonic
-    * deque inside whole-stage codegen instead of O(len·k)
-    * interpreted SQL lambdas. Use this form in production; the
-    * lambda form exists as the engine-portable oracle twin. */
+    * deque inside whole-stage codegen (`WinnowFingerprints`); the
+    * O(len·k) SQL-lambda form the oracle replays is the test oracle
+    * `DedupOracle.winnowingFingerprints`, bit-equal on every input. */
   def winnowingFingerprintsFast(df: DataFrame, idCol: String,
       textCol: String, k: Int = 8, w: Int = 4): DataFrame = {
     df.select(col(idCol).as("doc_id"), col(textCol).as("__t__"))
@@ -825,76 +792,9 @@ object Dedup {
       (lit(1.0) - miss >= 0.5).as("above_half"))
   }
 
-  /** Content-defined chunking (the storage-dedup primitive — FastCDC
-    * /LBFS family): boundaries fall where the k-gram rolling hash ≡ 0
-    * (mod 2^b), so an insertion early in a document shifts offsets
-    * but the boundary positions RE-SYNCHRONIZE at the next content
-    * match — unlike fixed-size chunking, which invalidates every
-    * later chunk (spec'd). Hash is the repo's base-31 masked
-    * polynomial (q414 convention: 40-bit mask EVERY step,
-    * ANSI-overflow-safe, plain BIGINT in the oracle). A boundary at
-    * gram start i cuts AFTER character i+k−1; the document end is
-    * always a cut. Docs shorter than k yield one whole-doc chunk.
-    * Emits (doc_id, chunk_idx, chunk_start, chunk_len, chunk_md5) —
-    * pure per-doc map, no shuffle. Average chunk ≈ 2^b chars. */
-  def cdcChunks(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, modBits: Int = 6, maxLen: Int = 256): DataFrame = {
-    require(k >= 2 && k <= 64, s"k in [2,64], got $k")
-    require(modBits >= 1 && modBits <= 20,
-      s"modBits in [1,20], got $modBits")
-    require(maxLen >= (1 << modBits),
-      s"maxLen >= 2^modBits (got $maxLen)")
-    val mask = (1L << 40) - 1
-    val m = 1L << modBits
-    // sequence(1, n) is DESCENDING for n < 1 — guard short docs
-    val hs = expr(
-      s"""case when length(__t__) >= $k then
-         |  transform(sequence(1, length(__t__) - $k + 1),
-         |    i -> aggregate(sequence(i, i + $k - 1),
-         |      549755813881L,
-         |      (acc, j) -> (31 * acc + ascii(substring(__t__, j, 1)))
-         |        & ${mask}L))
-         |else cast(array() as array<bigint>) end""".stripMargin)
-    val cutEnds = expr(
-      s"""case when size(__hs__) = 0
-         |  then cast(array() as array<bigint>)
-         |  else transform(filter(sequence(1, size(__hs__)),
-         |      i -> element_at(__hs__, i) % ${m}L = 0),
-         |    i -> cast(i + $k - 1 as bigint)) end""".stripMargin)
-    val allCuts = expr(
-      s"""case when coalesce(try_element_at(__ce__, -1), -1L)
-         |       != length(__t__)
-         |  then concat(__ce__, array(cast(length(__t__) as bigint)))
-         |  else __ce__ end""".stripMargin)
-    // forced max-chunk cuts: between consecutive natural cuts a < b,
-    // insert a+maxLen, a+2·maxLen, … — pure gap arithmetic on the
-    // natural-cut set (CDC on exactly-periodic text can otherwise go
-    // hundreds of chars without a boundary)
-    def prevCut = "case when j = 1 then 0L " +
-      "else element_at(__ac0__, j - 1) end"
-    val expanded = expr(
-      s"""flatten(transform(sequence(1, size(__ac0__)), j ->
-         |  concat(
-         |    case when (element_at(__ac0__, j) - ($prevCut) - 1L)
-         |        >= ${maxLen}L
-         |      then transform(sequence(1,
-         |          cast((element_at(__ac0__, j) - ($prevCut) - 1L)
-         |            div ${maxLen}L as int)),
-         |        f -> ($prevCut) + cast(f as bigint) * ${maxLen}L)
-         |      else cast(array() as array<bigint>) end,
-         |    array(element_at(__ac0__, j)))))""".stripMargin)
-    df.select(col(idCol).as("doc_id"), col(textCol).as("__t__"))
-      .filter(col("__t__").isNotNull && length(col("__t__")) >= 1)
-      .withColumn("__hs__", hs)
-      .withColumn("__ce__", cutEnds)
-      .withColumn("__ac0__", allCuts)
-      .withColumn("__ac__", expanded)
-      .transform(emitCdcChunks)
-  }
-
-  /** Shared chunk-emit tail of the portable and fast CDC paths:
+  /** Chunk-emit tail of [[cdcChunksFast]] and of its test oracle:
     * expects (doc_id, __t__, __ac__=ascending cut ends). */
-  private def emitCdcChunks(df: DataFrame): DataFrame = {
+  private[graft] def emitCdcChunks(df: DataFrame): DataFrame = {
     val chunks = expr(
       """transform(sequence(1, size(__ac__)), j -> struct(
         |  cast(j as bigint) as idx,
@@ -911,13 +811,23 @@ object Dedup {
           .as("chunk_md5"))
   }
 
-  /** The native-expression fast path of [[cdcChunks]]: identical
-    * output on every input (the kernel runs the same masked
-    * recurrence over code points via the WinnowFingerprints O(n)
-    * rolling invariant — property-spec'd bit-equal), but boundary
-    * detection is one codegen'd expression instead of O(len·k)
-    * interpreted SQL lambdas. Use this form in production; the
-    * lambda form is the engine-portable oracle twin. */
+  /** Content-defined chunking (the storage-dedup primitive — FastCDC
+    * /LBFS family): boundaries fall where the k-gram rolling hash ≡ 0
+    * (mod 2^b), so an insertion early in a document shifts offsets
+    * but the boundary positions RE-SYNCHRONIZE at the next content
+    * match — unlike fixed-size chunking, which invalidates every
+    * later chunk (spec'd). Hash is the repo's base-31 masked
+    * polynomial (q414 convention: 40-bit mask EVERY step,
+    * ANSI-overflow-safe, plain BIGINT in the oracle). A boundary at
+    * gram start i cuts AFTER character i+k−1; the document end is
+    * always a cut, and a gap of `maxLen` characters without one is
+    * cut every `maxLen`. Docs shorter than k yield one whole-doc
+    * chunk. Emits (doc_id, chunk_idx, chunk_start, chunk_len,
+    * chunk_md5) — pure per-doc map, no shuffle. Average chunk ≈ 2^b
+    * chars. Boundary detection is one codegen'd expression
+    * (`CdcCuts`); the O(len·k) SQL-lambda chain the DuckDB oracle
+    * replays is the test oracle `DedupOracle.cdcChunks`, bit-equal
+    * on every input. */
   def cdcChunksFast(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, modBits: Int = 6, maxLen: Int = 256): DataFrame = {
     require(k >= 2 && k <= 64, s"k in [2,64], got $k")
@@ -931,7 +841,7 @@ object Dedup {
       .transform(emitCdcChunks)
   }
 
-  /** Cross-corpus duplicate-chunk report over [[cdcChunks]]: every
+  /** Cross-corpus duplicate-chunk report over [[cdcChunksFast]]: every
     * chunk content stored more than once, with copy count, distinct
     * holding docs, and the bytes a content-addressed store saves.
     * ONE groupBy on the chunk hash — the dedup-ratio estimator for
@@ -989,7 +899,7 @@ object Dedup {
           .as("chunk_jaccard"))
   }
 
-  /** Shared-passage candidate pairs from [[winnowingFingerprints]]:
+  /** Shared-passage candidate pairs from [[winnowingFingerprintsFast]]:
     * documents sharing ≥ `minShared` selected fingerprints, with
     * fingerprint-set Jaccard. The postings self-join is keyed on the
     * fingerprint; `maxDf` drops boilerplate fingerprints present in

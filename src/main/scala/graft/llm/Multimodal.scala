@@ -321,7 +321,8 @@ object Multimodal {
     * one untouched shared band, so banding loses no qualifying
     * pair. Corpus hot buckets (flat-color corpora) are dropped by a
     * COUNT-FILTER aggregate — map-side partial agg, no window sort
-    * over the growing corpus (the DedupStreamBench lesson). Emits
+    * over the growing corpus (SCALE.md, "streaming incremental corpus
+    * dedup — the deployment capstone"). Emits
     * (new id, corpus id, both hashes, hamming). */
   def imageNearDupAgainst(newDf: DataFrame, corpus: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int = 7,

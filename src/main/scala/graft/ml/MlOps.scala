@@ -175,23 +175,6 @@ object MlOps {
       col("prediction"): _*)
   }
 
-  /** Generalized linear model via MLlib GeneralizedLinearRegression
-    * (Poisson/gamma/binomial/gaussian families — the statsmodels GLM
-    * surface the reference's linear-model stack lacks). Distributed
-    * IRLS: each iteration is one aggregate of the weighted normal
-    * equations over the cluster. Returns the input plus `prediction`
-    * (mean response scale); coefficients via [[glmSummary]]. */
-  def glmMl(df: DataFrame, features: Seq[String], label: String,
-      family: String = "poisson", link: String = "log",
-      maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.ml.regression.GeneralizedLinearRegression
-    val assembled = assemble(df, features)
-    val m = new GeneralizedLinearRegression().setLabelCol(label)
-      .setFeaturesCol("features").setFamily(family).setLink(link)
-      .setMaxIter(maxIter).fit(assembled)
-    m.transform(assembled).drop("features")
-  }
-
   /** Accelerated-failure-time survival regression (MLlib
     * AFTSurvivalRegression — the parametric survival model completing
     * the KM/Nelson-Aalen/log-rank family): log-duration ~ features

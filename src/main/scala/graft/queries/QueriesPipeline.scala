@@ -120,7 +120,7 @@ object QueriesPipeline {
        |  FROM documents d JOIN urls u USING (doc_id))""".stripMargin
   }
 
-  /** Shared CTE chain replaying Dedup.cdcChunks (k=8, mod 64): the
+  /** Shared CTE chain replaying Dedup.cdcChunksFast (k=8, mod 64): the
     * base-31 masked rolling hash, boundary cuts, and per-chunk
     * (idx, start, end) structs. Gates append their own final
     * SELECT. */

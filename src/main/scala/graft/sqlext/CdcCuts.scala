@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: content-defined chunk CUT positions
-  * (FastCDC/LBFS family — the codegen fast path of
-  * `graft.llm.Dedup.cdcChunks`, the same relationship
+  * (FastCDC/LBFS family — the kernel of
+  * `graft.llm.Dedup.cdcChunksFast`; the portable SQL chain is the
+  * test oracle `DedupOracle.cdcChunks`, the same relationship
   * WinnowFingerprints has to the portable winnowing chain).
   *
   * Semantics are BIT-EQUAL to the portable SQL expression chain (the

@@ -9,8 +9,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for winnowing fingerprint selection
   * (Schleimer, Wilkerson & Aiken 2003) — the O(len) scale path for
-  * [[graft.llm.Dedup.winnowingFingerprints]]'s O(len·k) SQL-lambda
-  * form, bit-identical to it (and therefore to the DuckDB oracle)
+  * [[graft.llm.Dedup.winnowingFingerprintsFast]], bit-identical to
+  * the O(len·k) SQL-lambda form (the test oracle
+  * `DedupOracle.winnowingFingerprints`) and to the DuckDB oracle
   * on every input:
   *
   *  - k-gram hashes over UNICODE CODE POINTS (matching SQL

@@ -40,9 +40,6 @@ object Distributions {
 
   def normalCdf(x: Double): Double = 0.5 * (1.0 + erf(x / math.sqrt(2.0)))
 
-  def normalPdf(x: Double): Double =
-    math.exp(-0.5 * x * x) / math.sqrt(2.0 * math.Pi)
-
   /** Column form of [[normalCdf]] — IDENTICAL operation order to the
     * scalar form so Spark and an oracle engine running the same
     * arithmetic produce the same doubles. */

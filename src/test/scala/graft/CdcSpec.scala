@@ -13,7 +13,7 @@ class CdcSpec extends SparkSpecBase {
   test("chunks partition the document exactly: contiguous starts, " +
       "lengths sum to the text length") {
     val df = Seq((1L, longText), (2L, "tiny"), (3L, "x")).toDF("id", "t")
-    val ch = Dedup.cdcChunks(df, "id", "t")
+    val ch = DedupOracle.cdcChunks(df, "id", "t")
       .orderBy("doc_id", "chunk_idx").collect()
     val byDoc = ch.groupBy(_.getLong(0))
     for ((id, rows) <- byDoc) {
@@ -36,7 +36,7 @@ class CdcSpec extends SparkSpecBase {
   test("chunk hashes identify content: reconstructing each chunk's " +
       "substring re-hashes to chunk_md5") {
     val df = Seq((1L, longText)).toDF("id", "t")
-    val ok = Dedup.cdcChunks(df, "id", "t")
+    val ok = DedupOracle.cdcChunks(df, "id", "t")
       .withColumn("re", md5(expr(
         "substring('" + longText + "', cast(chunk_start as int), " +
           "cast(chunk_len as int))")))
@@ -49,7 +49,7 @@ class CdcSpec extends SparkSpecBase {
       "(fixed-size chunking would lose everything after the edit)") {
     val edited = longText.substring(0, 5) + "Z" + longText.substring(5)
     val df = Seq((1L, longText), (2L, edited)).toDF("id", "t")
-    val ch = Dedup.cdcChunks(df, "id", "t").collect()
+    val ch = DedupOracle.cdcChunks(df, "id", "t").collect()
     val orig = ch.filter(_.getLong(0) == 1L).map(_.getString(4)).toSeq
     val edit = ch.filter(_.getLong(0) == 2L).map(_.getString(4)).toSet
     val shared = orig.count(edit.contains)
@@ -76,7 +76,7 @@ class CdcSpec extends SparkSpecBase {
       (i.toLong, (0 until len)
         .map(_ => alphabet(rng.nextInt(alphabet.length))).mkString)
     }.filter(_._2.nonEmpty).toDF("id", "t")
-    val slow = Dedup.cdcChunks(docs, "id", "t").collect()
+    val slow = DedupOracle.cdcChunks(docs, "id", "t").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getString(4))).toSet
     val fast = Dedup.cdcChunksFast(docs, "id", "t").collect()

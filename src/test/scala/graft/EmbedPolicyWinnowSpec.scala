@@ -99,7 +99,7 @@ class EmbedPolicyWinnowSpec extends SparkSpecBase {
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"))
       .toDF("doc_id", "text")
-    val got = Dedup.winnowingFingerprints(docs, "doc_id", "text",
+    val got = DedupOracle.winnowingFingerprints(docs, "doc_id", "text",
         k = 8, w = 4)
       .collect()
       .groupBy(_.getLong(0))
@@ -119,7 +119,7 @@ class EmbedPolicyWinnowSpec extends SparkSpecBase {
       (1L, "alpha alpha " + shared + " tail one xxxxx"),
       (2L, "completely different head " + shared + " yyy"))
       .toDF("doc_id", "text")
-    val fps = Dedup.winnowingFingerprints(docs, "doc_id", "text",
+    val fps = DedupOracle.winnowingFingerprints(docs, "doc_id", "text",
       k = 8, w = 4)
     val j = fps.filter(col("doc_id") === 1L).select("fp")
       .intersect(fps.filter(col("doc_id") === 2L).select("fp"))
@@ -206,7 +206,7 @@ class EmbedPolicyWinnowSpec extends SparkSpecBase {
       (5L, "日本語のテキストでも同一のコードポイント領域で一致する"))
       .toDF("doc_id", "text")
     for ((k, w) <- Seq((8, 4), (5, 3), (2, 1), (4, 8))) {
-      val slow = Dedup.winnowingFingerprints(docs, "doc_id", "text",
+      val slow = DedupOracle.winnowingFingerprints(docs, "doc_id", "text",
         k, w).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val fast = Dedup.winnowingFingerprintsFast(docs, "doc_id",
@@ -228,7 +228,7 @@ class EmbedPolicyWinnowSpec extends SparkSpecBase {
   test("winnowing: too-short documents yield no fingerprints") {
     val docs = Seq((1L, "tiny"), (2L, "exactly11ch"))
       .toDF("doc_id", "text")
-    Dedup.winnowingFingerprints(docs, "doc_id", "text", k = 8, w = 4)
+    DedupOracle.winnowingFingerprints(docs, "doc_id", "text", k = 8, w = 4)
       .groupBy("doc_id").count().collect()
       .map(_.getLong(0)).toSet shouldBe Set(2L)
   }

@@ -22,6 +22,21 @@ class FunctionsSpec extends SparkSpecBase {
     r(1).toSeq shouldBe Seq("Abc", "Abc", "abc", true, false, true, 0, "ABC")
     r(2).toSeq shouldBe Seq("A1b2", "A1b2", "A1B2", false, false, true,
       2, "a1b2")
+    // the pandas-named aliases; str.strip/lstrip/rstrip strip every
+    // whitespace character, not only spaces
+    val ws = Seq("hello world", "ABC", "a1b2", "  pad  ", "\tx y\n",
+      " \t\n").toDF("s")
+    ws.select(StrOps.startswith($"s", "a"), StrOps.endswith($"s", "d"),
+      StrOps.strip($"s"), StrOps.lstrip($"s"), StrOps.rstrip($"s"),
+      StrOps.isspace($"s"), StrOps.islower($"s"), StrOps.isupper($"s"))
+      .collect().map(_.toSeq).toSeq shouldBe Seq(
+      Seq(false, true, "hello world", "hello world", "hello world",
+        false, true, false),
+      Seq(false, false, "ABC", "ABC", "ABC", false, false, true),
+      Seq(true, false, "a1b2", "a1b2", "a1b2", false, true, false),
+      Seq(false, false, "pad", "pad  ", "  pad", false, true, false),
+      Seq(false, false, "x y", "x y\n", "\tx y", false, true, false),
+      Seq(false, false, "", "", "", true, false, false))
   }
 
   test("pad left/right/both; longer strings pass through untruncated") {
@@ -51,6 +66,19 @@ class FunctionsSpec extends SparkSpecBase {
       DtOps.roundTo($"t", "hour").cast("string")).head()
     r.toSeq shouldBe Seq(2024, 1, 3, false, 29, true,
       "2024-02-29 00:00:00", "2024-02-29 14:00:00")
+    // arithmetic from a leap day clamps to the month's end, as pandas'
+    // DateOffset does; the session time zone is UTC
+    df.select(
+      DtOps.addDays($"t", 1).cast("string"),
+      DtOps.addHours($"t", 11).cast("string"),
+      DtOps.addMonths($"t", 1).cast("string"),
+      DtOps.addYears($"t", 1).cast("string"),
+      DtOps.epochSeconds($"t"),
+      DtOps.tzConvert($"t", "America/New_York").cast("string"),
+      DtOps.tzLocalize($"t", "America/New_York").cast("string"))
+      .head().toSeq shouldBe Seq("2024-03-01", "2024-03-01 00:45:30",
+      "2024-03-29", "2025-02-28", 1709214330L, "2024-02-29 08:45:30",
+      "2024-02-29 18:45:30")
   }
 
   test("businessDayCount counts Mon-Fri between dates") {
@@ -150,6 +178,10 @@ class FunctionsSpec extends SparkSpecBase {
       "total" -> sum($"v"), "n" -> count(lit(1)), "avg_v" -> avg($"v"))
     out.columns shouldBe Array("k", "total", "n", "avg_v")
     out.filter($"k" === "a").head().toSeq shouldBe Seq("a", 4.0, 2L, 2.0)
+    // population skewness and excess kurtosis of 1, 3, 5: deviations
+    // -2, 0, 2 give m3 = 0 and m4 / m2² = (32/3) / (8/3)² = 1.5
+    graft.stats.StatsOps.skewKurt(df, "v").head().toSeq shouldBe
+      Seq(0.0, -1.5)
   }
 
   test("betweenTime selects inclusive time-of-day, wraps midnight") {

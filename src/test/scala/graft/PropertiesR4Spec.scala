@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.llm.CorpusOps
 import graft.ml.{MlOps, ModelSelection}
@@ -16,7 +16,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
   import org.apache.spark.sql.functions._
 
   property("chunkDocs covers every token contiguously, no gaps") =
-    forAll(Gen.chooseNum(1, 120), Gen.chooseNum(2, 16),
+    forAllNoShrink(Gen.chooseNum(1, 120), Gen.chooseNum(2, 16),
       Gen.chooseNum(0, 8)) { (n, ct, ov0) =>
       val ov = math.min(ov0, ct - 1)
       val text = (1 to n).map(i => s"t$i").mkString(" ")
@@ -36,7 +36,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("foldOf is deterministic and lands in [0, k)") =
-    forAll(Gen.listOfN(40, Gen.alphaNumStr.suchThat(_.nonEmpty)),
+    forAllNoShrink(Gen.listOfN(40, Gen.alphaNumStr.suchThat(_.nonEmpty)),
       Gen.chooseNum(2, 10)) { (keys, k) =>
       val df = keys.distinct.toDF("key")
       val folds = df.select(ModelSelection.foldOf(col("key"), k, "s")
@@ -47,7 +47,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("trimmedMean lies within [min, max] and k = floor(frac*n)") =
-    forAll(Gen.listOfN(30, Gen.chooseNum(-500L, 500L)),
+    forAllNoShrink(Gen.listOfN(30, Gen.chooseNum(-500L, 500L)),
       Gen.chooseNum(0.0, 0.45)) { (vs, frac) =>
       val r = StatsOps.trimmedMean(vs.toDF("v"), "v", frac).collect()(0)
       val tm = r.getAs[Double]("trimmed_mean")
@@ -57,7 +57,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("jsonNormalize inverts to_json(struct) exactly") =
-    forAll(Gen.listOfN(15, for {
+    forAllNoShrink(Gen.listOfN(15, for {
       a <- Gen.chooseNum(-1000L, 1000L)
       c <- Gen.alphaNumStr.map(_.take(8))
       e <- Gen.chooseNum(-100, 100).map(_ / 4.0)
@@ -80,7 +80,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("betweenTime range and its complement partition the rows") =
-    forAll(Gen.listOfN(25, Gen.chooseNum(0, 86399)),
+    forAllNoShrink(Gen.listOfN(25, Gen.chooseNum(0, 86399)),
       Gen.chooseNum(0, 86398), Gen.chooseNum(0, 86398)) {
       (secsOfDay, s0, e0) =>
       val fmt = (s: Int) => f"${s / 3600}%02d:${s % 3600 / 60}%02d:${s % 60}%02d"
@@ -102,7 +102,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("imputeByGroup preserves rows and leaves no nulls behind") =
-    forAll(Gen.listOfN(30, for {
+    forAllNoShrink(Gen.listOfN(30, for {
       k <- Gen.oneOf("a", "b", "c")
       v <- Gen.option(Gen.chooseNum(-100L, 100L))
     } yield (k, v)).suchThat(_.exists(_._2.isDefined))) { rows =>
@@ -113,7 +113,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("triangleCounts matches brute force on random small graphs") =
-    forAll(Gen.chooseNum(3, 9), Gen.listOfN(24,
+    forAllNoShrink(Gen.chooseNum(3, 9), Gen.listOfN(24,
       Gen.zip(Gen.chooseNum(0, 8), Gen.chooseNum(0, 8)))) { (nv, es0) =>
       val es = es0.map { case (a, b) => (a.toLong % nv, b.toLong % nv) }
         .filter { case (a, b) => a != b }
@@ -133,7 +133,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("corrWith(df, df) on itself is 1 for non-constant columns") =
-    forAll(Gen.listOfN(25, Gen.zip(Gen.chooseNum(-50L, 50L),
+    forAllNoShrink(Gen.listOfN(25, Gen.zip(Gen.chooseNum(-50L, 50L),
       Gen.chooseNum(-50L, 50L)))) { rows0 =>
       val rows = rows0.zipWithIndex.map { case ((a, b), i) =>
         (i.toLong, a, b) }
@@ -152,7 +152,7 @@ object PropertiesR4Spec extends Properties("graft-r4") {
     }
 
   property("quantizeInt8 codes bounded and monotone per dimension") =
-    forAll(Gen.listOfN(12, Gen.listOfN(4,
+    forAllNoShrink(Gen.listOfN(12, Gen.listOfN(4,
       Gen.chooseNum(-100, 100).map(_ / 7.0f)))) { vecs =>
       val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("id", "v")

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.window.RollingOps
 import EwmOracle.Pt
@@ -26,7 +26,7 @@ object PropertiesR6Spec extends Properties("graft-r6") {
 
   property("ewmCovScalable is bit-equal to the ewmCov fold on " +
       "random gappy pairs (cov and corr)") =
-    forAll(seriesGen, seriesGen, Gen.chooseNum(0.05, 0.95)) {
+    forAllNoShrink(seriesGen, seriesGen, Gen.chooseNum(0.05, 0.95)) {
       (xs, ys, a) =>
         val rows = xs.zipAll(ys, None, None).zipWithIndex
           .map { case ((x, y), i) => (1, i, x, y) }
@@ -47,7 +47,7 @@ object PropertiesR6Spec extends Properties("graft-r6") {
 
   property("ewmTimeScalable is bit-equal to the time-decayed folds " +
       "on random irregular times") =
-    forAll(seriesGen, Gen.listOfN(40, Gen.chooseNum(1.0, 500.0)),
+    forAllNoShrink(seriesGen, Gen.listOfN(40, Gen.chooseNum(1.0, 500.0)),
       Gen.chooseNum(10.0, 900.0)) { (vs, gaps, h) =>
       // strictly increasing integer-valued times from positive gaps
       val ts = gaps.scanLeft(0.0)((acc, g) => acc + math.rint(g)).tail
@@ -70,7 +70,7 @@ object PropertiesR6Spec extends Properties("graft-r6") {
 
   property("ewmCovTimeScalable is bit-equal to the ewmCovTime fold " +
       "on random irregular times (cov and corr)") =
-    forAll(seriesGen, seriesGen,
+    forAllNoShrink(seriesGen, seriesGen,
       Gen.listOfN(40, Gen.chooseNum(1.0, 500.0)),
       Gen.chooseNum(10.0, 900.0)) { (xs, ys, gaps, h) =>
       val ts = gaps.scanLeft(0.0)((acc, g) => acc + math.rint(g)).tail

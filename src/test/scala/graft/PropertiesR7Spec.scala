@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ object PropertiesR7Spec extends Properties("graft-r7") {
 
   property("blockPairsMulti equals brute-force union with " +
       "first-kept-pass attribution (incl. nulls and drops)") =
-    forAll(rowsGen, Gen.chooseNum(2, 6)) { (rows, maxBlock) =>
+    forAllNoShrink(rowsGen, Gen.chooseNum(2, 6)) { (rows, maxBlock) =>
       val df = rows.toDF("id", "ka", "kb")
       val passes = Seq(Seq("ka"), Seq("kb"))
       val got = graft.analytics.RecordLinkage
@@ -56,7 +56,7 @@ object PropertiesR7Spec extends Properties("graft-r7") {
 
   property("hits: sum of round-r auth equals sum over edges of " +
       "round-(r-1) hub (the mutual-reinforcement identity)") =
-    forAll(Gen.listOfN(25, for {
+    forAllNoShrink(Gen.listOfN(25, for {
       s <- Gen.chooseNum(0, 5); d <- Gen.chooseNum(0, 5)
     } yield (s"u$s", s"v$d"))) { edges0 =>
       val edges = edges0.distinct
@@ -78,7 +78,7 @@ object PropertiesR7Spec extends Properties("graft-r7") {
 
   property("isotonicFit equals the quadratic minimax reference, is " +
       "monotone, and preserves block means") =
-    forAll(Gen.listOfN(25, for {
+    forAllNoShrink(Gen.listOfN(25, for {
       x <- Gen.chooseNum(0, 9); y <- Gen.chooseNum(-50L, 50L)
     } yield (x.toDouble, y.toDouble))) { pts =>
       pts.nonEmpty ==> {
@@ -111,7 +111,7 @@ object PropertiesR7Spec extends Properties("graft-r7") {
 
   property("pipelineFunnel: docs_out monotone non-increasing, " +
       "docs_in chains, tokens_out <= stage-0 budget") =
-    forAll(Gen.listOfN(30, for {
+    forAllNoShrink(Gen.listOfN(30, for {
       t <- Gen.chooseNum(0L, 20L); f <- Gen.oneOf(true, false)
     } yield (t, f))) { rows0 =>
       val rows = rows0.zipWithIndex.map { case ((t, f), i) =>

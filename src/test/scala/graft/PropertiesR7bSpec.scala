@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import org.apache.spark.sql.functions._
 
@@ -23,7 +23,7 @@ object PropertiesR7bSpec extends Properties("graft-r7b") {
 
   property("linkPredict equals the brute-force common-neighbor " +
       "reference on arbitrary small graphs") =
-    forAll(edgesGen) { es =>
+    forAllNoShrink(edgesGen) { es =>
       es.nonEmpty ==> {
         val sym: Set[(Long, Long)] = (es.map(e => (e._1, e._2)) ++
           es.map(e => (e._2, e._1))).toSet
@@ -56,7 +56,7 @@ object PropertiesR7bSpec extends Properties("graft-r7b") {
 
   property("upliftCurve conserves rows and responders in the last " +
       "cumulative bucket") =
-    forAll(upliftGen) { rows =>
+    forAllNoShrink(upliftGen) { rows =>
       val df = rows.toDF("t", "y", "p")
       val r = graft.ml.MlMetrics.upliftCurve(df, "t", "y", "p")
         .orderBy(desc("bucket")).limit(1).collect()(0)
@@ -70,7 +70,7 @@ object PropertiesR7bSpec extends Properties("graft-r7b") {
 
   property("fairnessReport cells partition each group and ppm " +
       "rates stay in [0, 1e6]") =
-    forAll(Gen.listOfN(40, for {
+    forAllNoShrink(Gen.listOfN(40, for {
       g <- Gen.oneOf("a", "b", "c")
       y <- Gen.oneOf(true, false)
       p <- Gen.oneOf(true, false)
@@ -97,7 +97,7 @@ object PropertiesR7bSpec extends Properties("graft-r7b") {
 
   property("fleissKappa stays in [-1, 1] and drops nothing on " +
       "balanced designs") =
-    forAll(ratingGen) { rows =>
+    forAllNoShrink(ratingGen) { rows =>
       val r = graft.stats.StatsOps
         .fleissKappa(rows.toDF("u", "rating"), "u", "rating")
         .collect()(0)
@@ -116,7 +116,7 @@ object PropertiesR7bSpec extends Properties("graft-r7b") {
 
   property("word_lcs obeys metric laws: bounded by both lengths, " +
       "symmetric, identity on equal inputs") =
-    forAll(tokGen, tokGen) { (a, b) =>
+    forAllNoShrink(tokGen, tokGen) { (a, b) =>
       import graft.sqlext.WordLcs
       val l = WordLcs.lcsOf(a, b)
       val df = Seq((a, b)).toDF("a", "b")

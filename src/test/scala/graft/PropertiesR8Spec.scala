@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import org.apache.spark.sql.functions._
 
@@ -31,7 +31,7 @@ object PropertiesR8Spec extends Properties("graft-r8") {
 
   property("giniStumpForestTwin root split equals the brute-force " +
       "exact-Gini argmax on the tree-0 bag") =
-    forAll(rowsGen) { rows =>
+    forAllNoShrink(rowsGen) { rows =>
       val df = rows.toDF("id", "f0", "f1", "f2", "y")
       val grids = Seq((0 to 2).toList, (0 to 3).toList,
         (0 to 1).toList)
@@ -82,7 +82,7 @@ object PropertiesR8Spec extends Properties("graft-r8") {
 
   property("glmPoissonIrlsTwin round 1 equals plain weighted least " +
       "squares with w = y + 1/2 (the GLM init)") =
-    forAll(glmGen) { rows =>
+    forAllNoShrink(glmGen) { rows =>
       val df = rows.toDF("y", "x1", "x2")
       val got = graft.ml.MlOps
         .glmPoissonIrlsTwin(df, "x1", "x2", "y", rounds = 1).head()
@@ -131,7 +131,7 @@ object PropertiesR8Spec extends Properties("graft-r8") {
 
   property("autoMlTwin 'mean' candidate RMSE equals the direct " +
       "per-row holdout computation") =
-    forAll(amlGen) { rows =>
+    forAllNoShrink(amlGen) { rows =>
       val df = rows.toDF("id", "x1", "x2", "y")
       val out = graft.ml.ModelSelection
         .autoMlTwin(df, "id", "x1", "x2", "y").collect()

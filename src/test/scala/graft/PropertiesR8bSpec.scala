@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.{forAll, propBoolean}
+import org.scalacheck.Prop.{forAllNoShrink, propBoolean}
 
 import org.apache.spark.sql.functions._
 import graft.llm.UrlOps
@@ -33,7 +33,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
     (if (params.isEmpty) "" else "?" + params.mkString("&"))
 
   property("canonicalizeUrl is idempotent for any messy URL") =
-    forAll(Gen.listOfN(10, urlGen)) { urls =>
+    forAllNoShrink(Gen.listOfN(10, urlGen)) { urls =>
       urls.nonEmpty ==> {
         val df = urls.toDF("u")
         val once = UrlOps.canonicalizeUrl(col("u"))
@@ -47,7 +47,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
 
   property("registeredDomain is idempotent and never longer than " +
       "its input") =
-    forAll(Gen.listOfN(12, hostGen)) { hosts =>
+    forAllNoShrink(Gen.listOfN(12, hostGen)) { hosts =>
       hosts.nonEmpty ==> {
         val r = hosts.toDF("h")
           .select(UrlOps.registeredDomain(col("h")).as("d"), col("h"))
@@ -61,7 +61,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
 
   property("apportion hands out EXACTLY the requested total and " +
       "every allocation is base or base+1") =
-    forAll(for {
+    forAllNoShrink(for {
       n <- Gen.chooseNum(1, 12)
       ws <- Gen.listOfN(n, Gen.chooseNum(1L, 500L))
       total <- Gen.chooseNum(0L, 1000L)
@@ -78,7 +78,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
 
   property("apportionDHondt seats sum to the total and are " +
       "monotone in weight") =
-    forAll(for {
+    forAllNoShrink(for {
       n <- Gen.chooseNum(1, 8)
       ws <- Gen.listOfN(n, Gen.chooseNum(1L, 300L))
       total <- Gen.chooseNum(1, 60)
@@ -100,7 +100,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
 
   property("journeyPatterns conserves events (journey length == " +
       "n_events) and is input-order invariant") =
-    forAll(for {
+    forAllNoShrink(for {
       n <- Gen.chooseNum(1, 40)
       evs <- Gen.listOfN(n, for {
         u <- Gen.oneOf("u1", "u2", "u3")
@@ -126,7 +126,7 @@ object PropertiesR8bSpec extends Properties("graft-r8b") {
 
   property("cdcChunksFast never emits a chunk longer than maxLen " +
       "and chunks tile the document") =
-    forAll(for {
+    forAllNoShrink(for {
       base <- Gen.oneOf("ab", "xyz ", "repeat me ")
       reps <- Gen.chooseNum(1, 120)
       tail <- Gen.alphaStr.map(_.take(30))

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 /** ScalaCheck invariants (our addition beyond the reference's
   * hand-written cases, SURVEY §5): algebraic laws that must hold for
@@ -19,7 +19,7 @@ object PropertiesSpec extends Properties("graft") {
   private val frameGen = Gen.listOfN(60, rowGen)
 
   property("groupBy-sum total equals global sum under any partitioning") =
-    forAll(frameGen, Gen.chooseNum(1, 6)) { (rows, nPart) =>
+    forAllNoShrink(frameGen, Gen.chooseNum(1, 6)) { (rows, nPart) =>
       val df = rows.toDF("k", "v").repartition(nPart)
       val grouped = df.groupBy("k").sum("v")
         .agg(org.apache.spark.sql.functions.sum("sum(v)"))
@@ -29,7 +29,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("inner+anti join row counts partition the left side") =
-    forAll(frameGen, frameGen) { (l, r) =>
+    forAllNoShrink(frameGen, frameGen) { (l, r) =>
       val left = l.toDF("k", "v")
       val right = r.map(_._1).distinct.toDF("k")
       val semi = left.join(right, Seq("k"), "left_semi").count()
@@ -38,7 +38,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("union count = sum of counts; distinct ≤ union") =
-    forAll(frameGen, frameGen) { (a, b) =>
+    forAllNoShrink(frameGen, frameGen) { (a, b) =>
       val da = a.toDF("k", "v"); val db = b.toDF("k", "v")
       val u = da.union(db)
       u.count() == a.size + b.size &&
@@ -46,7 +46,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("orderBy is a permutation: sorted multiset equals input") =
-    forAll(frameGen) { rows =>
+    forAllNoShrink(frameGen) { rows =>
       val sorted = rows.toDF("k", "v")
         .orderBy("v", "k").as[(String, Long)].collect().toList
       sorted == rows.sortBy(t => (t._2, t._1)) ||
@@ -55,7 +55,7 @@ object PropertiesSpec extends Properties("graft") {
 
   property("dropDuplicatesKeep keeps exactly one row per key") = {
     import graft.ops.PandasOps._
-    forAll(frameGen) { rows =>
+    forAllNoShrink(frameGen) { rows =>
       rows.isEmpty || {
         val df = rows.zipWithIndex
           .map { case ((k, v), i) => (k, v, i.toLong) }
@@ -72,7 +72,7 @@ object PropertiesSpec extends Properties("graft") {
   }
 
   property("streaming EWM is bit-equal to the fold for any series") =
-    forAll(Gen.listOfN(40, Gen.chooseNum(-500, 500)),
+    forAllNoShrink(Gen.listOfN(40, Gen.chooseNum(-500, 500)),
       Gen.chooseNum(1, 9)) { (vals, a10) =>
       val alpha = a10 / 10.0
       val rows = vals.zipWithIndex.map { case (v, i) => ("g", i, v.toDouble) }
@@ -93,7 +93,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("distinct-value rank sums always total n(n+1)/2") =
-    forAll(Gen.listOfN(80, Gen.chooseNum(-20L, 20L))) { vals =>
+    forAllNoShrink(Gen.listOfN(80, Gen.chooseNum(-20L, 20L))) { vals =>
       vals.isEmpty || {
         val df = vals.map(v => (v, "x")).toDF("v", "g")
         val counts = df.groupBy($"v")
@@ -109,7 +109,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("connectedComponents equals a union-find on random graphs") =
-    forAll(Gen.listOfN(40,
+    forAllNoShrink(Gen.listOfN(40,
       Gen.zip(Gen.chooseNum(0L, 24L), Gen.chooseNum(0L, 24L)))) { es =>
       val edges = es.filter { case (a, b) => a != b }
       edges.isEmpty || {
@@ -135,7 +135,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("redactPii is idempotent and leaves clean text unchanged") =
-    forAll(Gen.listOfN(10, Gen.oneOf(
+    forAllNoShrink(Gen.listOfN(10, Gen.oneOf(
       "plain words only", "x@y.com mail", "ip 1.2.3.4 here",
       "tel 555-123-4567", "mixed a@b.co 9.9.9.9 555-987-6543"))) {
       texts =>
@@ -151,7 +151,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("saltedJoin equals the plain join for any data and salt count") =
-    forAll(Gen.listOfN(50, Gen.zip(Gen.chooseNum(0L, 8L),
+    forAllNoShrink(Gen.listOfN(50, Gen.zip(Gen.chooseNum(0L, 8L),
         Gen.chooseNum(0L, 999L))),
       Gen.listOfN(8, Gen.chooseNum(0L, 12L)),
       Gen.chooseNum(1, 6)) { (factRows, dimKeys, salts) =>
@@ -166,7 +166,7 @@ object PropertiesSpec extends Properties("graft") {
     }
 
   property("stratifiedHashSample with a uniform rate equals hashSample") =
-    forAll(Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 5000L),
+    forAllNoShrink(Gen.listOfN(80, Gen.zip(Gen.chooseNum(0L, 5000L),
         Gen.oneOf("s0", "s1", "s2"))),
       Gen.oneOf(0.0, 0.3, 0.7, 1.0)) { (rows, rate) =>
       val df = rows.distinct.toDF("id", "src")
@@ -183,7 +183,7 @@ object PropertiesSpec extends Properties("graft") {
     val wordGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee")
     val docGen = Gen.chooseNum(0, 7).flatMap(k =>
       Gen.listOfN(k, wordGen).map(_.mkString(" ")))
-    forAll(Gen.listOfN(12, docGen), Gen.chooseNum(2, 4)) { (texts, n) =>
+    forAllNoShrink(Gen.listOfN(12, docGen), Gen.chooseNum(2, 4)) { (texts, n) =>
       val docs = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val out = graft.llm.PipelineOps
@@ -204,7 +204,7 @@ object PropertiesSpec extends Properties("graft") {
       v <- Gen.option(Gen.chooseNum(-100L, 100L))
       s <- Gen.option(Gen.oneOf("x", "y"))
     } yield (id, v, s)
-    forAll(Gen.listOfN(30, rowGen2)) { rows0 =>
+    forAllNoShrink(Gen.listOfN(30, rowGen2)) { rows0 =>
       val rows = rows0.distinctBy(_._1) // unique key
       val df = rows.toDF("id", "v", "s")
       val out = df.combineFirst(df, Seq("id"))
@@ -216,7 +216,7 @@ object PropertiesSpec extends Properties("graft") {
     val lineGen = Gen.listOfN(3,
       Gen.oneOf("aa bb", "cc dd", "ee ff", "gg hh", "ii jj"))
       .map(_.mkString("\n"))
-    forAll(Gen.listOfN(12, lineGen)) { texts =>
+    forAllNoShrink(Gen.listOfN(12, lineGen)) { texts =>
       val docs = texts.zipWithIndex
         .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val out = graft.llm.PipelineOps
@@ -233,7 +233,7 @@ object PropertiesSpec extends Properties("graft") {
       id <- Gen.chooseNum(0L, 10000L)
       words <- Gen.chooseNum(1, 12)
     } yield (id, Seq.fill(words)("w").mkString(" "))
-    forAll(Gen.listOfN(25, docGen)) { docs0 =>
+    forAllNoShrink(Gen.listOfN(25, docGen)) { docs0 =>
       val docs = docs0.distinctBy(_._1)
       val df = docs.toDF("doc_id", "text")
       val out = graft.llm.PipelineOps

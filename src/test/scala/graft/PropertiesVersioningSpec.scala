@@ -1,7 +1,7 @@
 package graft
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.forAllNoShrink
 
 import graft.versioning.VersionOps
 
@@ -28,7 +28,7 @@ object PropertiesVersioningSpec extends Properties("graft-versioning") {
     .groupBy(r => (r._1, r._2)).map(_._2.head).toList
 
   property("fold of per-version applyChanges == asOfSnapshot") =
-    forAll(logGen) { rows =>
+    forAllNoShrink(logGen) { rows =>
       val log = rows.toDF("k", "version", "op", "x")
       val maxV = rows.map(_._2).max
       val empty = Seq.empty[(Long, Long)].toDF("k", "x")
@@ -44,7 +44,7 @@ object PropertiesVersioningSpec extends Properties("graft-versioning") {
     }
 
   property("fingerprint invariant to partitioning; moves on any edit") =
-    forAll(Gen.chooseNum(1, 200), Gen.chooseNum(2, 9)) { (n, parts) =>
+    forAllNoShrink(Gen.chooseNum(1, 200), Gen.chooseNum(2, 9)) { (n, parts) =>
       val df = (1L to n.toLong).map(i => (i, s"v$i")).toDF("k", "s")
       val a = VersionOps.tableFingerprint(df, Seq("k", "s"))
         .as[(Long, Long)].head()
@@ -58,7 +58,7 @@ object PropertiesVersioningSpec extends Properties("graft-versioning") {
     }
 
   property("versionDiff statuses partition the key universe") =
-    forAll(Gen.chooseNum(0L, 80L), Gen.chooseNum(2, 7),
+    forAllNoShrink(Gen.chooseNum(0L, 80L), Gen.chooseNum(2, 7),
       Gen.chooseNum(2, 7)) { (n, p, q) =>
       val old = (1L to n).filter(_ % p != 0).map(k => (k, k * 10))
         .toDF("k", "v")

@@ -5,22 +5,15 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** One SparkSession shared by every spec in the forked test JVM. */
+/** One SparkSession shared by every spec in the forked test JVM,
+  * built by [[GraftSession.builder]] so the specs check the
+  * configuration that users, `Verify` and perfbench get. The
+  * extensions are on: VerdictR8Spec tests the SQL-only deployment
+  * path, the injector class name in `spark.sql.extensions`. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the SQL-only deployment path under test in VerdictR8Spec:
-      // the injector class name in the session config, exactly as
-      // --conf spark.sql.extensions=... would set it
-      .config("spark.sql.extensions",
-        "graft.sqlext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("local[4]", 4, extensions = true)
+      .appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -139,6 +139,34 @@ class StreamingIncrementalDedupSpec extends SparkSpecBase {
     kept.sorted shouldBe sequentialKeptIds
   }
 
+  test("no window sorts the corpus band table: stage 3 reads the " +
+      "prior bands through a count aggregate, and only the batch's " +
+      "own hot-bucket cap is a window") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan,
+      Window}
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation}
+    val bandsDir = tmp("graft_sid_prior_") + "/bands"
+    val (_, _, bd0) = Dedup.incrementalDedupStep(
+      batchDf(0), "text", "doc_id", None, None)
+    bd0.write.parquet(bandsDir)
+    val (k, _, _) = Dedup.incrementalDedupStep(batchDf(1), "text",
+      "doc_id", None, Some(spark.read.parquet(bandsDir)))
+    def readsPriorBands(p: LogicalPlan): Boolean = p.exists {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation =>
+          r.location.rootPaths.exists(_.toUri.getPath == bandsDir)
+        case _ => false
+      }
+      case _ => false
+    }
+    val plan = k.queryExecution.optimizedPlan
+    readsPriorBands(plan) shouldBe true
+    val windows = plan.collect { case w: Window => w }
+    windows should not be empty
+    windows.filter(readsPriorBands) shouldBe empty
+  }
+
   test("bucketed side tables: same corpus as the parquet path, and " +
       "the corpus-side stage-2/stage-3 reads plan with ZERO shuffles " +
       "(the growing join side never pays a per-batch exchange)") {
