@@ -29,7 +29,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * exactly as before. Key columns whose values the driver cannot
   * compare the way Spark does (collated strings, floating point,
   * nested types, or src/dst of different types) force the distributed
-  * plan too. */
+  * plan too.
+  *
+  * It also owns the one cache rule of `src/main`: no call leaks a
+  * cache. [[cached]] is the only place the library caches. A table
+  * that only the call's own actions read (a loop invariant, a sample
+  * measured before a write) is used inside a `cached` scope, which
+  * releases it when the call returns or throws. A table that the
+  * returned DataFrame reads is not cached at all: the call's eager
+  * actions run inside `cached`, the returned plan reads the uncached
+  * frame, and Spark reuses the shuffle of an aggregate that the plan
+  * reads twice. */
 private[graft] object LocalStrategy {
 
   def run[T](df: DataFrame, keyCols: String*)(local: Array[Row] => T)(
@@ -49,8 +59,9 @@ private[graft] object LocalStrategy {
 
   /** `f` over `df` cached for the duration of the call. A cache the
     * caller already holds is used and kept; one made here is released
-    * when `f` returns or throws, so `f` must return a result that no
-    * longer reads it (eagerly checkpointed, or local). */
+    * when `f` returns or throws. `f` may return a plan that reads `df`
+    * as long as no action ran on that plan inside the scope: executed
+    * later, it reads `df` uncached. */
   def cached[T](df: DataFrame)(f: DataFrame => T): T = {
     val owned = df.storageLevel == StorageLevel.NONE
     val m = if (owned) df.cache() else df

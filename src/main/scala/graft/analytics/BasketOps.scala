@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.ml.fpm.FPGrowth
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Market-basket mining: frequent itemsets (FP-Growth) and
   * single-item association rules, over baskets built from a keyed
@@ -44,11 +45,12 @@ object BasketOps {
     * (so thresholds inherit `minSupport`); round 6. */
   def pairRules(df: DataFrame, keyCol: String, itemCol: String,
       minSupport: Double): DataFrame = {
-    val b = baskets(df, keyCol, itemCol).cache()
-    val n = b.count().toDouble
-    val freq = new FPGrowth().setItemsCol("items")
-      .setMinSupport(minSupport).setMinConfidence(0.0).fit(b)
-      .freqItemsets.cache()
+    val (n, freq) = LocalStrategy.cached(baskets(df, keyCol, itemCol)) {
+      b =>
+        (b.count().toDouble, new FPGrowth().setItemsCol("items")
+          .setMinSupport(minSupport).setMinConfidence(0.0).fit(b)
+          .freqItemsets)
+    }
     val singles = freq.filter(size(col("items")) === 1)
       .select(col("items").getItem(0).as("item"), col("freq"))
     val pairs = freq.filter(size(col("items")) === 2)

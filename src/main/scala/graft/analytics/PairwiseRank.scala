@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Strength estimation from pairwise comparisons — the
   * preference-data fit behind RLHF reward baselines, ranker A/Bs and
@@ -34,40 +35,42 @@ object PairwiseRank {
         col(loserCol).as("l"), col(winsCol).cast("long").as("k"))
       .filter(col("k") > 0 && col("w") =!= col("l"))
       .groupBy("w", "l").agg(sum("k").as("k"))
-      .cache()
-    // n_ij (total games between i and j) and W_i (total wins of i)
+    // n_ij (total games between i and j) and W_i (total wins of i),
+    // both built from one cached e
     val games = e.select(col("w").as("a"), col("l").as("b"), col("k"))
       .union(e.select(col("l").as("a"), col("w").as("b"), col("k")))
       .groupBy("a", "b").agg(sum("k").as("n"))
-      .cache()
-    val players = games.select(col("a").as("id")).distinct().cache()
-    val winsOf = players.join(
-        e.groupBy(col("w").as("id")).agg(sum("k").as("wins")),
+    val winsOf = games.select(col("a").as("id")).distinct()
+      .join(e.groupBy(col("w").as("id")).agg(sum("k").as("wins")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("wins"), lit(0L)).as("wins"))
-      .cache()
-    var p = players.select(col("id"), lit(1.0).as("p"))
-    for (_ <- 1 to rounds) {
-      val denom = games
-        .join(p.select(col("id").as("a"), col("p").as("pa")),
-          Seq("a"))
-        .join(p.select(col("id").as("b"), col("p").as("pb")),
-          Seq("b"))
-        .select(col("a").as("id"),
-          round(col("n").cast("double") / (col("pa") + col("pb")),
-            12).cast("decimal(38,12)").as("t"))
-        .groupBy("id").agg(sum("t").as("den"))
-      p = winsOf.join(denom, Seq("id"), "left")
-        .select(col("id"),
-          when(col("den").isNotNull && col("den") > 0,
-            col("wins").cast("double") / col("den").cast("double"))
-            .otherwise(lit(0.0)).as("p"))
-        .localCheckpoint(eager = true)
-    }
+    val p = LocalStrategy.cached(e) { _ =>
+    LocalStrategy.cached(games) { games =>
+    LocalStrategy.cached(winsOf) { winsOf =>
+      var p = winsOf.select(col("id"), col("wins"), lit(1.0).as("p"))
+      for (_ <- 1 to rounds) {
+        val denom = games
+          .join(p.select(col("id").as("a"), col("p").as("pa")),
+            Seq("a"))
+          .join(p.select(col("id").as("b"), col("p").as("pb")),
+            Seq("b"))
+          .select(col("a").as("id"),
+            round(col("n").cast("double") / (col("pa") + col("pb")),
+              12).cast("decimal(38,12)").as("t"))
+          .groupBy("id").agg(sum("t").as("den"))
+        // wins rides along, so the answer reads only this checkpoint
+        p = winsOf.join(denom, Seq("id"), "left")
+          .select(col("id"), col("wins"),
+            when(col("den").isNotNull && col("den") > 0,
+              col("wins").cast("double") / col("den").cast("double"))
+              .otherwise(lit(0.0)).as("p"))
+          .localCheckpoint(eager = true)
+      }
+      p
+    }}}
     val tot = p.agg(sum(round(col("p"), 12).cast("decimal(38,12)"))
       .as("tp"))
-    winsOf.join(p, Seq("id"))
-      .crossJoin(broadcast(tot))
+    p.crossJoin(broadcast(tot))
       .select(col("id"), col("wins"), col("p").as("strength"),
         when(col("tp") > 0,
           col("p") / col("tp").cast("double")).as("share"))

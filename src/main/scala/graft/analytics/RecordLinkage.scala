@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Probabilistic record linkage (Fellegi & Sunter 1969, JASA):
   * blocked candidate generation + log₂ match-weight scoring from
@@ -191,30 +192,29 @@ object RecordLinkage {
         pairs.select(col(idACol).as("src"), col(idBCol).as("dst")))
         .select(col("id"), col("component").as("entity"))
     }
-    val edges = pairs.select(col(idACol).as("a"), col(idBCol).as("b"))
-      .distinct().cache()
-    val verts = edges.select(col("a").as("id"))
-      .union(edges.select(col("b").as("id"))).distinct()
-    var lbl = verts.withColumn("lbl", col("id"))
-    for (_ <- 1 to rounds) {
-      val msgs = edges
-        .join(lbl.select(col("id").as("a"), col("lbl")), Seq("a"))
-        .select(col("b").as("id"), col("lbl"))
-        .union(edges
-          .join(lbl.select(col("id").as("b"), col("lbl")), Seq("b"))
-          .select(col("a").as("id"), col("lbl")))
-        .union(lbl)
-      // materialize each round (eager localCheckpoint): lbl is
-      // referenced 3x by the next round, so an unmaterialized
-      // lineage replays round r-1's plan 3^r times (the classic
-      // iterative-join DAG blow-up). A lineage cut instead of
-      // .cache() (round-11): bounded rounds, and no chain of
-      // per-round cache entries stays pinned after the call.
-      lbl = msgs.groupBy("id").agg(min("lbl").as("lbl"))
-        .localCheckpoint(eager = true)
+    val lbl = LocalStrategy.cached(pairs.select(col(idACol).as("a"),
+        col(idBCol).as("b")).distinct()) { edges =>
+      val verts = edges.select(col("a").as("id"))
+        .union(edges.select(col("b").as("id"))).distinct()
+      var lbl = verts.withColumn("lbl", col("id"))
+      for (_ <- 1 to rounds) {
+        val msgs = edges
+          .join(lbl.select(col("id").as("a"), col("lbl")), Seq("a"))
+          .select(col("b").as("id"), col("lbl"))
+          .union(edges
+            .join(lbl.select(col("id").as("b"), col("lbl")), Seq("b"))
+            .select(col("a").as("id"), col("lbl")))
+          .union(lbl)
+        // materialize each round (eager localCheckpoint): lbl is
+        // referenced 3x by the next round, so an unmaterialized
+        // lineage replays round r-1's plan 3^r times (the classic
+        // iterative-join DAG blow-up). A lineage cut, not a cache:
+        // bounded rounds, and no chain of per-round cache entries.
+        lbl = msgs.groupBy("id").agg(min("lbl").as("lbl"))
+          .localCheckpoint(eager = true)
+      }
+      lbl
     }
-    // lbl is materialized — release the edge cache
-    edges.unpersist()
     lbl.select(col("id"), col("lbl").as("entity"))
   }
 }

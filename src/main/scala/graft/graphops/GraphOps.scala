@@ -48,58 +48,54 @@ object GraphOps {
     * `vertices` (one `id` column) to include isolated vertices as
     * their own singleton components. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 60,
-      vertices: Option[DataFrame] = None): DataFrame = {
-    val sym = symmetrize(edges)
-    val ids = vertices match {
-      case Some(v) => sym.select(col("src").as("id"))
-        .union(v.select(col("id"))).distinct()
-      case None => sym.select(col("src").as("id")).distinct()
+      vertices: Option[DataFrame] = None): DataFrame =
+    LocalStrategy.cached(symmetrize(edges)) { sym =>
+      val ids = vertices match {
+        case Some(v) => sym.select(col("src").as("id"))
+          .union(v.select(col("id"))).distinct()
+        case None => sym.select(col("src").as("id")).distinct()
+      }
+      var labels = ids.withColumn("component", col("id"))
+      var changed = 1L
+      var i = 0
+      while (changed > 0 && i < maxIter) {
+        // neighborhood min as groupBy + left join with least() — the
+        // equivalent union-then-min shape trips a Catalyst Union
+        // constraint-rewrite bug when iterated. Checkpointing here cuts
+        // lineage and flattens the plan so the pointer-jump self-join
+        // below runs over a plain LogicalRDD.
+        val nbrMin = sym
+          .join(labels, sym("dst") === labels("id"))
+          .groupBy(sym("src").as("id")).agg(min("component").as("nc"))
+        val propagated = labels
+          .join(nbrMin.withColumnRenamed("id", "nid"),
+            labels("id") === col("nid"), "left")
+          .select(labels("id"),
+            least(col("component"), coalesce(col("nc"), col("component")))
+              .as("component"))
+          .localCheckpoint(eager = true)
+        // pointer jump: component <- label(component). A label is always
+        // the id of a vertex in the same component (it is a min over
+        // same-component ids), so the self-join resolves every label.
+        val next = propagated.as("l")
+          .join(propagated.select(col("id").as("cid"),
+              col("component").as("cc")).as("m"),
+            col("l.component") === col("m.cid"), "left")
+          .select(col("l.id").as("id"),
+            least(col("l.component"),
+              coalesce(col("m.cc"), col("l.component"))).as("component"))
+          .localCheckpoint(eager = true)
+        changed = next.join(labels.withColumnRenamed("component", "old"),
+          Seq("id")).filter(col("component") =!= col("old")).count()
+        labels = next
+        i += 1
+      }
+      if (changed > 0)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter supersteps " +
+            s"($changed labels still changing) — raise maxIter")
+      labels
     }
-    var labels = ids.withColumn("component", col("id"))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      // neighborhood min as groupBy + left join with least() — the
-      // equivalent union-then-min shape trips a Catalyst Union
-      // constraint-rewrite bug when iterated. Checkpointing here cuts
-      // lineage and flattens the plan so the pointer-jump self-join
-      // below runs over a plain LogicalRDD.
-      val nbrMin = sym
-        .join(labels, sym("dst") === labels("id"))
-        .groupBy(sym("src").as("id")).agg(min("component").as("nc"))
-      val propagated = labels
-        .join(nbrMin.withColumnRenamed("id", "nid"),
-          labels("id") === col("nid"), "left")
-        .select(labels("id"),
-          least(col("component"), coalesce(col("nc"), col("component")))
-            .as("component"))
-        .localCheckpoint(eager = true)
-      // pointer jump: component <- label(component). A label is always
-      // the id of a vertex in the same component (it is a min over
-      // same-component ids), so the self-join resolves every label.
-      val next = propagated.as("l")
-        .join(propagated.select(col("id").as("cid"),
-            col("component").as("cc")).as("m"),
-          col("l.component") === col("m.cid"), "left")
-        .select(col("l.id").as("id"),
-          least(col("l.component"),
-            coalesce(col("m.cc"), col("l.component"))).as("component"))
-        .localCheckpoint(eager = true)
-      changed = next.join(labels.withColumnRenamed("component", "old"),
-        Seq("id")).filter(col("component") =!= col("old")).count()
-      labels = next
-      i += 1
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter supersteps " +
-          s"($changed labels still changing) — raise maxIter")
-    // labels is materialized (eager localCheckpoint each round) —
-    // release the edge cache (lifecycle: no pinned entries survive
-    // the call)
-    sym.unpersist()
-    labels
-  }
 
   /** PageRank (centrality.rs:250): power iteration with damping;
     * contributions shuffle on dst. Dangling (sink) mass is folded in
@@ -107,32 +103,29 @@ object GraphOps {
     * inside the loop, so each superstep is a pure distributed plan. */
   def pageRank(edges: DataFrame, iterations: Int = 10,
       damping: Double = 0.85): DataFrame = {
-    val vertices = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct().cache()
-    val n = vertices.count().toDouble
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val links = edges.join(outDeg, "src").cache()
-    val sinks = vertices.join(outDeg.select(col("src").as("id")),
-      Seq("id"), "left_anti").cache()
-    var ranks = vertices.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      val contribs = links.join(ranks, links("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      val dangling = sinks.join(ranks, Seq("id"))
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-      val next = vertices.join(contribs, Seq("id"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), (lit((1 - damping) / n) +
-          lit(damping) * (coalesce(col("c"), lit(0.0)) +
-            col("dm") / n)).as("rank"))
-      ranks = next.localCheckpoint(eager = true)
-    }
-    // ranks is materialized — release the loop-invariant caches
-    links.unpersist()
-    sinks.unpersist()
-    vertices.unpersist()
-    ranks
+    LocalStrategy.cached(edges.select(col("src").as("id"))
+        .union(edges.select(col("dst").as("id"))).distinct()) { vertices =>
+    LocalStrategy.cached(edges.join(outDeg, "src")) { links =>
+    LocalStrategy.cached(vertices.join(outDeg.select(col("src").as("id")),
+        Seq("id"), "left_anti")) { sinks =>
+      val n = vertices.count().toDouble
+      var ranks = vertices.withColumn("rank", lit(1.0 / n))
+      for (_ <- 1 to iterations) {
+        val contribs = links.join(ranks, links("src") === ranks("id"))
+          .select(col("dst").as("id"), (col("rank") / col("deg")).as("c"))
+          .groupBy("id").agg(sum("c").as("c"))
+        val dangling = sinks.join(ranks, Seq("id"))
+          .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
+        val next = vertices.join(contribs, Seq("id"), "left")
+          .crossJoin(broadcast(dangling))
+          .select(col("id"), (lit((1 - damping) / n) +
+            lit(damping) * (coalesce(col("c"), lit(0.0)) +
+              col("dm") / n)).as("rank"))
+        ranks = next.localCheckpoint(eager = true)
+      }
+      ranks
+    }}}
   }
 
   /** Dijkstra / weighted single-source shortest paths
@@ -144,31 +137,31 @@ object GraphOps {
       maxIter: Int = 20): DataFrame = {
     val e = edges.select(col("src"), col("dst"),
       col("weight").cast("double"))
-    val vertices = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    var dist = vertices.withColumn("dist",
-      when(col("id") === lit(sourceId), 0.0))
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val relaxed = e.join(dist.filter(col("dist").isNotNull),
-          e("src") === col("id"))
-        .select(e("dst").as("id"), (col("dist") + col("weight")).as("nd"))
-        .groupBy("id").agg(min("nd").as("nd"))
-      val next = dist.join(relaxed, Seq("id"), "left")
-        .select(col("id"), least(
-          coalesce(col("dist"), lit(Double.MaxValue)),
-          coalesce(col("nd"), lit(Double.MaxValue))).as("d2"))
-        .select(col("id"),
-          when(col("d2") =!= Double.MaxValue, col("d2")).as("dist"))
-        .localCheckpoint(eager = true)
-      changed = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"))
-        .filter(!(col("dist") <=> col("old"))).count()
-      dist = next
-      i += 1
+    LocalStrategy.cached(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()) { vertices =>
+      var dist = vertices.withColumn("dist",
+        when(col("id") === lit(sourceId), 0.0))
+      var changed = 1L
+      var i = 0
+      while (changed > 0 && i < maxIter) {
+        val relaxed = e.join(dist.filter(col("dist").isNotNull),
+            e("src") === col("id"))
+          .select(e("dst").as("id"), (col("dist") + col("weight")).as("nd"))
+          .groupBy("id").agg(min("nd").as("nd"))
+        val next = dist.join(relaxed, Seq("id"), "left")
+          .select(col("id"), least(
+            coalesce(col("dist"), lit(Double.MaxValue)),
+            coalesce(col("nd"), lit(Double.MaxValue))).as("d2"))
+          .select(col("id"),
+            when(col("d2") =!= Double.MaxValue, col("d2")).as("dist"))
+          .localCheckpoint(eager = true)
+        changed = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"))
+          .filter(!(col("dist") <=> col("old"))).count()
+        dist = next
+        i += 1
+      }
+      dist
     }
-    vertices.unpersist()
-    dist
   }
 
   /** Batched multi-source BFS with shortest-path counts (σ): one
@@ -177,14 +170,9 @@ object GraphOps {
     * (source, id, dist, sigma) for every reached vertex. State is
     * O(S·V) rows — bounded by the source sample size. */
   def multiSourceBfs(edges: DataFrame, sources: Seq[Any],
-      maxIter: Int = 15): DataFrame = {
-    val sym = symmetrize(edges)
-    // every state row is eager-checkpointed inside the loop, so the
-    // edge cache can be released on return
-    val out = multiSourceBfsOn(sym, sources, maxIter)
-    sym.unpersist()
-    out
-  }
+      maxIter: Int = 15): DataFrame =
+    LocalStrategy.cached(symmetrize(edges))(
+      multiSourceBfsOn(_, sources, maxIter))
 
   /** Symmetrize with HALF the distinct-shuffle rows (the kCore
     * canonical trick, round-11): dedup the (least, greatest)
@@ -213,7 +201,6 @@ object GraphOps {
       .union(rest
         .union(rest.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
-      .cache()
   }
 
   private def multiSourceBfsOn(sym: DataFrame, sources: Seq[Any],
@@ -278,41 +265,41 @@ object GraphOps {
       maxIter: Int = 15): DataFrame = {
     // one symmetrized edge set shared by the forward BFS and the
     // backward accumulation (no second union+distinct shuffle)
-    val sym = symmetrize(edges)
-    val state = multiSourceBfsOn(sym, sources, maxIter)
-      .localCheckpoint(true)
-    val maxL = state.agg(max("dist")).head().getInt(0)
-    // delta rows exist for levels already processed (deepest first)
-    var delta = state.filter(col("dist") === maxL)
-      .select(col("source"), col("id"), lit(0.0).as("delta"))
-      .localCheckpoint(true)
-    var l = maxL
-    while (l >= 1) {
-      val wLevel = state.filter(col("dist") === l).as("w")
-        .join(delta.as("dw"), Seq("source", "id"), "left")
-        .select(col("source"), col("id").as("w_id"),
-          col("w.sigma").as("sigma_w"),
-          coalesce(col("dw.delta"), lit(0.0)).as("delta_w"))
-      val prev = state.filter(col("dist") === l - 1)
-        .select(col("source"), col("id").as("v_id"),
-          col("sigma").as("sigma_v"))
-      val contrib = wLevel
-        .join(sym, col("w_id") === sym("dst"))
-        .select(col("source"), sym("src").as("v_id"),
-          col("sigma_w"), col("delta_w"))
-        .join(prev, Seq("source", "v_id"))
-        .groupBy(col("source"), col("v_id").as("id"))
-        .agg(sum(col("sigma_v").cast("double") / col("sigma_w") *
-          (lit(1.0) + col("delta_w"))).as("delta"))
-      delta = delta.union(contrib).localCheckpoint(true)
-      l -= 1
+    LocalStrategy.cached(symmetrize(edges)) { sym =>
+      val state = multiSourceBfsOn(sym, sources, maxIter)
+        .localCheckpoint(true)
+      val maxL = state.agg(max("dist")).head().getInt(0)
+      // delta rows exist for levels already processed (deepest first)
+      var delta = state.filter(col("dist") === maxL)
+        .select(col("source"), col("id"), lit(0.0).as("delta"))
+        .localCheckpoint(true)
+      var l = maxL
+      while (l >= 1) {
+        val wLevel = state.filter(col("dist") === l).as("w")
+          .join(delta.as("dw"), Seq("source", "id"), "left")
+          .select(col("source"), col("id").as("w_id"),
+            col("w.sigma").as("sigma_w"),
+            coalesce(col("dw.delta"), lit(0.0)).as("delta_w"))
+        val prev = state.filter(col("dist") === l - 1)
+          .select(col("source"), col("id").as("v_id"),
+            col("sigma").as("sigma_v"))
+        val contrib = wLevel
+          .join(sym, col("w_id") === sym("dst"))
+          .select(col("source"), sym("src").as("v_id"),
+            col("sigma_w"), col("delta_w"))
+          .join(prev, Seq("source", "v_id"))
+          .groupBy(col("source"), col("v_id").as("id"))
+          .agg(sum(col("sigma_v").cast("double") / col("sigma_w") *
+            (lit(1.0) + col("delta_w"))).as("delta"))
+        delta = delta.union(contrib).localCheckpoint(true)
+        l -= 1
+      }
+      // exclude the source's own row; halve for undirected pair double-count
+      delta.join(state.select("source", "id", "dist"), Seq("source", "id"))
+        .filter(col("dist") > 0)
+        .groupBy("id")
+        .agg((sum(col("delta")) / 2.0).as("betweenness"))
     }
-    // exclude the source's own row; halve for undirected pair double-count
-    sym.unpersist()
-    delta.join(state.select("source", "id", "dist"), Seq("source", "id"))
-      .filter(col("dist") > 0)
-      .groupBy("id")
-      .agg((sum(col("delta")) / 2.0).as("betweenness"))
   }
 
   /** DFS preorder from a source (traversal.rs dfs): the stack
@@ -355,25 +342,25 @@ object GraphOps {
     * shortest_path_bfs :116): frontier expansion per superstep. */
   def bfsDistances(edges: DataFrame, sourceIds: Seq[Any],
       maxIter: Int = 15): DataFrame = {
-    val sym = symmetrize(edges)
-    var dist = sym.select(col("src").as("id")).distinct()
-      .withColumn("dist",
-        when(col("id").isin(sourceIds: _*), 0).otherwise(lit(null)))
-    var i = 0
-    var frontier = dist.filter(col("dist") === i).count()
-    while (frontier > 0 && i < maxIter) {
-      val reached = sym.join(dist.filter(col("dist") === i),
-          sym("src") === col("id"))
-        .select(sym("dst").as("id"), lit(i + 1).as("nd"))
-        .distinct()
-      dist = dist.join(reached, Seq("id"), "left")
-        .select(col("id"), coalesce(col("dist"), col("nd")).as("dist"))
-        .localCheckpoint(eager = true)
-      i += 1
-      frontier = dist.filter(col("dist") === i).count()
+    LocalStrategy.cached(symmetrize(edges)) { sym =>
+      var dist = sym.select(col("src").as("id")).distinct()
+        .withColumn("dist",
+          when(col("id").isin(sourceIds: _*), 0).otherwise(lit(null)))
+      var i = 0
+      var frontier = dist.filter(col("dist") === i).count()
+      while (frontier > 0 && i < maxIter) {
+        val reached = sym.join(dist.filter(col("dist") === i),
+            sym("src") === col("id"))
+          .select(sym("dst").as("id"), lit(i + 1).as("nd"))
+          .distinct()
+        dist = dist.join(reached, Seq("id"), "left")
+          .select(col("id"), coalesce(col("dist"), col("nd")).as("dist"))
+          .localCheckpoint(eager = true)
+        i += 1
+        frontier = dist.filter(col("dist") === i).count()
+      }
+      dist
     }
-    sym.unpersist()
-    dist
   }
 
   /** k-core decomposition membership: iteratively peel vertices of
@@ -584,7 +571,7 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().cache()
+      .distinct()
     val m = und.agg(count(lit(1)).cast("double").as("m"))
     val deg = und.select(col("a").as("id"))
       .union(und.select(col("b").as("id")))
@@ -712,40 +699,38 @@ object GraphOps {
     // (previously recomputed from the edge cache on every join) is
     // materialized once; per-round state is lineage-cut instead of
     // leaking one cache entry per half-round.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct().cache()
-    val eDst = e.repartition(col("dst")).cache()
-    val verts = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = true)
-    var hub = verts.withColumn("hub", lit(1L))
-    var auth: DataFrame = null
-    for (_ <- 1 to rounds) {
-      val aAgg = e.join(hub.select(col("id").as("src"), col("hub")),
-          Seq("src"))
-        .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))
-      auth = verts.join(aAgg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("auth"), lit(0L)).as("auth"))
+    LocalStrategy.cached(edges.select(col("src"), col("dst"))
+        .repartition(col("src")).distinct()) { e =>
+    LocalStrategy.cached(e.repartition(col("dst"))) { eDst =>
+      val verts = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
         .localCheckpoint(eager = true)
-      val hAgg = eDst.join(
-          auth.select(col("id").as("dst"), col("auth")), Seq("dst"))
-        .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
-      hub = verts.join(hAgg, Seq("id"), "left")
-        .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint(eager = true)
-    }
-    // final auth/hub are materialized — release the edge caches
-    eDst.unpersist()
-    e.unpersist()
-    val totals = auth.agg(sum("auth").as("ta"))
-      .crossJoin(hub.agg(sum("hub").as("th")))
-    auth.join(hub, Seq("id"))
-      .crossJoin(broadcast(totals))
-      .select(col("id"), col("auth"), col("hub"),
-        when(col("ta") > 0,
-          col("auth").cast("double") / col("ta")).as("auth_norm"),
-        when(col("th") > 0,
-          col("hub").cast("double") / col("th")).as("hub_norm"))
+      var hub = verts.withColumn("hub", lit(1L))
+      var auth: DataFrame = null
+      for (_ <- 1 to rounds) {
+        val aAgg = e.join(hub.select(col("id").as("src"), col("hub")),
+            Seq("src"))
+          .groupBy(col("dst").as("id")).agg(sum("hub").as("auth"))
+        auth = verts.join(aAgg, Seq("id"), "left")
+          .select(col("id"), coalesce(col("auth"), lit(0L)).as("auth"))
+          .localCheckpoint(eager = true)
+        val hAgg = eDst.join(
+            auth.select(col("id").as("dst"), col("auth")), Seq("dst"))
+          .groupBy(col("src").as("id")).agg(sum("auth").as("hub"))
+        hub = verts.join(hAgg, Seq("id"), "left")
+          .select(col("id"), coalesce(col("hub"), lit(0L)).as("hub"))
+          .localCheckpoint(eager = true)
+      }
+      val totals = auth.agg(sum("auth").as("ta"))
+        .crossJoin(hub.agg(sum("hub").as("th")))
+      auth.join(hub, Seq("id"))
+        .crossJoin(broadcast(totals))
+        .select(col("id"), col("auth"), col("hub"),
+          when(col("ta") > 0,
+            col("auth").cast("double") / col("ta")).as("auth_norm"),
+          when(col("th") > 0,
+            col("hub").cast("double") / col("th")).as("hub_norm"))
+    }}
   }
 
   /** Link-prediction score suite over an undirected graph
@@ -838,35 +823,30 @@ object GraphOps {
     // so the dedup, the out-degree count, the (edge ⋈ deg) join and
     // every round's rank join all reuse that single exchange (the
     // old shape paid a distinct exchange + an explicit repartition)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct().cache()
-    val verts = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val eDeg = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
-      .cache()
     val restart = lit((100 - dampPct).toLong * scale / 100)
     val isSrc = col("id").isin(sources: _*)
-    var r = verts.select(col("id"),
-      when(isSrc, lit(scale)).otherwise(lit(0L)).as("ppr"))
-    for (_ <- 1 to rounds) {
-      val contrib = r.select(col("id").as("src"), col("ppr"))
-        .join(eDeg, Seq("src"))
-        .select(col("dst").as("id"),
-          expr("ppr div deg").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = verts.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (expr(s"(${dampPct}L * coalesce(c, 0L)) div 100") +
-            when(isSrc, restart).otherwise(lit(0L))).as("ppr"))
-        .localCheckpoint(eager = true)
-    }
-    // r is materialized (eager localCheckpoint), so the internal
-    // caches are done — release them (cache lifecycle: a library
-    // call must not permanently pin an edge-table cache entry)
-    eDeg.unpersist()
-    verts.unpersist()
-    e.unpersist()
+    val r = LocalStrategy.cached(edges.select(col("src"), col("dst"))
+        .repartition(col("src")).distinct()) { e =>
+    LocalStrategy.cached(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()) { verts =>
+    LocalStrategy.cached(e.join(
+        e.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))) { eDeg =>
+      var r = verts.select(col("id"),
+        when(isSrc, lit(scale)).otherwise(lit(0L)).as("ppr"))
+      for (_ <- 1 to rounds) {
+        val contrib = r.select(col("id").as("src"), col("ppr"))
+          .join(eDeg, Seq("src"))
+          .select(col("dst").as("id"),
+            expr("ppr div deg").as("c"))
+          .groupBy("id").agg(sum("c").as("c"))
+        r = verts.join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (expr(s"(${dampPct}L * coalesce(c, 0L)) div 100") +
+              when(isSrc, restart).otherwise(lit(0L))).as("ppr"))
+          .localCheckpoint(eager = true)
+      }
+      r
+    }}}
     val total = r.agg(sum("ppr").as("tot"))
     r.crossJoin(broadcast(total))
       .select(col("id"), col("ppr"),
@@ -902,31 +882,28 @@ object GraphOps {
 
   private def pageRankExactDistributed(edges: DataFrame, rounds: Int,
       dampPct: Int, scale: Long): DataFrame = {
-    // single-exchange loop-invariant build + cache lifecycle — see
-    // personalizedPageRank
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).distinct().cache()
-    val verts = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct().cache()
-    val eDeg = e.join(
-        e.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
-      .cache()
+    // single-exchange loop-invariant build — see personalizedPageRank
     val restart = lit((100 - dampPct).toLong * scale / 100)
-    var r = verts.select(col("id"), lit(scale).as("pr"))
-    for (_ <- 1 to rounds) {
-      val contrib = r.select(col("id").as("src"), col("pr"))
-        .join(eDeg, Seq("src"))
-        .select(col("dst").as("id"), expr("pr div deg").as("c"))
-        .groupBy("id").agg(sum("c").as("c"))
-      r = verts.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (expr(s"(${dampPct}L * coalesce(c, 0L)) div 100") +
-            restart).as("pr"))
-        .localCheckpoint(eager = true)
-    }
-    eDeg.unpersist()
-    verts.unpersist()
-    e.unpersist()
+    val r = LocalStrategy.cached(edges.select(col("src"), col("dst"))
+        .repartition(col("src")).distinct()) { e =>
+    LocalStrategy.cached(e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()) { verts =>
+    LocalStrategy.cached(e.join(
+        e.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))) { eDeg =>
+      var r = verts.select(col("id"), lit(scale).as("pr"))
+      for (_ <- 1 to rounds) {
+        val contrib = r.select(col("id").as("src"), col("pr"))
+          .join(eDeg, Seq("src"))
+          .select(col("dst").as("id"), expr("pr div deg").as("c"))
+          .groupBy("id").agg(sum("c").as("c"))
+        r = verts.join(contrib, Seq("id"), "left")
+          .select(col("id"),
+            (expr(s"(${dampPct}L * coalesce(c, 0L)) div 100") +
+              restart).as("pr"))
+          .localCheckpoint(eager = true)
+      }
+      r
+    }}}
     val total = r.agg(sum("pr").as("tot"))
     r.crossJoin(broadcast(total))
       .select(col("id"), col("pr"),

@@ -88,8 +88,6 @@ object CorpusOps {
       }
     val weighted = keys.withColumn("__w__",
       floor(powAlpha * lit(1048576.0)).cast("long"))
-      .cache() // bounded key table, consumed by apportion AND the
-               // n_key re-join — caching keeps the corpus scan single
     UrlOps.apportion(weighted, "key", "__w__", total)
       .join(weighted.select(col("key"), col("n_key")), Seq("key"))
       .select(col("key"), col("alloc"), col("n_key"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.LocalStrategy
 import graft.functions.TextFunctions
 
 /** Training-data pipeline operators beyond dedup/similarity: exact
@@ -456,7 +457,6 @@ object PipelineOps {
     require(k >= 2, "heavyHitters needs k >= 2")
     val counts = df.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol)).agg(count(lit(1)).as("cnt"))
-      .cache() // one input scan: the total re-aggregates the counts
     val total = counts.agg(sum(col("cnt")).cast("double").as("n"))
     counts.crossJoin(broadcast(total))
       .filter(col("cnt") > col("n") / k)
@@ -659,19 +659,23 @@ object PipelineOps {
       idCol: String, budget: Long, nBuckets: Int = 32): DataFrame = {
     val base = docs
       .filter(col(scoreCol).isNotNull && col(tokenCol).isNotNull)
-      .withColumn("__tok__", col(tokenCol).cast("long")).cache()
+      .withColumn("__tok__", col(tokenCol).cast("long"))
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val bounds = base.select(col(scoreCol).cast("double").as("__s__"))
-      .stat.approxQuantile("__s__", probs, 0.001).distinct.sorted
-    // bucket 0 = highest scores (no boundary ≥ score); equal scores
-    // always share a bucket, so bucket-ascending = score-descending
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col(scoreCol).cast("double") <= lit(b), 1).otherwise(0)
+    // the quantile action and the totals collect read one cached
+    // base; the returned plan reads it uncached
+    val (bucket, totals) = LocalStrategy.cached(base) { base =>
+      val bounds = base.select(col(scoreCol).cast("double").as("__s__"))
+        .stat.approxQuantile("__s__", probs, 0.001).distinct.sorted
+      // bucket 0 = highest scores (no boundary ≥ score); equal scores
+      // always share a bucket, so bucket-ascending = score-descending
+      val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
+        acc + when(col(scoreCol).cast("double") <= lit(b), 1).otherwise(0)
+      }
+      (bucket, base.withColumn("__bkt__", bucket).groupBy("__bkt__")
+        .agg(sum(col("__tok__")).as("__tot__"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
     }
     val withB = base.withColumn("__bkt__", bucket)
-    val totals = withB.groupBy("__bkt__")
-      .agg(sum(col("__tok__")).as("__tot__"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (b, t)) =>
       (b, acc + t)
     }.init.map { case (_, off) => off }
@@ -994,7 +998,6 @@ object PipelineOps {
         when(col("__wt__") - col("__cumw__") > 0,
           (lit(budget) - col("__cumc__")) /
             (col("__wt__") - col("__cumw__"))))
-      .cache()
     // pivot = FIRST source (sorted order) whose candidate λ stops
     // the capping cascade; none ⇒ budget ≥ Σcap ⇒ everything capped
     val pivot = cand
@@ -1043,7 +1046,6 @@ object PipelineOps {
           array_sort(collect_list(struct(col("pos"), col("tok")))),
           s => s.getField("tok")), " ").as("phrase"),
         count(lit(1)).as("plen"))
-      .cache() // feeds both the word stats and the scoring join
     val words = phrased.select(col("doc"), col("pid"), col("tok"))
       .join(phrases.select(col("doc"), col("pid"), col("plen")),
         Seq("doc", "pid"))

@@ -353,7 +353,7 @@ object Similarity {
     }: _*)).getField("negc") * -1
     val assigned = df
       .select(col(idCol), col(vecCol))
-      .withColumn("cluster", assign.cast("long")).cache()
+      .withColumn("cluster", assign.cast("long"))
     val l = assigned.select(col("cluster"), col(idCol).as("__ida__"),
       col(vecCol).as("__va__"))
     val r = assigned.select(col("cluster"), col(idCol).as("__idb__"),

@@ -67,10 +67,9 @@ object Conformal {
   def splitConformal(df0: DataFrame, keyCols: Seq[String], yCol: String,
       yhatCol: String, calCol: String,
       alphaNum: Int = 1, alphaDen: Int = 10): DataFrame = {
-    val df = df0.cache()
-    val qhat = conformalQhat(df, keyCols, yCol, yhatCol, calCol,
+    val qhat = conformalQhat(df0, keyCols, yCol, yhatCol, calCol,
       alphaNum, alphaDen)
-    df.filter(!col(calCol))
+    df0.filter(!col(calCol))
       .withColumn("__r__", absResid(yCol, yhatCol))
       .join(qhat, keyCols, "right")
       .groupBy(keyCols.map(col): _*)

@@ -9,6 +9,7 @@ import org.apache.spark.ml.regression.{DecisionTreeRegressor,
   GBTRegressor, LinearRegression, RandomForestRegressor}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** ML layer (reference src/ml/: preprocessing/mod.rs:14-302,
   * clustering/mod.rs:46, dimension/mod.rs:17, models/linear.rs:16).
@@ -90,7 +91,7 @@ object MlOps {
   def rankGauss(df: DataFrame, valueCol: String,
       outName: String = "gauss_rank"): DataFrame = {
     val counts = df.filter(col(valueCol).isNotNull)
-      .groupBy(col(valueCol)).agg(count(lit(1)).as("__c__")).cache()
+      .groupBy(col(valueCol)).agg(count(lit(1)).as("__c__"))
     val ranks = graft.stats.StatsOps.distinctValueRanks(
       counts, valueCol, "__c__")
     val tot = counts.agg(sum("__c__").cast("double").as("__n__"))
@@ -356,103 +357,101 @@ object MlOps {
     val par = df.sparkSession.sparkContext.defaultParallelism
     val smallInput = prepared.queryExecution.optimizedPlan.stats
       .sizeInBytes < BigInt(par.toLong) * (16L << 20)
-    val base = (if (smallInput) prepared.repartition(par)
-      else prepared).cache()
 
     def cell(c: Column, name: String) =
       sum(round(c, 12).cast("decimal(38,12)")).cast("double").as(name)
 
-    // init: b0 = decimal mean of ln t, b1 = 0, u = 0 (σ = 1).
-    // θ is a SINGLE ROW per round; fetching it to the driver (the
-    // repo's bounded 1-row-aggregate-collect convention) instead of
-    // chaining it back in as a broadcast turns every Newton round
-    // into ONE plain global aggregate over the cached base — the
-    // before-plan nested 6 BroadcastExchange waits + 4-key
-    // re-aggregations that existed only to carry 4 constants
-    // (plans/r10/q444_aft_twin_before.txt). All per-row arithmetic
-    // stays in Column expressions over lit() inputs, so every value
-    // is bit-identical to the broadcast form (oracle re-verified).
-    val initRow = base.agg(count(lit(1)).as("n"), cell(col("lnt"), "s"))
-      .select(col("n"), round(col("s") / col("n"), 12).as("b0"))
-      .head()
-    val n0 = initRow.getLong(0)
-    if (n0 == 0) {
+    LocalStrategy.cached(
+        if (smallInput) prepared.repartition(par) else prepared) { base =>
+      // one Newton round: aggregate gradient + negative Hessian with
+      // order-free decimal sums, Cramer ridge solve, θ += Δ
+      def newtonRound(b0v: Double, b1v: Double,
+          uv: Double): (Double, Double, Double) = {
+        val sg = round(exp(lit(uv)), 9)
+        val eps = (col("lnt") - lit(b0v) - lit(b1v) * col("x")) / sg
+        val rows = base
+          .select(col("x"), col("d"), sg.as("sg"), eps.as("eps"),
+            least(round(exp(eps), 9), lit(1e12)).as("ee"))
+        val (x, d, e, ep, sgc) = (col("x"), col("d"), col("ee"),
+          col("eps"), col("sg"))
+        val agg = rows.agg(
+          cell((e - d) / sgc, "g1"),
+          cell((e - d) / sgc * x, "g2"),
+          cell(ep * (e - d) - d, "g3"),
+          cell(e / (sgc * sgc), "a11"),
+          cell(e / (sgc * sgc) * x, "a12"),
+          cell((ep * e + e - d) / sgc, "a13"),
+          cell(e / (sgc * sgc) * x * x, "a22"),
+          cell((ep * e + e - d) / sgc * x, "a23"),
+          cell(ep * (e - d) + ep * ep * e, "a33"))
+        val l = lit(ridge)
+        val (a11, a12, a13) = (col("a11") + l, col("a12"), col("a13"))
+        val (a22, a23, a33) =
+          (col("a22") + l, col("a23"), col("a33") + l)
+        val det = a11 * (a22 * a33 - a23 * a23) -
+          a12 * (a12 * a33 - a23 * a13) +
+          a13 * (a12 * a23 - a22 * a13)
+        // damped Newton: scale the WHOLE step so its ∞-norm is ≤ 0.5
+        // (direction preserved — a per-component clamp distorts the
+        // direction and provably diverges on this likelihood; the
+        // flat σ start needs the damping, and convergence is by
+        // round ~4 on planted data)
+        val raw = agg.select(
+          ((col("g1") * (a22 * a33 - a23 * a23) -
+            a12 * (col("g2") * a33 - a23 * col("g3")) +
+            a13 * (col("g2") * a23 - a22 * col("g3"))) / det).as("d1"),
+          ((a11 * (col("g2") * a33 - a23 * col("g3")) -
+            col("g1") * (a12 * a33 - a23 * a13) +
+            a13 * (a12 * col("g3") - col("g2") * a13)) / det).as("d2"),
+          ((a11 * (a22 * col("g3") - col("g2") * a23) -
+            a12 * (a12 * col("g3") - col("g2") * a13) +
+            col("g1") * (a12 * a23 - a22 * a13)) / det).as("d3"))
+        val sc = least(lit(1.0), lit(0.5) / greatest(
+          abs(col("d1")), abs(col("d2")), abs(col("d3"))))
+        val stepped = raw.select(
+          round(lit(b0v) + col("d1") * sc, 12).as("b0"),
+          round(lit(b1v) + col("d2") * sc, 12).as("b1"),
+          round(lit(uv) + col("d3") * sc, 12).as("u"))
+          .head()
+        (stepped.getDouble(0), stepped.getDouble(1), stepped.getDouble(2))
+      }
+
+      // init: b0 = decimal mean of ln t, b1 = 0, u = 0 (σ = 1).
+      // θ is a SINGLE ROW per round; fetching it to the driver (the
+      // repo's bounded 1-row-aggregate-collect convention) instead of
+      // chaining it back in as a broadcast turns every Newton round
+      // into ONE plain global aggregate over the cached base — the
+      // before-plan nested 6 BroadcastExchange waits + 4-key
+      // re-aggregations that existed only to carry 4 constants
+      // (plans/r10/q444_aft_twin_before.txt). All per-row arithmetic
+      // stays in Column expressions over lit() inputs, so every value
+      // is bit-identical to the broadcast form (oracle re-verified).
+      val initRow = base.agg(count(lit(1)).as("n"), cell(col("lnt"), "s"))
+        .select(col("n"), round(col("s") / col("n"), 12).as("b0"))
+        .head()
+      val n0 = initRow.getLong(0)
       // empty post-filter input: return NULL theta — getDouble on
       // the NULL decimal mean silently unboxes to 0.0 and every
       // Newton round would fabricate numbers from it (round-10
       // advice; the old DataFrame-carried form propagated NULLs)
-      base.unpersist()
-      return df.sparkSession.range(1).select(
+      if (n0 == 0) df.sparkSession.range(1).select(
         lit(rounds.toLong).as("n_rounds"), lit(0L).as("n"),
         lit(null).cast("double").as("b0"),
         lit(null).cast("double").as("b1"),
         lit(null).cast("double").as("ln_sigma"),
         lit(null).cast("double").as("sigma"))
+      else {
+        var theta = (initRow.getDouble(1), 0.0, 0.0) // (b0, b1, u)
+        for (_ <- 1 to rounds)
+          theta = newtonRound(theta._1, theta._2, theta._3)
+        // theta is driver-held; nothing downstream reads the cache
+        base.sparkSession.range(1).select(
+          lit(rounds.toLong).as("n_rounds"), lit(n0).as("n"),
+          lit(theta._1).as("b0"), lit(theta._2).as("b1"),
+          lit(theta._3).as("ln_sigma"),
+          round(exp(lit(theta._3)), 9).as("sigma"))
+      }
     }
-    var theta = (initRow.getDouble(1), 0.0, 0.0) // (b0, b1, u)
-
-    // one Newton round: aggregate gradient + negative Hessian with
-    // order-free decimal sums, Cramer ridge solve, θ += Δ
-    def newtonRound(b0v: Double, b1v: Double,
-        uv: Double): (Double, Double, Double) = {
-      val sg = round(exp(lit(uv)), 9)
-      val eps = (col("lnt") - lit(b0v) - lit(b1v) * col("x")) / sg
-      val rows = base
-        .select(col("x"), col("d"), sg.as("sg"), eps.as("eps"),
-          least(round(exp(eps), 9), lit(1e12)).as("ee"))
-      val (x, d, e, ep, sgc) = (col("x"), col("d"), col("ee"),
-        col("eps"), col("sg"))
-      val agg = rows.agg(
-        cell((e - d) / sgc, "g1"),
-        cell((e - d) / sgc * x, "g2"),
-        cell(ep * (e - d) - d, "g3"),
-        cell(e / (sgc * sgc), "a11"),
-        cell(e / (sgc * sgc) * x, "a12"),
-        cell((ep * e + e - d) / sgc, "a13"),
-        cell(e / (sgc * sgc) * x * x, "a22"),
-        cell((ep * e + e - d) / sgc * x, "a23"),
-        cell(ep * (e - d) + ep * ep * e, "a33"))
-      val l = lit(ridge)
-      val (a11, a12, a13) = (col("a11") + l, col("a12"), col("a13"))
-      val (a22, a23, a33) =
-        (col("a22") + l, col("a23"), col("a33") + l)
-      val det = a11 * (a22 * a33 - a23 * a23) -
-        a12 * (a12 * a33 - a23 * a13) +
-        a13 * (a12 * a23 - a22 * a13)
-      // damped Newton: scale the WHOLE step so its ∞-norm is ≤ 0.5
-      // (direction preserved — a per-component clamp distorts the
-      // direction and provably diverges on this likelihood; the
-      // flat σ start needs the damping, and convergence is by
-      // round ~4 on planted data)
-      val raw = agg.select(
-        ((col("g1") * (a22 * a33 - a23 * a23) -
-          a12 * (col("g2") * a33 - a23 * col("g3")) +
-          a13 * (col("g2") * a23 - a22 * col("g3"))) / det).as("d1"),
-        ((a11 * (col("g2") * a33 - a23 * col("g3")) -
-          col("g1") * (a12 * a33 - a23 * a13) +
-          a13 * (a12 * col("g3") - col("g2") * a13)) / det).as("d2"),
-        ((a11 * (a22 * col("g3") - col("g2") * a23) -
-          a12 * (a12 * col("g3") - col("g2") * a13) +
-          col("g1") * (a12 * a23 - a22 * a13)) / det).as("d3"))
-      val sc = least(lit(1.0), lit(0.5) / greatest(
-        abs(col("d1")), abs(col("d2")), abs(col("d3"))))
-      val stepped = raw.select(
-        round(lit(b0v) + col("d1") * sc, 12).as("b0"),
-        round(lit(b1v) + col("d2") * sc, 12).as("b1"),
-        round(lit(uv) + col("d3") * sc, 12).as("u"))
-        .head()
-      (stepped.getDouble(0), stepped.getDouble(1), stepped.getDouble(2))
-    }
-
-    for (_ <- 1 to rounds)
-      theta = newtonRound(theta._1, theta._2, theta._3)
-    // theta is driver-held; nothing downstream reads the cache
-    base.unpersist()
-    base.sparkSession.range(1).select(
-      lit(rounds.toLong).as("n_rounds"), lit(n0).as("n"),
-      lit(theta._1).as("b0"), lit(theta._2).as("b1"),
-      lit(theta._3).as("ln_sigma"),
-      round(exp(lit(theta._3)), 9).as("sigma"))
   }
 
   /** DecisionTree classifier/regressor (models/tree.rs:185,669) via

@@ -54,12 +54,10 @@ object ModelSelection {
 
   /** Fold stats joined with the complement (train = totals − fold).
     * The totals frame is one row; Spark broadcasts the nested-loop
-    * join, so this is k rows of arithmetic. The k-row fold-stat frame
-    * is cached so the totals branch reuses it instead of re-scanning
-    * the base data (Catalyst does not share uncached subplans — without
-    * this the plan reads the input twice). */
-  private def withTrainStats(fs0: DataFrame): DataFrame = {
-    val fs = fs0.cache()
+    * join, so this is k rows of arithmetic. The totals branch reuses
+    * the fold-stat aggregate's shuffle (ReusedExchange), so the base
+    * data is scanned once. */
+  private def withTrainStats(fs: DataFrame): DataFrame = {
     val tot = fs.agg(sum("n").as("tn0"), sum("sx").as("tsx0"),
       sum("sy").as("tsy0"), sum("sxx").as("tsxx0"),
       sum("syy").as("tsyy0"), sum("sxy").as("tsxy0"))

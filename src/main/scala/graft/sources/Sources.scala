@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.LocalStrategy
 
 /** Source/sink surface (reference §2.1: src/io/csv.rs:11,74,
   * src/io/json.rs:13,103, src/io/parquet.rs:175,369,
@@ -145,18 +146,22 @@ object Sources {
     val fs = outPath.getFileSystem(hconf)
     val samplePath = new org.apache.hadoop.fs.Path(
       path + "__graft_width_sample")
-    val sample = df.limit(sampleRows).cache()
-    val n = sample.count()
+    val (n, sampleBytes) = LocalStrategy.cached(df.limit(sampleRows)) {
+      sample =>
+        val n = sample.count()
+        if (n == 0) (0L, 0L)
+        else {
+          sample.coalesce(1).write.mode("overwrite")
+            .parquet(samplePath.toString)
+          val bytes = fs.getContentSummary(samplePath).getLength
+          fs.delete(samplePath, true)
+          (n, bytes)
+        }
+    }
     if (n == 0) {
-      sample.unpersist()
       df.write.mode("overwrite").parquet(path)
       return 0L
     }
-    sample.coalesce(1).write.mode("overwrite")
-      .parquet(samplePath.toString)
-    val sampleBytes = fs.getContentSummary(samplePath).getLength
-    fs.delete(samplePath, true)
-    sample.unpersist()
     val bytesPerRow = math.max(1.0, sampleBytes.toDouble / n)
     val rowsPerFile =
       math.max(1L, (targetBytes / bytesPerRow).toLong)

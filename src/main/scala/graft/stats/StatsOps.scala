@@ -2,6 +2,7 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Statistics layer (reference src/stats/mod.rs:157-533,
   * src/optimized/split_dataframe/stats.rs): descriptive stats and
@@ -489,7 +490,6 @@ object StatsOps {
       expected: Map[String, Double] = Map.empty): DataFrame = {
     val df = df0.filter(col(c).isNotNull)
     val counts = df.groupBy(col(c)).agg(count(lit(1)).as("o"))
-      .cache() // consumed by both the margin total and the cell scan
     if (expected.nonEmpty) {
       val s = expected.values.sum
       require(math.abs(s - 1.0) < 1e-9,
@@ -625,7 +625,6 @@ object StatsOps {
       .agg(count(lit(1)).as("n"),
         sum(dec(col(valueCol))).as("s1"),
         sum(dec(col(valueCol)) * dec(col(valueCol))).as("s2"))
-      .cache() // reused by the total aggregate and both pair sides
     val tot = g.agg(count(lit(1)).as("k"), sum(col("n")).as("nn"),
       sum(col("s2")).as("ts2"),
       sum(col("s1").cast("double") * col("s1").cast("double") /
@@ -1212,7 +1211,7 @@ object StatsOps {
     val pooled = df.filter(col(valueCol).isNotNull &&
       col(groupCol).isNotNull)
     val counts = pooled.groupBy(col(valueCol))
-      .agg(count(lit(1)).as("__c__")).cache()
+      .agg(count(lit(1)).as("__c__"))
     val ranks = distinctValueRanks(counts, valueCol, "__c__")
     val ties = counts.agg(
       sum(col("__c__") * col("__c__") * col("__c__") - col("__c__"))
@@ -1250,7 +1249,7 @@ object StatsOps {
         col(xCol).cast("double") - col(yCol).cast("double"))
       .filter(col("__d__") =!= 0.0)
     val counts = nz.groupBy(abs(col("__d__")).as("__ad__"))
-      .agg(count(lit(1)).as("__c__")).cache()
+      .agg(count(lit(1)).as("__c__"))
     val ranks = distinctValueRanks(counts, "__ad__", "__c__")
     val ties = counts.agg(
       sum(col("__c__") * col("__c__") * col("__c__") - col("__c__"))
@@ -1289,11 +1288,12 @@ object StatsOps {
     val counts = pooled.groupBy(col(valueCol))
       .agg(sum(when(col(groupCol) === gA, 1L).otherwise(0L)).as("ca"),
         sum(when(col(groupCol) === gB, 1L).otherwise(0L)).as("cb"))
-      .cache()
-    val belowA = distinctValueCumCounts(counts.select(col(valueCol),
-      col("ca")), valueCol, "ca").withColumnRenamed("__below__", "ba")
-    val belowB = distinctValueCumCounts(counts.select(col(valueCol),
-      col("cb")), valueCol, "cb").withColumnRenamed("__below__", "bb")
+    val (belowA, belowB) = LocalStrategy.cached(counts) { counts =>
+      (distinctValueCumCounts(counts.select(col(valueCol), col("ca")),
+          valueCol, "ca").withColumnRenamed("__below__", "ba"),
+        distinctValueCumCounts(counts.select(col(valueCol), col("cb")),
+          valueCol, "cb").withColumnRenamed("__below__", "bb"))
+    }
     val d0 = counts.join(belowA.select(col(valueCol), col("ba")), Seq(valueCol))
       .join(belowB.select(col(valueCol), col("bb")), Seq(valueCol))
       .crossJoin(broadcast(counts.agg(
@@ -1580,22 +1580,23 @@ object StatsOps {
   def distinctValueCumCounts(counts0: DataFrame, valueCol: String,
       cntCol: String, nBuckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // three consumers (quantile action, totals collect, final plan):
-    // cache so the upstream full-data aggregation runs once
-    val counts = counts0.cache()
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    val bounds = counts.na.drop(Seq(valueCol))
-      .select(col(valueCol).cast("double").as("__v__"))
-      .stat.approxQuantile("__v__", probs, 0.001).distinct.sorted
-    val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col(valueCol).cast("double") > lit(b), 1).otherwise(0)
+    // the quantile action and the totals collect read one cached
+    // counts table; the returned plan reads counts0 uncached
+    val (bucket, totals) = LocalStrategy.cached(counts0) { counts =>
+      val bounds = counts.na.drop(Seq(valueCol))
+        .select(col(valueCol).cast("double").as("__v__"))
+        .stat.approxQuantile("__v__", probs, 0.001).distinct.sorted
+      val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
+        acc + when(col(valueCol).cast("double") > lit(b), 1).otherwise(0)
+      }
+      // per-bucket totals: ≤ nBuckets rows — driver-side prefix sums
+      // become literal offsets (documented cold-path finalization)
+      (bucket, counts.withColumn("__bkt__", bucket).groupBy("__bkt__")
+        .agg(sum(col(cntCol)).as("__tot__"))
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
     }
-    val withB = counts.withColumn("__bkt__", bucket)
-    // per-bucket totals: ≤ nBuckets rows — driver-side prefix sums
-    // become literal offsets (documented cold-path finalization)
-    val totals = withB.groupBy("__bkt__")
-      .agg(sum(col(cntCol)).as("__tot__"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
+    val withB = counts0.withColumn("__bkt__", bucket)
     val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (b, t)) =>
       (b, acc + t)
     }.init.map { case (_, off) => off }
@@ -1644,7 +1645,6 @@ object StatsOps {
       gA: String, gB: String): DataFrame = {
     val pooled = df.filter(col(groupCol).isin(gA, gB))
     val counts = pooled.groupBy(col(valueCol)).agg(count(lit(1)).as("__c__"))
-      .cache() // shared by the tie aggregate and the rank map
     val rankMap = distinctValueRanks(counts, valueCol, "__c__")
     // tie term T = Σ(c³−c) over distinct values
     val ties = counts.agg(sum(col("__c__") * col("__c__") * col("__c__") -
@@ -1675,15 +1675,21 @@ object StatsOps {
 
   /** Bootstrap distribution of a statistic (stats/mod.rs:310-328):
     * nResamples seeded with-replacement samples, each reduced by the
-    * caller's aggregate — returns one row per resample. Resamples run
-    * as independent distributed jobs over the same cached input. */
+    * caller's aggregate — returns one row per resample. The resamples
+    * run over the input cached for the call, and their nResamples
+    * rows are collected before the cache is released, so the input is
+    * scanned once. */
   def bootstrap(df: DataFrame, nResamples: Int, stat: Column,
       seed: Long = 42L): DataFrame = {
-    val cached = df.cache()
-    (0 until nResamples).map { i =>
-      cached.sample(withReplacement = true, 1.0, seed + i)
-        .agg(stat.as("stat")).withColumn("resample", lit(i))
-    }.reduce(_ unionByName _)
+    import scala.jdk.CollectionConverters._
+    LocalStrategy.cached(df) { cached =>
+      val resamples = (0 until nResamples).map { i =>
+        cached.sample(withReplacement = true, 1.0, seed + i)
+          .agg(stat.as("stat")).withColumn("resample", lit(i))
+      }.reduce(_ unionByName _)
+      df.sparkSession.createDataFrame(resamples.collect().toSeq.asJava,
+        resamples.schema)
+    }
   }
 
   /** Outlier detection by z-score or IQR (stats/mod.rs:721):
@@ -1713,7 +1719,7 @@ object StatsOps {
     val pooled = df0.filter(col(valueCol).isNotNull &&
       col(groupCol).isNotNull)
     val counts = pooled.groupBy(col(valueCol))
-      .agg(count(lit(1)).as("__c__")).cache()
+      .agg(count(lit(1)).as("__c__"))
     val ranks = distinctValueRanks(counts, valueCol, "__c__")
     val ties = counts.agg(
       sum(col("__c__") * col("__c__") * col("__c__") - col("__c__"))
@@ -2045,17 +2051,18 @@ object StatsOps {
       gA: String, gB: String): DataFrame = {
     val pooled = df0
       .filter(col(groupCol).isin(gA, gB) && col(valueCol).isNotNull)
-      .select(col(groupCol).as("g"), col(valueCol).as("v")).cache()
-    val countsAll = pooled.groupBy("v").agg(count(lit(1)).as("__c__"))
-    val rankAll = distinctValueRanks(countsAll, "v", "__c__")
-      .withColumnRenamed("__r__", "rall")
-    def withinRanks(gv: String) = {
-      val c = pooled.filter(col("g") === gv).groupBy("v")
-        .agg(count(lit(1)).as("__c__"))
-      distinctValueRanks(c, "v", "__c__")
-        .withColumnRenamed("__r__", "rwin").withColumn("g", lit(gv))
+      .select(col(groupCol).as("g"), col(valueCol).as("v"))
+    val (rankAll, within) = LocalStrategy.cached(pooled) { pooled =>
+      def withinRanks(gv: String) = {
+        val c = pooled.filter(col("g") === gv).groupBy("v")
+          .agg(count(lit(1)).as("__c__"))
+        distinctValueRanks(c, "v", "__c__")
+          .withColumnRenamed("__r__", "rwin").withColumn("g", lit(gv))
+      }
+      (distinctValueRanks(pooled.groupBy("v").agg(count(lit(1)).as("__c__")),
+          "v", "__c__").withColumnRenamed("__r__", "rall"),
+        withinRanks(gA).unionByName(withinRanks(gB)))
     }
-    val within = withinRanks(gA).unionByName(withinRanks(gB))
     val stats = pooled.join(broadcast(rankAll), Seq("v"))
       .join(broadcast(within), Seq("g", "v"))
       .select(col("g"),
@@ -2274,31 +2281,32 @@ object StatsOps {
       nBuckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(cols.size >= 2, "corrMatrixSpearman needs ≥ 2 columns")
-    val df = df0.na.drop(cols).cache()
+    val df = df0.na.drop(cols)
     val stacked = df
       .select(explode(array(cols.map(c =>
         struct(lit(c).as("cid"), col(c).cast("long").as("v"))): _*))
         .as("s"))
       .select(col("s.cid").as("cid"), col("s.v").as("v"))
       .groupBy("cid", "v").agg(count(lit(1)).as("c"))
-      .cache()
-    val mm = stacked.groupBy("cid")
-      .agg(min("v").as("mn"), max("v").as("mx")).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val bkt = cols.foldLeft(lit(0)) { (acc, cName) =>
-      val (mn, mx) = mm(cName)
-      val width = mx - mn + 1
-      when(col("cid") === cName,
-        expr(s"CAST(((v - ${mn}L) * $nBuckets) DIV ${width}L AS INT)"))
-        .otherwise(acc)
+    val (bkt, totals) = LocalStrategy.cached(stacked) { stacked =>
+      val mm = stacked.groupBy("cid")
+        .agg(min("v").as("mn"), max("v").as("mx")).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val bkt = cols.foldLeft(lit(0)) { (acc, cName) =>
+        val (mn, mx) = mm(cName)
+        val width = mx - mn + 1
+        when(col("cid") === cName,
+          expr(s"CAST(((v - ${mn}L) * $nBuckets) DIV ${width}L AS INT)"))
+          .otherwise(acc)
+      }
+      // per-(column, bucket) totals: ≤ cols·nBuckets rows — prefix
+      // sums finalize driver-side into a broadcast offset table
+      (bkt, stacked.withColumn("__bkt__", bkt).groupBy("cid", "__bkt__")
+        .agg(sum("c").as("t")).collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
+        .groupBy(_._1))
     }
     val withB = stacked.withColumn("__bkt__", bkt)
-    // per-(column, bucket) totals: ≤ cols·nBuckets rows — prefix sums
-    // finalize driver-side into a broadcast offset table
-    val totals = withB.groupBy("cid", "__bkt__")
-      .agg(sum("c").as("t")).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-      .groupBy(_._1)
     val offRows = totals.toSeq.flatMap { case (cid, rows) =>
       val sorted = rows.sortBy(_._2)
       sorted.zip(sorted.scanLeft(0L)(_ + _._3)).map {
@@ -2346,12 +2354,13 @@ object StatsOps {
         order.indices.tail.map(i =>
           sum(when(col(groupCol) === order(i), 1L).otherwise(0L))
             .as(s"c$i")): _*)
-      .cache()
-    val aligned = order.indices.foldLeft(counts) { (acc, i) =>
-      val bi = distinctValueCumCounts(
-        counts.select(col(valueCol), col(s"c$i")), valueCol, s"c$i")
-        .select(col(valueCol), col("__below__").as(s"b$i"))
-      acc.join(bi, Seq(valueCol))
+    val aligned = LocalStrategy.cached(counts) { counts =>
+      order.indices.foldLeft(counts) { (acc, i) =>
+        val bi = distinctValueCumCounts(
+          counts.select(col(valueCol), col(s"c$i")), valueCol, s"c$i")
+          .select(col(valueCol), col("__below__").as(s"b$i"))
+        acc.join(bi, Seq(valueCol))
+      }
     }
     val pairTerms = for {
       i <- order.indices; j <- order.indices if i < j
@@ -3197,7 +3206,7 @@ object StatsOps {
   def kendallTauB(df0: DataFrame, a: String, b: String): DataFrame = {
     val df = df0.filter(col(a).isNotNull && col(b).isNotNull)
     val cells = df.groupBy(col(a).as("va"), col(b).as("vb"))
-      .agg(count(lit(1)).as("c")).cache()
+      .agg(count(lit(1)).as("c"))
     val l = cells.select(col("va").as("xa"), col("vb").as("ya"),
       col("c").as("c1"))
     val r = cells.select(col("va").as("xb"), col("vb").as("yb"),
@@ -3536,12 +3545,19 @@ object StatsOps {
           sqrt(nD * rec(s"ss_$b") - sy * sy))
     }
     val Seq(c1, c2, c3) = cols
-    val r12 = rr(c1, c2); val r13 = rr(c1, c3); val r23 = rr(c2, c3)
-    val det = lit(1.0) + lit(2.0) * r12 * r13 * r23 -
-      r12 * r12 - r13 * r13 - r23 * r23
+    // one projection per stage: each stage references the previous
+    // one's columns more than once, so CollapseProject keeps them
+    // apart and no generated method inlines the decimal recombinations
+    // of every r into det and every v (one method grew past 64 KB)
+    val (r12, r13, r23) = (col("r12"), col("r13"), col("r23"))
+    val det = col("det")
     def v(rOther: Column) =
       round(when(det > 0, (lit(1.0) - rOther * rOther) / det), 6)
-    one.select(explode(array(
+    one.select(rr(c1, c2).as("r12"), rr(c1, c3).as("r13"),
+        rr(c2, c3).as("r23"))
+      .select(r12, r13, r23, (lit(1.0) + lit(2.0) * r12 * r13 * r23 -
+        r12 * r12 - r13 * r13 - r23 * r23).as("det"))
+      .select(explode(array(
         struct(lit(c1).as("column"), v(r23).as("vif")),
         struct(lit(c2).as("column"), v(r13).as("vif")),
         struct(lit(c3).as("column"), v(r12).as("vif")))).as("r"))

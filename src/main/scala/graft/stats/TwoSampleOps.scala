@@ -2,6 +2,7 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.LocalStrategy
 
 /** Two-sample distribution comparisons (reference src/stats — the
   * hypothesis-test family): Kolmogorov-Smirnov, Jensen-Shannon
@@ -30,13 +31,14 @@ object TwoSampleOps {
     val counts = pooled.groupBy(col(valueCol)).agg(
       sum(when(col(groupCol) === gA, 1L).otherwise(0L)).as("__ca__"),
       sum(when(col(groupCol) === gB, 1L).otherwise(0L)).as("__cb__"))
-      .cache() // consumed by two cum-count passes and the totals agg
-    val cumA = StatsOps.distinctValueCumCounts(counts, valueCol, "__ca__")
-      .select(col(valueCol),
-        (col("__below__") + col("__ca__")).as("__cuma__"))
-    val cumB = StatsOps.distinctValueCumCounts(counts, valueCol, "__cb__")
-      .select(col(valueCol),
-        (col("__below__") + col("__cb__")).as("__cumb__"))
+    val (cumA, cumB) = LocalStrategy.cached(counts) { counts =>
+      (StatsOps.distinctValueCumCounts(counts, valueCol, "__ca__")
+        .select(col(valueCol),
+          (col("__below__") + col("__ca__")).as("__cuma__")),
+        StatsOps.distinctValueCumCounts(counts, valueCol, "__cb__")
+          .select(col(valueCol),
+            (col("__below__") + col("__cb__")).as("__cumb__")))
+    }
     val tot = counts.agg(
       sum(col("__ca__")).cast("double").as("na"),
       sum(col("__cb__")).cast("double").as("nb"))
@@ -148,11 +150,13 @@ object TwoSampleOps {
     val counts = pooled.groupBy(col(valueCol)).agg(
       sum(when(col(groupCol) === gA, 1L).otherwise(0L)).as("__ca__"),
       sum(when(col(groupCol) === gB, 1L).otherwise(0L)).as("__cb__"))
-      .cache()
-    val belowA = StatsOps.distinctValueCumCounts(counts, valueCol, "__ca__")
-      .select(col(valueCol), col("__ca__"), col("__below__").as("__ba__"))
-    val belowB = StatsOps.distinctValueCumCounts(counts, valueCol, "__cb__")
-      .select(col(valueCol), col("__cb__"), col("__below__").as("__bb__"))
+    val (belowA, belowB) = LocalStrategy.cached(counts) { counts =>
+      (StatsOps.distinctValueCumCounts(counts, valueCol, "__ca__")
+        .select(col(valueCol), col("__ca__"), col("__below__").as("__ba__")),
+        StatsOps.distinctValueCumCounts(counts, valueCol, "__cb__")
+          .select(col(valueCol), col("__cb__"),
+            col("__below__").as("__bb__")))
+    }
     // doubled overall midrank R = 2·below_tot + c_tot + 1 (integral);
     // Σ_{k=1..c}(R − 2·below_g − 2k)² = 4·Σ(r − i)² for the group —
     // closed form c·A² − 2A·c(c+1) + 2c(c+1)(2c+1)/3, all LONG ops

@@ -27,13 +27,13 @@ object VisOps {
     require(nBins > 0 && hi > lo)
     val width = (hi - lo) / nBins
     val v = col(valueCol).cast("double")
-    // cached: the max branch below must reuse these nBins rows, not
-    // re-aggregate the base (Catalyst does not share uncached subplans)
+    // the max branch reads the same aggregate: Spark plans it once
+    // and reuses its shuffle (ReusedExchange), so the base is scanned
+    // once
     val binned = df
       .filter(v.isNotNull && v >= lo && v < hi)
       .select(floor((v - lit(lo)) / lit(width)).cast("int").as("bin"))
       .groupBy("bin").agg(count(lit(1)).as("cnt"))
-      .cache()
     // nBins rows from here on: the 1-row max broadcast is a
     // constant-size plot table, not a data-scale shuffle.
     binned
@@ -60,9 +60,9 @@ object VisOps {
     val day = datediff(col(dateCol).cast("date"),
       lit("1970-01-01").cast("date")).cast("long")
     // ONE full-data pass: aggregate straight to the (key, day) table
-    // (bounded by keys × days), cache it, and derive both the global
-    // span and the bucket means from those rows — the span branch
-    // must not trigger a second scan of the base data.
+    // (bounded by keys × days) and derive both the global span and
+    // the bucket means from those rows — the span branch reuses the
+    // aggregate's shuffle instead of scanning the base data again.
     val daily = df
       .filter(col(keyCol).isNotNull && col(dateCol).isNotNull &&
         col(valueCol).isNotNull)
@@ -70,7 +70,6 @@ object VisOps {
         col(valueCol).cast("long").as("v"))
       .groupBy("k", "d")
       .agg(sum("v").as("sv"), count(lit(1)).as("cv"))
-      .cache()
     val span = daily.agg(min("d").as("mind"), max("d").as("maxd"))
     val buckets = daily.crossJoin(broadcast(span))
       .select(col("k"),

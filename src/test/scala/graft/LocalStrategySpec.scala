@@ -1,19 +1,25 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.avg
 import org.apache.spark.sql.types._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import scala.jdk.CollectionConverters._
 import graft.graphops.GraphOps
+import graft.llm.PipelineOps
 import graft.ml.Clustering
+import graft.stats.{StatsOps, TwoSampleOps}
 
 /** The two physical strategies of pageRankExact, personalizedPageRank,
   * kCore and kmeansLloyd (graft.LocalStrategy) must be
   * indistinguishable: the same schema (names, types, nullability) and
   * the same rows, whether the input is collected and iterated on the
-  * driver (the default threshold) or run distributed (threshold −1). */
+  * driver (the default threshold) or run distributed (threshold −1).
+  * Also the cache rule that LocalStrategy owns: `cached` is the only
+  * cache in `src/main`, and no call leaves one behind. */
 class LocalStrategySpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -215,5 +221,99 @@ class LocalStrategySpec extends SparkSpecBase {
       GraphOps.kCore(e, 2).collect()
       e.storageLevel should not be org.apache.spark.storage.StorageLevel.NONE
     } finally e.unpersist()
+  }
+
+  test("no call leaves a cache behind, also when it throws") {
+    val cm = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val sample = Seq(("a", 1L), ("a", 3L), ("b", 2L), ("b", 3L), ("a", 5L),
+      ("b", 7L), ("a", 3L), ("b", 9L)).toDF("g", "v")
+    val docs = (1 to 40).map(i => (i.toLong, (i * 7 % 13).toDouble, i % 5 + 1))
+      .toDF("id", "score", "tokens")
+    val path = (1L to 12L).map(v => (v, v + 1)).toDF("src", "dst")
+    val partition = (1L to 13L).map(v => (v, v % 3)).toDF("id", "comm")
+    val calls = Seq[(String, () => Unit)](
+      "mannWhitneyUTest" -> (() =>
+        StatsOps.mannWhitneyUTest(sample, "v", "g", "a", "b").collect()),
+      "ksTest" -> (() => StatsOps.ksTest(sample, "v", "g", "a", "b").collect()),
+      "ksTwoSample" -> (() =>
+        TwoSampleOps.ksTwoSample(sample, "v", "g", "a", "b").collect()),
+      "takeByBudget" -> (() =>
+        PipelineOps.takeByBudget(docs, "score", "tokens", "id", 50L).collect()),
+      "heavyHitters" -> (() =>
+        PipelineOps.heavyHitters(sample, "v", 4).collect()),
+      "modularity" -> (() => GraphOps.modularity(path, partition).collect()),
+      "bootstrap" -> (() => StatsOps.bootstrap(sample, 5, avg("v")).collect()),
+      // a path graph does not converge in one superstep
+      "connectedComponents throws" -> (() => intercept[IllegalStateException](
+        GraphOps.connectedComponents(path, maxIter = 1))))
+    val sc = spark.sparkContext
+    for ((name, call) <- calls) {
+      cm.isEmpty shouldBe true
+      val before = sc.getPersistentRDDs.keySet
+      call()
+      withClue(s"$name left a cache entry: ")(cm.isEmpty shouldBe true)
+      // nor a block that outlives its frames (a checkpoint is freed
+      // with the frame that reads it)
+      eventually(timeout(30.seconds)) {
+        System.gc()
+        withClue(s"$name: ")(
+          sc.getPersistentRDDs.keySet -- before shouldBe empty)
+      }
+    }
+  }
+
+  /** the code of a Scala source: comments dropped and string literals
+    * emptied, line breaks kept so that line numbers still match */
+  private def codeOf(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def skipTo(end: String, keep: String => String): Unit = {
+      val j = src.indexOf(end, i)
+      val e = if (j < 0) src.length else j + end.length
+      out ++= keep(src.substring(i, e))
+      i = e
+    }
+    val breaks = (s: String) => s.filter(_ == '\n')
+    while (i < src.length) {
+      if (src.startsWith("//", i)) skipTo("\n", breaks)
+      else if (src.startsWith("/*", i)) skipTo("*/", breaks)
+      else if (src.startsWith("\"\"\"", i)) {
+        i += 3
+        skipTo("\"\"\"", s => "\"\"\"" + breaks(s) + "\"\"\"")
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        out ++= "\"\""
+        i = j + 1
+      } else if (src(i) == '\'' && src.startsWith("'", i + 2)) {
+        i += 3 // a character literal such as '"'
+      } else if (src.startsWith("'\\", i) && src.startsWith("'", i + 3)) {
+        i += 4 // an escaped one such as '\"'
+      } else {
+        out += src(i)
+        i += 1
+      }
+    }
+    out.toString
+  }
+
+  test("LocalStrategy.cached is the only cache in src/main") {
+    val root = Paths.get("src/main/scala")
+    val call = raw"\.(cache|persist|unpersist)\b".r
+    val sites = Files.walk(root).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        f.getFileName.toString != "LocalStrategy.scala")
+      .flatMap { f =>
+        codeOf(Files.readString(f)).split("\n", -1).iterator.zipWithIndex
+          .collect { case (line, n) if call.findFirstIn(line).nonEmpty =>
+            s"${root.relativize(f)}:${n + 1}: ${line.trim}" }
+      }.toList
+    sites shouldBe empty
+    // the lint sees through comments and strings, not past code
+    codeOf("x.cache() // y.persist()\n/* z.unpersist() */ \"a.cache\"")
+      .split("\n").map(l => call.findAllIn(l).size).toSeq shouldBe Seq(1, 0)
+    call.findFirstIn(codeOf("x.localCheckpoint(eager = true)")) shouldBe None
   }
 }

@@ -22,7 +22,8 @@ object TestSpark {
 /** Every suite shares [[TestSpark.spark]], so each one hands the
   * session on as it found it: the SQL conf is put back to its state
   * before the suite (keys the suite set are unset, changed values
-  * restored) and all cached data is dropped. */
+  * restored) and the caches its own tests made are dropped. Library
+  * calls leave none (LocalStrategySpec checks that). */
 abstract class SparkSpecBase extends AnyFunSuite with Matchers
     with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark

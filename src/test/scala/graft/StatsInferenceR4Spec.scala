@@ -48,6 +48,16 @@ class StatsInferenceR4Spec extends SparkSpecBase {
   }
 
   test("vif3: independent columns ~1, collinear column explodes") {
+    // no interpreted fallback: a generated method that Janino cannot
+    // compile (one over 64 KB) fails the test instead of running slow
+    val fallback = "spark.sql.codegen.fallback"
+    val old = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try vif3Cases()
+    finally old.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
+  }
+
+  private def vif3Cases(): Unit = {
     // x1, x2 constructed orthogonal-ish via deterministic residues
     val rows = (0 until 400).map { i =>
       val x1 = (i * 37) % 101L

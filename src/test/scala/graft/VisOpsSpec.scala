@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import graft.vis.VisOps
 
 /** Text-vis parity (reference src/vis/ascii, src/vis/direct
   * sparkline): plot tables with exact integer rendering math. */
-class VisOpsSpec extends SparkSpecBase {
+class VisOpsSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("histogram bins, edges, and integer-scaled bars") {
@@ -19,6 +21,20 @@ class VisOpsSpec extends SparkSpecBase {
     h.map(_.getAs[Double]("hi_edge")).toSeq shouldBe Seq(5.0, 10.0)
     // bars: 6*6/6=6 hashes, 4*6/6=4 hashes (integer division)
     h.map(_.getAs[String]("bar")).toSeq shouldBe Seq("######", "####")
+  }
+
+  test("histogram reads its uncached bin aggregate through one shuffle") {
+    // the rule for a table the returned plan reads twice: no cache,
+    // Spark reuses the aggregate's exchange (AQE on, the session
+    // default)
+    spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
+    val h = VisOps.histogram(spark.range(0, 1000).select(
+      (col("id") % 97).cast("double").as("v")), "v", 0.0, 100.0, 10)
+    h.agg(sum("cnt")).head().getLong(0) shouldBe 1000L
+    h.collect().length shouldBe 10
+    collect(h.queryExecution.executedPlan) {
+      case r: ReusedExchangeExec => r
+    } should not be empty
   }
 
   test("histogram drops out-of-range and null values") {
