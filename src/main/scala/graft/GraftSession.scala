@@ -19,7 +19,12 @@ import org.apache.spark.sql.SparkSession
   *  - a generated-class cache large enough for a whole workload's
   *    plans (Spark's default of 100 entries evicts classes that later
   *    queries of the same shape compile again; see SCALE.md). It is
-  *    JVM-wide and fixed by the first session that compiles code.
+  *    JVM-wide and fixed by the first session that compiles code;
+  *  - whole-stage classes named without their codegen stage id. AQE
+  *    numbers a query's stages in the order they are planned, which
+  *    follows the order earlier stages finish, so with the id in the
+  *    name one plan run twice compiles its stages again under new
+  *    names (CompileCountSpec).
   */
 object GraftSession {
 
@@ -34,6 +39,7 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // BYTES-AWARE scan-parallelism floor (guide §6): a table that
       // fits in one <128 MB parquet file arrives as ONE scan split,
       // so every map-heavy plan over it runs on one core regardless

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.LocalStrategy
+import graft.stats.PrefixSum
 import graft.functions.TextFunctions
 
 /** Training-data pipeline operators beyond dedup/similarity: exact
@@ -647,50 +647,21 @@ object PipelineOps {
     * corpus by (score desc, tiebreak id), take documents until the
     * running token total reaches `budget` (a document is kept iff its
     * first token starts inside the budget — the concat-and-chunk
-    * boundary rule). The global cumulative sum is computed by the
-    * range-bucket two-pass: approx-quantile score boundaries split
-    * the corpus into `nBuckets` ranges (equal scores always share a
-    * bucket, so the global order is preserved), per-bucket token
-    * totals (≤ nBuckets rows) collect to literal prefix offsets, and
-    * each bucket then runs an independent partitioned window — the
-    * documented scale pattern behind Mann-Whitney ranks. Returns the
-    * kept rows + (start_tok, n_tokens). */
+    * boundary rule). The global running token total is
+    * [[graft.stats.PrefixSum.before]] in descending score order:
+    * score ranges from approximate quantile bounds (equal scores
+    * always share a range), per-range token totals as driver-side
+    * offsets, and a window within each range — the scale pattern
+    * behind the Mann-Whitney ranks. Returns the kept rows +
+    * (start_tok, n_tokens). */
   def takeByBudget(docs: DataFrame, scoreCol: String, tokenCol: String,
-      idCol: String, budget: Long, nBuckets: Int = 32): DataFrame = {
+      idCol: String, budget: Long): DataFrame = {
     val base = docs
       .filter(col(scoreCol).isNotNull && col(tokenCol).isNotNull)
       .withColumn("__tok__", col(tokenCol).cast("long"))
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    // the quantile action and the totals collect read one cached
-    // base; the returned plan reads it uncached
-    val (bucket, totals) = LocalStrategy.cached(base) { base =>
-      val bounds = base.select(col(scoreCol).cast("double").as("__s__"))
-        .stat.approxQuantile("__s__", probs, 0.001).distinct.sorted
-      // bucket 0 = highest scores (no boundary ≥ score); equal scores
-      // always share a bucket, so bucket-ascending = score-descending
-      val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-        acc + when(col(scoreCol).cast("double") <= lit(b), 1).otherwise(0)
-      }
-      (bucket, base.withColumn("__bkt__", bucket).groupBy("__bkt__")
-        .agg(sum(col("__tok__")).as("__tot__"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
-    }
-    val withB = base.withColumn("__bkt__", bucket)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (b, t)) =>
-      (b, acc + t)
-    }.init.map { case (_, off) => off }
-    val offExpr = totals.map(_._1).zip(offsets)
-      .foldLeft(lit(0L)) { case (acc, (b, off)) =>
-        when(col("__bkt__") === b, off).otherwise(acc)
-      }
-    val w = Window.partitionBy("__bkt__")
-      .orderBy(col(scoreCol).desc, col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withB
-      .withColumn("start_tok",
-        offExpr + sum(col("__tok__")).over(w) - col("__tok__"))
+    PrefixSum.before(base, scoreCol, col("__tok__"), "start_tok",
+        descending = true, tieBreak = Seq(col(idCol)))
       .filter(col("start_tok") < budget)
-      .drop("__bkt__")
       .withColumnRenamed("__tok__", "n_tokens")
   }
 

@@ -17,6 +17,10 @@ import org.apache.spark.sql.functions._
   */
 object PandasOps {
 
+  // outside RichDataFrame: a value class cannot hold the lambda
+  private def boundsBelow(v: Column, bounds: Array[Double]): Column =
+    size(filter(typedLit(bounds), b => v > b))
+
   implicit class RichDataFrame(val df: DataFrame) extends AnyVal {
 
     /** String-predicate filter; replaces the reference's 2.5k-LoC
@@ -444,15 +448,15 @@ object PandasOps {
     /** Scalable qcut: bucket by approximate quantile bounds
       * (GK sketch, driver gets q-1 doubles, rows never move) —
       * the 100 TB path; bin populations are approximately equal
-      * rather than exactly equal. */
+      * rather than exactly equal. A row's bin is the number of bounds
+      * below it; the bounds enter the plan as one array literal, so
+      * the generated code does not change with the data. */
     def qcutApprox(valueCol: String, q: Int,
         relErr: Double = 0.001): DataFrame = {
       val bounds = df.stat.approxQuantile(valueCol,
         (1 until q).map(_.toDouble / q).toArray, relErr)
       val v = col(valueCol)
-      val bin = bounds.zipWithIndex.foldRight(lit(q - 1): Column) {
-        case ((b, i), acc) => when(v <= b, lit(i)).otherwise(acc)
-      }
+      val bin = boundsBelow(v, bounds)
       // null/NaN stays null (pandas qcut), not the top bucket
       df.withColumn(s"${valueCol}_qbin",
         when(v.isNull || isnan(v.cast("double")), lit(null))

@@ -350,7 +350,8 @@ object QueriesPipeline {
         .select("doc_id", "lang", "source")),
 
     // exact global token-budget cut ordered by (n_chars desc, id) —
-    // range-bucketed two-pass cumsum, no global window
+    // the running token total is PrefixSum.before (score ranges, their
+    // totals as offsets, a window per range), no global window
     "q133_budget_take" -> ((s, d) =>
       PipelineOps.takeByBudget(
         t(s, d, "documents").withColumn("tokcnt",

@@ -1558,62 +1558,30 @@ object StatsOps {
             (col("varx") * col("vary"))), 6).as("r2")): _*)
   }
 
+  /** Strictly-below cumulative counts per distinct value, exact and
+    * without a global window ([[PrefixSum.before]]): the core of
+    * [[distinctValueRanks]], the ECDF tests and the order-statistic
+    * sums. Input: counts(valueCol numeric, cntCol), one row per
+    * distinct value. Output: valueCol, cntCol, __below__. */
+  def distinctValueCumCounts(counts0: DataFrame, valueCol: String,
+      cntCol: String): DataFrame =
+    PrefixSum.before(counts0, valueCol, col(cntCol), "__below__")
+      .select(col(valueCol), col(cntCol), col("__below__"))
+
   /** Average ranks of the distinct-value table, scale-safe.
     *
     * avg_rank(v) = #rows<v + 1 + (ties(v)−1)/2 needs a cumulative sum
     * over per-value counts in value order — naively a GLOBAL window
     * (single partition, O(distinct) on one executor; fine for bounded
     * domains, a scale-killer for continuous doubles where distinct ≈
-    * rows). Two-pass range-partitioned form instead: bucket values by
-    * approximate quantiles, compute per-bucket totals (≤ nBuckets
-    * rows, finalized driver-side into literal offsets), then cumsum
-    * WITHIN each bucket via a partitioned window. Ranks are exact
-    * regardless of where the approximate boundaries fall — buckets
-    * only set the parallelism.
+    * rows). [[distinctValueCumCounts]] gives the exact #rows<v from
+    * range-partitioned windows instead.
     *
-    * Input: counts(valueCol numeric, cntCol). Output: valueCol, rank.
+    * Input: counts(valueCol numeric, cntCol). Output: valueCol, __r__.
     */
-  /** Strictly-below cumulative counts per distinct value — the shared
-    * range-bucketed core of [[distinctValueRanks]] and the order-
-    * statistic sums in Anderson-Darling. Output: valueCol, cntCol,
-    * __below__. */
-  def distinctValueCumCounts(counts0: DataFrame, valueCol: String,
-      cntCol: String, nBuckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets).toArray
-    // the quantile action and the totals collect read one cached
-    // counts table; the returned plan reads counts0 uncached
-    val (bucket, totals) = LocalStrategy.cached(counts0) { counts =>
-      val bounds = counts.na.drop(Seq(valueCol))
-        .select(col(valueCol).cast("double").as("__v__"))
-        .stat.approxQuantile("__v__", probs, 0.001).distinct.sorted
-      val bucket = bounds.foldLeft(lit(0)) { (acc, b) =>
-        acc + when(col(valueCol).cast("double") > lit(b), 1).otherwise(0)
-      }
-      // per-bucket totals: ≤ nBuckets rows — driver-side prefix sums
-      // become literal offsets (documented cold-path finalization)
-      (bucket, counts.withColumn("__bkt__", bucket).groupBy("__bkt__")
-        .agg(sum(col(cntCol)).as("__tot__"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1))
-    }
-    val withB = counts0.withColumn("__bkt__", bucket)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (b, t)) =>
-      (b, acc + t)
-    }.init.map { case (_, off) => off }
-    val offExpr = totals.map(_._1).zip(offsets)
-      .foldLeft(lit(0L)) { case (acc, (b, off)) =>
-        when(col("__bkt__") === b, off).otherwise(acc)
-      }
-    val ww = Window.partitionBy("__bkt__").orderBy(col(valueCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    withB.withColumn("__below__",
-        offExpr + coalesce(sum(col(cntCol)).over(ww), lit(0L)))
-      .select(col(valueCol), col(cntCol), col("__below__"))
-  }
-
   def distinctValueRanks(counts0: DataFrame, valueCol: String,
-      cntCol: String, nBuckets: Int = 32): DataFrame =
-    distinctValueCumCounts(counts0, valueCol, cntCol, nBuckets)
+      cntCol: String): DataFrame =
+    distinctValueCumCounts(counts0, valueCol, cntCol)
       .withColumn("__r__",
         col("__below__") + 1 + (col(cntCol) - 1) / lit(2.0))
       .select(col(valueCol), col("__r__"))
@@ -2266,20 +2234,15 @@ object StatsOps {
     * first, matching corrMatrix's documented semantics.
     *
     * Scale/latency design: ALL columns' distinct-value tables are
-    * built in ONE stacked shuffle (explode to (cid, v) then
-    * groupBy) instead of one groupBy per column, and the rank
-    * cumsums are range-parallelized with uniform integer buckets
-    * from a single tiny (cid → min, max) collect instead of one
-    * approxQuantile action per column — 2 small driver round-trips
-    * total, independent of column count. Inputs are expected on the
-    * op's documented integer domains (scaled cents / binned dollars;
-    * span · 64 must fit a Long), which both keeps the rank maps
-    * compact and makes every rank arithmetic exact. Ranks are exact
-    * wherever the bucket boundaries fall — value skew can only
-    * unbalance parallelism, never results. */
-  def corrMatrixSpearman(df0: DataFrame, cols: Seq[String],
-      nBuckets: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    * built in ONE stacked shuffle (explode to (cid, v) then groupBy)
+    * instead of one groupBy per column, and one keyed
+    * [[PrefixSum.before]] gives every column's rank cumsums: its
+    * per-column quantile bounds and bucket offsets come from 2 small
+    * driver round-trips in total, independent of column count.
+    * Inputs are expected on the op's documented integer domains
+    * (scaled cents / binned dollars), which both keeps the rank maps
+    * compact and makes every rank arithmetic exact. */
+  def corrMatrixSpearman(df0: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "corrMatrixSpearman needs ≥ 2 columns")
     val df = df0.na.drop(cols)
     val stacked = df
@@ -2288,40 +2251,9 @@ object StatsOps {
         .as("s"))
       .select(col("s.cid").as("cid"), col("s.v").as("v"))
       .groupBy("cid", "v").agg(count(lit(1)).as("c"))
-    val (bkt, totals) = LocalStrategy.cached(stacked) { stacked =>
-      val mm = stacked.groupBy("cid")
-        .agg(min("v").as("mn"), max("v").as("mx")).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val bkt = cols.foldLeft(lit(0)) { (acc, cName) =>
-        val (mn, mx) = mm(cName)
-        val width = mx - mn + 1
-        when(col("cid") === cName,
-          expr(s"CAST(((v - ${mn}L) * $nBuckets) DIV ${width}L AS INT)"))
-          .otherwise(acc)
-      }
-      // per-(column, bucket) totals: ≤ cols·nBuckets rows — prefix
-      // sums finalize driver-side into a broadcast offset table
-      (bkt, stacked.withColumn("__bkt__", bkt).groupBy("cid", "__bkt__")
-        .agg(sum("c").as("t")).collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-        .groupBy(_._1))
-    }
-    val withB = stacked.withColumn("__bkt__", bkt)
-    val offRows = totals.toSeq.flatMap { case (cid, rows) =>
-      val sorted = rows.sortBy(_._2)
-      sorted.zip(sorted.scanLeft(0L)(_ + _._3)).map {
-        case ((_, b, _), off) => (cid, b, off)
-      }
-    }
-    val offDf = df.sparkSession.createDataFrame(offRows)
-      .toDF("cid", "__bkt__", "__off__")
-    val w = Window.partitionBy("cid", "__bkt__").orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = withB.join(broadcast(offDf), Seq("cid", "__bkt__"))
-      .withColumn("__below__",
-        col("__off__") + coalesce(sum(col("c")).over(w), lit(0L)))
-      .withColumn("__rk2__",
-        col("__below__") * 2 + col("c") + 1)
+    val ranked = PrefixSum.before(stacked, "v", col("c"), "__below__",
+        key = Some("cid"))
+      .withColumn("__rk2__", col("__below__") * 2 + col("c") + 1)
     val joined = cols.foldLeft(df) { (acc, cName) =>
       acc.join(broadcast(ranked.filter(col("cid") === cName)
           .select(col("v").as(s"__v_$cName"),

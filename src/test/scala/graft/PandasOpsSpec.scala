@@ -229,6 +229,85 @@ class PandasOpsSpec extends SparkSpecBase {
       c.toDouble shouldBe (n.toDouble / q) +- (2 * relErr * n + q))
   }
 
+  test("qcutApprox bins equal the first bound at or above each value, " +
+      "null and NaN staying null") {
+    // the bound chain qcutApprox replaced, rebuilt from the same bounds
+    val vals: Seq[Option[Double]] = (1 to 200).map(i => Some((i % 50) / 2.0)) ++
+      Seq(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+        Some(Double.NegativeInfinity), Some(-0.0), Some(0.0))
+    val df = vals.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+    val q = 5
+    val bounds = df.stat.approxQuantile("v",
+      (1 until q).map(_.toDouble / q).toArray, 0.001)
+    val chain = bounds.zipWithIndex.foldRight(lit(q - 1)) {
+      case ((b, i), acc) => when($"v" <= b, lit(i)).otherwise(acc)
+    }
+    val expected = df.select($"id", when($"v".isNull || isnan($"v"),
+        lit(null)).otherwise(chain).as("b"))
+      .as[(Int, Option[Int])].collect().toMap
+    val got = df.qcutApprox("v", q).select("id", "v_qbin")
+      .as[(Int, Option[Int])].collect().toMap
+    got shouldBe expected
+    got(200) shouldBe None
+    got(201) shouldBe None
+    got(202) shouldBe Some(q - 1)
+    got(203) shouldBe Some(0)
+  }
+
+  test("pivotTable: index × pivot-value grid, with and without values") {
+    val df = Seq(("a", "x", 1.0), ("a", "x", 3.0), ("b", "x", 5.0),
+      ("a", "y", 4.0)).toDF("k", "p", "v")
+    val all = df.pivotTable(Seq("k"), "p", sum($"v")).orderBy("k")
+    all.columns.toSeq shouldBe Seq("k", "x", "y")
+    rows(all) shouldBe Seq(Seq("a", 4.0, 4.0), Seq("b", 5.0, null))
+    rows(df.pivotTable(Seq("k"), "p", sum($"v"), values = Seq("y"))
+      .orderBy("k")) shouldBe Seq(Seq("a", 4.0), Seq("b", null))
+  }
+
+  test("crosstab2 counts each (a, b) pair, null where a pair is absent") {
+    val df = Seq((1, "u"), (1, "u"), (1, "v"), (2, "v")).toDF("a", "b")
+    val out = df.crosstab2("a", "b").orderBy("a")
+    out.columns.toSeq shouldBe Seq("a", "u", "v")
+    rows(out) shouldBe Seq(Seq(1, 2L, 1L), Seq(2, null, 1L))
+  }
+
+  test("shiftCol, diffCol and pctChange look one row back per partition") {
+    val df = Seq(("a", 1, 10.0), ("a", 2, 20.0), ("a", 3, 35.0),
+      ("b", 1, 5.0), ("b", 2, 4.0)).toDF("g", "ord", "v")
+    def col1(d: org.apache.spark.sql.DataFrame, c: String) =
+      d.orderBy("g", "ord").select(c).as[Option[Double]].collect().toSeq
+    col1(df.shiftCol("v", 1, "ord", Seq("g")), "v_shift") shouldBe
+      Seq(None, Some(10.0), Some(20.0), None, Some(5.0))
+    col1(df.shiftCol("v", 2, "ord", Seq("g")), "v_shift") shouldBe
+      Seq(None, None, Some(10.0), None, None)
+    col1(df.diffCol("v", "ord", Seq("g")), "v_diff") shouldBe
+      Seq(None, Some(10.0), Some(15.0), None, Some(-1.0))
+    val pct = col1(df.pctChange("v", "ord", Seq("g")), "v_pct_change")
+    pct.map(_.isEmpty) shouldBe Seq(true, false, false, true, false)
+    pct(1).get shouldBe 1.0
+    pct(2).get shouldBe 0.75
+    pct(4).get shouldBe -0.2 +- 1e-12
+    // no partition columns: one series over the whole frame
+    df.filter($"g" === "a").diffCol("v", "ord").orderBy("ord")
+      .select("v_diff").as[Option[Double]].collect().toSeq shouldBe
+      Seq(None, Some(10.0), Some(15.0))
+  }
+
+  test("cummin is the running minimum per partition") {
+    val df = Seq(("a", 1, 3), ("a", 2, 1), ("a", 3, 2), ("b", 1, 5),
+      ("b", 2, 7)).toDF("g", "ord", "v")
+    df.cummin("v", "ord", Seq("g")).orderBy("g", "ord")
+      .select("v_cummin").as[Int].collect().toSeq shouldBe
+      Seq(3, 1, 1, 5, 5)
+  }
+
+  test("applyNumeric replaces each named column by f of it") {
+    val df = Seq((1, 2.5, "s"), (-3, 0.5, "t")).toDF("x", "y", "z")
+    val out = df.applyNumeric(c => c * 2, Seq("x", "y"))
+    out.columns.toSeq shouldBe Seq("x", "y", "z")
+    rows(out.orderBy("z")) shouldBe Seq(Seq(2, 5.0, "s"), Seq(-6, 1.0, "t"))
+  }
+
   test("nlargest is deterministic with tiebreak") {
     val df = Seq((1, 5.0), (2, 5.0), (3, 1.0)).toDF("id", "v")
     df.nlargest(2, "v", "id").select("id").as[Int].collect() shouldBe

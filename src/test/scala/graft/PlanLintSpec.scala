@@ -102,8 +102,9 @@ class PlanLintSpec extends SparkSpecBase {
         _: org.apache.spark.sql.execution.TakeOrderedAndProjectExec =>
       true
     // a cached intermediate is a physical-plan LEAF — descend into
-    // the plan that produced it (distinctValueCumCounts caches its
-    // aggregated input, which is exactly the bounded shape)
+    // the plan that produced it (a table that a caller or an earlier
+    // suite cached; no library call caches a table its returned plan
+    // reads)
     case m: InMemoryTableScanExec => boundedBelow(m.relation.cachedPlan)
     // a cache entry materialized while AQE was on (e.g. by an earlier
     // suite planning the same gate) wraps its plan in an adaptive

@@ -101,10 +101,17 @@ object PropertiesSpec extends Properties("graft") {
             org.apache.spark.sql.functions.lit(1)).as("c"))
         val ranks = graft.stats.StatsOps
           .distinctValueRanks(counts, "v", "c")
-        val total = ranks.join(counts, "v")
-          .select(($"__r__" * $"c").as("t")).as[Double].collect().sum
+        val got = ranks.join(counts, "v")
+          .select($"v", $"__r__", $"c").as[(Long, Double, Long)].collect()
+        val total = got.map { case (_, r, c) => r * c }.sum
         val n = vals.size.toDouble
-        math.abs(total - n * (n + 1) / 2) < 1e-6
+        // driver-side midrank: #values below v, plus (ties + 1) / 2
+        val midrank = vals.distinct.map { v =>
+          v -> (vals.count(_ < v) + (vals.count(_ == v) + 1) / 2.0)
+        }.toMap
+        math.abs(total - n * (n + 1) / 2) < 1e-6 &&
+          got.length == midrank.size &&
+          got.forall { case (v, r, _) => midrank.get(v).contains(r) }
       }
     }
 
